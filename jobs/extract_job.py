@@ -39,6 +39,7 @@ def main() -> None:
     from pdf_parse_bench_spark.operators.resume import (
         extract_with_lineage,
         lineage_of,
+        ok_spans,
     )
 
     par = spark.sparkContext.defaultParallelism * 2
@@ -58,12 +59,14 @@ def main() -> None:
         t0 = time.time()
         bp = _collect_boilerplate(md)
         if args.output:
-            res = extract_with_lineage(md, boilerplate=bp)
-            res.where(F.col("status") == "ok").select(
-                "doc_id", "offset", "kind", "text", "media_ref"
-            ).write.mode("overwrite").parquet(args.output)
-            if args.checkpoint:
-                lineage_of(res).write.mode("overwrite").parquet(args.checkpoint)
+            res = extract_with_lineage(md, boilerplate=bp).cache()
+            try:
+                ok_spans(res).write.mode("overwrite").parquet(args.output)
+                if args.checkpoint:
+                    lineage_of(res).write.mode("overwrite").parquet(
+                        args.checkpoint)
+            finally:
+                res.unpersist()
         else:
             extract_spans(md, boilerplate=bp, rebalance=False).count()
         best = min(best, time.time() - t0)

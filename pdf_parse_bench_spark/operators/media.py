@@ -12,13 +12,12 @@ would slot into the same batch shape behind the format sniff.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.kernels.png import decode_png
+from pdf_parse_bench_spark.operators.kernel import kernel_op
 
 _REF_RE = re.compile(r"page_(\d+)_(\d+)_(\d+)_(\d+)\.png")
 
@@ -41,8 +40,7 @@ def media_features(spans: DataFrame) -> DataFrame:
     )
 
 
-_DECODE_COLS = ["doc_id", "offset", "media_ref", "width", "height",
-                "channels", "n_bytes", "mean_intensity", "status"]
+_MEDIA_KEYS = ["doc_id", "offset", "media_ref"]
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
@@ -60,8 +58,13 @@ def error_placeholder() -> np.ndarray:
     return img
 
 
-def decode_media(media_df: DataFrame, rebalance: bool = True) -> DataFrame:
-    """mapInPandas decode over (doc_id, offset, media_ref, media_bytes),
+def _half_up(x: float, scale: float = 1e6) -> float:
+    """Round half-up at 1/scale (6 dp by default) — engine-portable."""
+    return float(np.floor(x * scale + 0.5)) / scale
+
+
+def decode_media(media_df: DataFrame) -> DataFrame:
+    """Per-row decode over (doc_id, offset, media_ref, media_bytes),
     format-sniffed by magic bytes. Input is size-rebalanced first
     (operators/skew.rebalance_by_size): a media table is written in few
     large files, so without the explicit repartition the decode stage runs
@@ -84,86 +87,55 @@ def decode_media(media_df: DataFrame, rebalance: bool = True) -> DataFrame:
         is_jpeg, jpeg_decode, jpeg_dims)
     from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    if rebalance:
-        media_df = rebalance_by_size(
-            media_df, size_col=F.length("media_bytes"))
+    media_df = rebalance_by_size(media_df, size_col=F.length("media_bytes"))
+    ph_mean = _half_up(float(error_placeholder().mean()) / 255.0)
 
-    ph = error_placeholder()
-    ph_mean = float(np.floor(float(ph.mean()) / 255.0 * 1e6 + 0.5)) / 1e6
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _DECODE_COLS}
-            for doc_id, off, ref, b in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-                pdf["media_bytes"],
-            ):
-                out["doc_id"].append(doc_id)
-                out["offset"].append(off)
-                out["media_ref"].append(ref)
-                raw = bytes(b) if b is not None else b""
-                out["n_bytes"].append(len(raw))
+    def decode(b):
+        raw = bytes(b) if b is not None else b""
+        try:
+            if raw.startswith(_PNG_MAGIC):
+                img = decode_png(raw)
+                mean = float(img.mean()) / 255.0
+            elif is_jpeg(raw):
                 try:
-                    if raw.startswith(_PNG_MAGIC):
-                        img = decode_png(raw)
-                        h, w = img.shape[:2]
-                        ch = 1 if img.ndim == 2 else img.shape[2]
-                        mean = float(img.mean()) / 255.0
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["channels"].append(ch)
-                        out["mean_intensity"].append(
-                            float(np.floor(mean * 1e6 + 0.5)) / 1e6)
-                        out["status"].append("ok")
-                    elif is_jpeg(raw):
-                        try:
-                            img = jpeg_decode(raw)
-                            h, w = img.shape[:2]
-                            ch = 1 if img.ndim == 2 else img.shape[2]
-                            mean = float(img.astype(np.float64).mean()) / 255.0
-                            out["width"].append(w)
-                            out["height"].append(h)
-                            out["channels"].append(ch)
-                            out["mean_intensity"].append(
-                                float(np.floor(mean * 1e6 + 0.5)) / 1e6)
-                            out["status"].append("ok")
-                        except ValueError:
-                            # outside the decodable profile (header-only
-                            # stream, arithmetic coding, exotic sampling):
-                            # honest metadata from the SOFn header
-                            w, h, ch = jpeg_dims(raw)
-                            out["width"].append(w)
-                            out["height"].append(h)
-                            out["channels"].append(ch)
-                            out["mean_intensity"].append(None)
-                            out["status"].append("metadata_only")
-                    else:
-                        raise ValueError("unknown media format")
-                except Exception:
-                    out["width"].append(PLACEHOLDER_SIDE)
-                    out["height"].append(PLACEHOLDER_SIDE)
-                    out["channels"].append(1)
-                    out["mean_intensity"].append(ph_mean)
-                    out["status"].append("decode_error")
-            yield pd.DataFrame(out)
+                    img = jpeg_decode(raw)
+                    mean = float(img.astype(np.float64).mean()) / 255.0
+                except ValueError:
+                    # outside the decodable profile (header-only
+                    # stream, arithmetic coding, exotic sampling):
+                    # honest metadata from the SOFn header
+                    w, h, ch = jpeg_dims(raw)
+                    return [{"width": w, "height": h, "channels": ch,
+                             "n_bytes": len(raw), "mean_intensity": None,
+                             "status": "metadata_only"}]
+            else:
+                raise ValueError("unknown media format")
+            h, w = img.shape[:2]
+            return [{"width": w, "height": h,
+                     "channels": 1 if img.ndim == 2 else img.shape[2],
+                     "n_bytes": len(raw), "mean_intensity": _half_up(mean),
+                     "status": "ok"}]
+        except Exception:
+            return [{"width": PLACEHOLDER_SIDE, "height": PLACEHOLDER_SIDE,
+                     "channels": 1, "n_bytes": len(raw),
+                     "mean_intensity": ph_mean, "status": "decode_error"}]
 
-    return media_df.mapInPandas(
-        run,
-        schema=("doc_id string, offset int, media_ref string, width int, "
-                "height int, channels int, n_bytes long, "
-                "mean_intensity double, status string"),
-    )
+    return kernel_op(
+        media_df, decode,
+        "doc_id string, offset int, media_ref string, width int, "
+        "height int, channels int, n_bytes long, mean_intensity double, "
+        "status string",
+        keys=_MEDIA_KEYS, args=["media_bytes"])
 
 
 def render_formula_artifacts(formulas: DataFrame,
-                             rebalance: bool = True,
                              include_png: bool = True) -> DataFrame:
     """S7 render sink: (doc_id, offset, formula) → one PNG artifact row per
     formula via the deterministic glyph-box renderer (kernels/render.py),
     with the reference's error-image fallback contract
     (formula_renderer.py:119-164): an invalid formula emits the
     deterministic placeholder artifact with status='render_error' — never
-    a null row, never a task failure (X4). mapInPandas in Arrow batches;
+    a null row, never a task failure (X4). kernel_op in Arrow batches;
     png_bytes ride along for the sink, metadata is the oracle surface
     (closed-form in the formula text, so DuckDB recomputes it exactly).
     include_png=False skips the zlib PNG encode for metadata-only
@@ -173,48 +145,31 @@ def render_formula_artifacts(formulas: DataFrame,
     from pdf_parse_bench_spark.kernels.render import render_formula
     from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    if rebalance:  # same UDF-stage skew story as decode_media
-        formulas = rebalance_by_size(formulas, size_col=F.length("formula"))
+    # same UDF-stage skew story as decode_media
+    formulas = rebalance_by_size(formulas, size_col=F.length("formula"))
 
     ph = error_placeholder()
-    ph_png = encode_png(ph) if include_png else None
-    ph_mean = float(np.floor(float(ph.mean()) / 255.0 * 1e6 + 0.5)) / 1e6
+    placeholder = {
+        "width": ph.shape[1], "height": ph.shape[0],
+        "mean_intensity": _half_up(float(ph.mean()) / 255.0),
+        "status": "render_error",
+        "png_bytes": encode_png(ph) if include_png else None}
 
-    cols = ["doc_id", "offset", "media_ref", "width", "height",
-            "mean_intensity", "status", "png_bytes"]
+    def render(doc_id, off, formula):
+        ref = {"media_ref": f"formula_{doc_id}_{off}.png"}
+        img = render_formula(formula if formula is not None else "")
+        if img is None:
+            return [{**ref, **placeholder}]
+        return [{**ref, "width": img.shape[1], "height": img.shape[0],
+                 "mean_intensity": _half_up(float(img.mean()) / 255.0),
+                 "status": "ok",
+                 "png_bytes": encode_png(img) if include_png else None}]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, off, formula in zip(
-                    pdf["doc_id"], pdf["offset"], pdf["formula"]):
-                out["doc_id"].append(doc_id)
-                out["offset"].append(off)
-                out["media_ref"].append(f"formula_{doc_id}_{off}.png")
-                img = render_formula(formula if formula is not None else "")
-                if img is None:
-                    out["width"].append(ph.shape[1])
-                    out["height"].append(ph.shape[0])
-                    out["mean_intensity"].append(ph_mean)
-                    out["status"].append("render_error")
-                    out["png_bytes"].append(ph_png)
-                else:
-                    mean = float(img.mean()) / 255.0
-                    out["width"].append(img.shape[1])
-                    out["height"].append(img.shape[0])
-                    out["mean_intensity"].append(
-                        float(np.floor(mean * 1e6 + 0.5)) / 1e6)
-                    out["status"].append("ok")
-                    out["png_bytes"].append(
-                        encode_png(img) if include_png else None)
-            yield pd.DataFrame(out)
-
-    return formulas.mapInPandas(
-        run,
-        schema=("doc_id string, offset int, media_ref string, width int, "
-                "height int, mean_intensity double, status string, "
-                "png_bytes binary"),
-    )
+    return kernel_op(
+        formulas, render,
+        "doc_id string, offset int, media_ref string, width int, "
+        "height int, mean_intensity double, status string, png_bytes binary",
+        keys=["doc_id", "offset"], args=["doc_id", "offset", "formula"])
 
 
 # --- thumbnailing (the training-pipeline resize path) ----------------------
@@ -249,76 +204,53 @@ def shrink_pixels(img: np.ndarray, max_side: int = THUMB_SIDE) -> np.ndarray:
     return out if img.ndim == 3 else out[:, :, 0]
 
 
-def thumbnail_media(media_df: DataFrame, max_side: int = THUMB_SIDE,
-                    rebalance: bool = True) -> DataFrame:
+def thumbnail_media(media_df: DataFrame) -> DataFrame:
     """Thumbnail generation over the media table — the resize stage a
     training-data pipeline runs before a vision encoder, as a
-    size-rebalanced mapInPandas over Arrow batches (never per-row
+    size-rebalanced kernel_op over Arrow batches (never per-row
     Python). Decode via the real PNG/JPEG kernels, block-average shrink
-    per `shrink_pixels`, re-encode PNG; emits thumb dims, the thumb's
-    mean intensity (6 dp half-up) and the re-encoded byte count.
-    Undecodable payloads get the error-placeholder's thumbnail (status
-    'decode_error') — never a task failure (X4 isolation)."""
+    per `shrink_pixels` to THUMB_SIDE, re-encode PNG; emits thumb dims,
+    the thumb's mean intensity (6 dp half-up) and the re-encoded byte
+    count. Undecodable payloads get the error-placeholder's thumbnail
+    (status 'decode_error') — never a task failure (X4 isolation)."""
     from pdf_parse_bench_spark.kernels.jpeg import is_jpeg, jpeg_decode
     from pdf_parse_bench_spark.kernels.png import encode_png
     from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    if rebalance:
-        media_df = rebalance_by_size(
-            media_df, size_col=F.length("media_bytes"))
+    media_df = rebalance_by_size(media_df, size_col=F.length("media_bytes"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "offset", "media_ref", "thumb_w", "thumb_h",
-                "thumb_mean", "thumb_png_bytes", "status"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, off, ref, b in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-                pdf["media_bytes"],
-            ):
-                raw = bytes(b) if b is not None else b""
-                status = "ok"
-                try:
-                    if raw.startswith(_PNG_MAGIC):
-                        img = decode_png(raw)
-                    elif is_jpeg(raw):
-                        img = jpeg_decode(raw)
-                    else:
-                        raise ValueError("unknown media format")
-                except Exception:
-                    img = error_placeholder()
-                    status = "decode_error"
-                thumb = shrink_pixels(img, max_side)
-                th, tw = thumb.shape[:2]
-                mean = float(thumb.astype(np.float64).mean()) / 255.0
-                out["doc_id"].append(doc_id)
-                out["offset"].append(off)
-                out["media_ref"].append(ref)
-                out["thumb_w"].append(tw)
-                out["thumb_h"].append(th)
-                out["thumb_mean"].append(
-                    float(np.floor(mean * 1e6 + 0.5)) / 1e6)
-                out["thumb_png_bytes"].append(len(encode_png(thumb)))
-                out["status"].append(status)
-            yield pd.DataFrame(out)
+    def thumbnail(b):
+        raw = bytes(b) if b is not None else b""
+        status = "ok"
+        try:
+            if raw.startswith(_PNG_MAGIC):
+                img = decode_png(raw)
+            elif is_jpeg(raw):
+                img = jpeg_decode(raw)
+            else:
+                raise ValueError("unknown media format")
+        except Exception:
+            img = error_placeholder()
+            status = "decode_error"
+        thumb = shrink_pixels(img)
+        th, tw = thumb.shape[:2]
+        mean = float(thumb.astype(np.float64).mean()) / 255.0
+        return [{"thumb_w": tw, "thumb_h": th, "thumb_mean": _half_up(mean),
+                 "thumb_png_bytes": len(encode_png(thumb)),
+                 "status": status}]
 
-    return media_df.mapInPandas(
-        run,
-        schema=("doc_id string, offset int, media_ref string, "
-                "thumb_w int, thumb_h int, thumb_mean double, "
-                "thumb_png_bytes long, status string"),
-    )
+    return kernel_op(
+        media_df, thumbnail,
+        "doc_id string, offset int, media_ref string, thumb_w int, "
+        "thumb_h int, thumb_mean double, thumb_png_bytes long, status string",
+        keys=_MEDIA_KEYS, args=["media_bytes"])
 
 
 # --- audio metadata + PCM stats (the audio leg of the media model) ---------
 
-_AUDIO_COLS = ["doc_id", "media_ref", "channels", "sample_rate", "bits",
-               "n_samples", "duration_ms", "mean_abs", "peak", "status"]
-
-
-def audio_features(audio_df: DataFrame, rebalance: bool = True) -> DataFrame:
+def audio_features(audio_df: DataFrame) -> DataFrame:
     """WAV metadata + PCM-16 signal stats over (doc_id, media_ref,
-    media_bytes), as a size-rebalanced mapInPandas (audio payloads skew
+    media_bytes), as a size-rebalanced kernel_op (audio payloads skew
     exactly like oversized PDFs). Per row:
 
       - PCM-16 → channels/rate/bits/n_samples/duration_ms + mean absolute
@@ -331,56 +263,33 @@ def audio_features(audio_df: DataFrame, rebalance: bool = True) -> DataFrame:
     from pdf_parse_bench_spark.kernels.wav import parse_wav
     from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    if rebalance:
-        audio_df = rebalance_by_size(
-            audio_df, size_col=F.length("media_bytes"))
+    audio_df = rebalance_by_size(audio_df, size_col=F.length("media_bytes"))
+    meta_cols = ("channels", "sample_rate", "bits", "n_samples",
+                 "duration_ms")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in _AUDIO_COLS}
-            for doc_id, ref, b in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_bytes"],
-            ):
-                out["doc_id"].append(doc_id)
-                out["media_ref"].append(ref)
-                raw = bytes(b) if b is not None else b""
-                try:
-                    meta = parse_wav(raw)
-                    out["channels"].append(meta["channels"])
-                    out["sample_rate"].append(meta["sample_rate"])
-                    out["bits"].append(meta["bits"])
-                    out["n_samples"].append(meta["n_samples"])
-                    out["duration_ms"].append(meta["duration_ms"])
-                    s = meta["samples"]
-                    if s is not None and len(s):
-                        a = np.abs(s.astype(np.int64))
-                        mean_abs = float(a.sum()) / a.size
-                        out["mean_abs"].append(
-                            float(np.floor(mean_abs * 1e3 + 0.5)) / 1e3)
-                        out["peak"].append(int(a.max()))
-                        out["status"].append("ok")
-                    else:
-                        out["mean_abs"].append(None)
-                        out["peak"].append(None)
-                        out["status"].append("metadata_only")
-                except Exception:
-                    out["channels"].append(0)
-                    out["sample_rate"].append(0)
-                    out["bits"].append(0)
-                    out["n_samples"].append(0)
-                    out["duration_ms"].append(0)
-                    out["mean_abs"].append(None)
-                    out["peak"].append(None)
-                    out["status"].append("decode_error")
-            yield pd.DataFrame(out)
+    def features(b):
+        raw = bytes(b) if b is not None else b""
+        try:
+            meta = parse_wav(raw)
+            row = {c: meta[c] for c in meta_cols}
+            s = meta["samples"]
+            if s is not None and len(s):
+                a = np.abs(s.astype(np.int64))
+                mean_abs = float(a.sum()) / a.size
+                return [{**row, "mean_abs": _half_up(mean_abs, 1e3),
+                         "peak": int(a.max()), "status": "ok"}]
+            return [{**row, "mean_abs": None, "peak": None,
+                     "status": "metadata_only"}]
+        except Exception:
+            return [{**dict.fromkeys(meta_cols, 0), "mean_abs": None,
+                     "peak": None, "status": "decode_error"}]
 
-    return audio_df.mapInPandas(
-        run,
-        schema=("doc_id string, media_ref string, channels int, "
-                "sample_rate int, bits int, n_samples long, "
-                "duration_ms long, mean_abs double, peak int, "
-                "status string"),
-    )
+    return kernel_op(
+        audio_df, features,
+        "doc_id string, media_ref string, channels int, sample_rate int, "
+        "bits int, n_samples long, duration_ms long, mean_abs double, "
+        "peak int, status string",
+        keys=["doc_id", "media_ref"], args=["media_bytes"])
 
 
 # --- video frame sampling (the video leg of the media model) ---------------
@@ -388,56 +297,41 @@ def audio_features(audio_df: DataFrame, rebalance: bool = True) -> DataFrame:
 FRAME_STRIDE = 5  # sample every k-th frame
 
 
-def video_frames(video_df: DataFrame, stride: int = FRAME_STRIDE,
-                 rebalance: bool = True) -> DataFrame:
+def video_frames(video_df: DataFrame) -> DataFrame:
     """Frame-sampling over Y4M video payloads: one output row per sampled
-    frame (frame 0, stride, 2*stride, ...) with the frame's luma mean
-    (6 dp half-up) — the pre-embedding subsample a multimodal training
-    pipeline runs before a vision encoder. Size-rebalanced mapInPandas
-    (video rows are the heaviest payloads in the media table — exactly
-    the UDF-stage skew rebalance_by_size exists for). Corrupt or
+    frame (frame 0, FRAME_STRIDE, 2*FRAME_STRIDE, ...) with the frame's
+    luma mean (6 dp half-up) — the pre-embedding subsample a multimodal
+    training pipeline runs before a vision encoder. Size-rebalanced
+    kernel_op (video rows are the heaviest payloads in the media table —
+    exactly the UDF-stage skew rebalance_by_size exists for). Corrupt or
     non-Y4M payloads yield ONE frame_no=-1 row with status
     'decode_error' (X4: visible, never a task failure)."""
     from pdf_parse_bench_spark.kernels.y4m import parse_y4m
     from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    if rebalance:
-        video_df = rebalance_by_size(
-            video_df, size_col=F.length("media_bytes"))
+    video_df = rebalance_by_size(video_df, size_col=F.length("media_bytes"))
 
-    cols = ["doc_id", "media_ref", "frame_no", "width", "height",
-            "n_frames", "fps_num", "fps_den", "y_mean", "status"]
+    def frames(b):
+        raw = bytes(b) if b is not None else b""
+        try:
+            v = parse_y4m(raw)
+        except Exception:
+            return [{"frame_no": -1, "width": 0, "height": 0, "n_frames": 0,
+                     "fps_num": 0, "fps_den": 0, "y_mean": None,
+                     "status": "decode_error"}]
+        meta = {c: v[c] for c in ("width", "height", "n_frames", "fps_num",
+                                  "fps_den")}
+        rows = []
+        for fno in range(0, v["n_frames"], FRAME_STRIDE):
+            y = v["frames"][fno].astype(np.float64)
+            mean = float(y.sum()) / y.size / 255.0
+            rows.append({**meta, "frame_no": fno, "y_mean": _half_up(mean),
+                         "status": "ok"})
+        return rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in cols}
-
-            def emit(doc_id, ref, frame_no, w, h, nf, fn, fd, ym, st):
-                for c, v in zip(cols, (doc_id, ref, frame_no, w, h, nf,
-                                       fn, fd, ym, st)):
-                    out[c].append(v)
-
-            for doc_id, ref, b in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["media_bytes"],
-            ):
-                raw = bytes(b) if b is not None else b""
-                try:
-                    v = parse_y4m(raw)
-                except Exception:
-                    emit(doc_id, ref, -1, 0, 0, 0, 0, 0, None,
-                         "decode_error")
-                    continue
-                for fno in range(0, v["n_frames"], stride):
-                    y = v["frames"][fno].astype(np.float64)
-                    mean = float(y.sum()) / y.size / 255.0
-                    emit(doc_id, ref, fno, v["width"], v["height"],
-                         v["n_frames"], v["fps_num"], v["fps_den"],
-                         float(np.floor(mean * 1e6 + 0.5)) / 1e6, "ok")
-            yield pd.DataFrame(out)
-
-    return video_df.mapInPandas(
-        run,
-        schema=("doc_id string, media_ref string, frame_no int, "
-                "width int, height int, n_frames int, fps_num int, "
-                "fps_den int, y_mean double, status string"),
-    )
+    return kernel_op(
+        video_df, frames,
+        "doc_id string, media_ref string, frame_no int, width int, "
+        "height int, n_frames int, fps_num int, fps_den int, "
+        "y_mean double, status string",
+        keys=["doc_id", "media_ref"], args=["media_bytes"])

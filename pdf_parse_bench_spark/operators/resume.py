@@ -19,21 +19,31 @@ storage-partitioned and shuffle-free.
 from __future__ import annotations
 
 import os
-from typing import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark import TaskContext
 
-from pdf_parse_bench_spark import schemas
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
+from pdf_parse_bench_spark.operators.kernel import kernel_op
 
-_OUT_COLS = ["doc_id", "offset", "kind", "text", "media_ref",
-             "partition_id", "status", "error"]
-_OUT_SCHEMA = (
-    "doc_id string, offset int, kind string, text string, media_ref string, "
-    "partition_id int, status string, error string"
-)
+_SPAN_COLS = ["doc_id", "offset", "kind", "text", "media_ref"]
+_SENTINEL = {"offset": -1, "kind": "", "text": "", "media_ref": ""}
+
+
+def _lineage_rows(doc_id: str, md: str, boilerplate: frozenset[str],
+                  fail_docs: frozenset[str]) -> list[dict]:
+    """One doc's lineage rows: its spans tagged status='ok', or ONE
+    offset=-1 row — status='error' with repr(exc) when parsing raised, or
+    an ok sentinel for a zero-span doc (empty / all-boilerplate), so
+    lineage checkpoints it — otherwise pending() re-selects it forever
+    and resume never drains."""
+    try:
+        if doc_id in fail_docs:
+            raise RuntimeError("injected failure")
+        spans = parse_markdown(md, boilerplate)
+    except Exception as exc:  # X4: isolate, never abort
+        return [{**_SENTINEL, "status": "error", "error": repr(exc)}]
+    return ([{**s, "status": "ok", "error": None} for s in spans]
+            or [{**_SENTINEL, "status": "ok", "error": None}])
 
 
 def extract_with_lineage(
@@ -43,53 +53,25 @@ def extract_with_lineage(
 ) -> DataFrame:
     """Extraction that never aborts: one output row per span plus a
     status/partition column; failed docs emit a single error row.
-    `fail_docs` injects deterministic failures for resume tests."""
+    `fail_docs` injects deterministic failures for resume tests.
+    partition_id is read right after the map stage — no exchange in
+    between, so it is the task that ran the kernel."""
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
+    spans = kernel_op(
+        md_df, lambda doc_id, md: _lineage_rows(doc_id, md, *bp.value),
+        "doc_id string, offset int, kind string, text string, "
+        "media_ref string, status string, error string",
+        args=["doc_id", "markdown"])
+    return spans.select(*_SPAN_COLS,
+                        F.spark_partition_id().alias("partition_id"),
+                        "status", "error")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bset, fail = bp.value
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            out = {c: [] for c in _OUT_COLS}
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                try:
-                    if doc_id in fail:
-                        raise RuntimeError("injected failure")
-                    spans = parse_markdown(md, bset)
-                    for s in spans:
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(s["offset"])
-                        out["kind"].append(s["kind"])
-                        out["text"].append(s["text"])
-                        out["media_ref"].append(s["media_ref"])
-                        out["partition_id"].append(pid)
-                        out["status"].append("ok")
-                        out["error"].append(None)
-                    if not spans:
-                        # zero-span doc (empty / all-boilerplate): emit an
-                        # ok sentinel (offset=-1, excluded from span output)
-                        # so lineage checkpoints it — otherwise pending()
-                        # re-selects it forever and resume never drains.
-                        out["doc_id"].append(doc_id)
-                        out["offset"].append(-1)
-                        out["kind"].append("")
-                        out["text"].append("")
-                        out["media_ref"].append("")
-                        out["partition_id"].append(pid)
-                        out["status"].append("ok")
-                        out["error"].append(None)
-                except Exception as exc:  # X4: isolate, never abort
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(-1)
-                    out["kind"].append("")
-                    out["text"].append("")
-                    out["media_ref"].append("")
-                    out["partition_id"].append(pid)
-                    out["status"].append("error")
-                    out["error"].append(repr(exc))
-            yield pd.DataFrame(out)
 
-    return md_df.mapInPandas(run, schema=_OUT_SCHEMA)
+def ok_spans(result: DataFrame) -> DataFrame:
+    """The span rows of a lineage-annotated result: error rows and
+    zero-span sentinels (offset=-1) are lineage only, never output."""
+    return (result.where((F.col("status") == "ok") & (F.col("offset") >= 0))
+            .select(*_SPAN_COLS))
 
 
 def lineage_of(result: DataFrame, stage: str = "extract") -> DataFrame:
@@ -127,33 +109,20 @@ def lineage_summary(
     from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
-    md_df = spread_for_kernel(md_df.select("doc_id", "markdown"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bset, fail = bp.value
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        cols = ["doc_id", "stage", "partition_id", "status", "error",
-                "n_spans"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                try:
-                    if doc_id in fail:
-                        raise RuntimeError("injected failure")
-                    n, status, error = len(parse_markdown(md, bset)), "ok", None
-                except Exception as exc:  # X4: isolate, never abort
-                    n, status, error = 0, "error", repr(exc)
-                out["doc_id"].append(doc_id)
-                out["stage"].append(stage)
-                out["partition_id"].append(pid)
-                out["status"].append(status)
-                out["error"].append(error)
-                out["n_spans"].append(n)
-            yield pd.DataFrame(out)
+    def summary(doc_id, md):
+        rows = _lineage_rows(doc_id, md, *bp.value)
+        return [{"status": rows[0]["status"], "error": rows[0]["error"],
+                 "n_spans": sum(r["offset"] >= 0 for r in rows)}]
 
-    return md_df.mapInPandas(
-        run, schema="doc_id string, stage string, partition_id int, "
-                    "status string, error string, n_spans long")
+    docs = kernel_op(spread_for_kernel(md_df.select("doc_id", "markdown")),
+                     summary,
+                     "doc_id string, status string, error string, "
+                     "n_spans long",
+                     args=["doc_id", "markdown"])
+    return docs.select("doc_id", F.lit(stage).alias("stage"),
+                       F.spark_partition_id().alias("partition_id"),
+                       "status", "error", "n_spans")
 
 
 def pending(inputs: DataFrame, checkpoint_dir: str) -> DataFrame:
@@ -183,11 +152,7 @@ def run_resumable(
         return
     result = extract_with_lineage(todo, boilerplate, fail_docs).cache()
     try:
-        (
-            result.where((F.col("status") == "ok") & (F.col("offset") >= 0))
-            .select("doc_id", "offset", "kind", "text", "media_ref")
-            .write.mode("append").parquet(out_dir)
-        )
+        ok_spans(result).write.mode("append").parquet(out_dir)
         lineage_of(result).write.mode("append").parquet(checkpoint_dir)
     finally:
         result.unpersist()

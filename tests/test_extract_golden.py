@@ -4,9 +4,11 @@ reproduce the golden span tables under exact span-sequence equality
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_parse_bench_spark import score_spans
+from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
 from pdf_parse_bench_spark.operators.extract import (
     align_extractions,
     assemble_markdown,
@@ -176,15 +178,27 @@ def test_benchmark_facade(spark, fx_smoke):
     assert all(v == 10.0 for v in rows.values())
 
 
-def test_extraction_partition_invariant(spark, fx_smoke):
+# smoke input table and options per registered backend; markdown skips its
+# size rebalance (and PDFs theirs) so the kernel sees the 2 vs 17 layouts
+_BACKEND_INPUTS = {
+    "markdown": ("parsed_markdown",
+                 {"boilerplate": frozenset(), "rebalance": False}),
+    "html": ("html_documents", {}),
+    "tei": ("tei_documents", {}),
+    "layout": ("layout_blocks", {}),
+    "pdf-text": ("pdf_docs", {"rebalance": False}),
+    "pdf-spans": ("pdf_docs", {"rebalance": False}),
+}
+
+
+@pytest.mark.parametrize("backend", list_backends())
+def test_extraction_partition_invariant(spark, fx_smoke, backend):
     """Span output must be EXACTLY the same set at any partitioning —
     no kernel may depend on batch boundaries or partition order (the
     property that makes local results transfer to a 1000-executor run)."""
-    md = spark.read.parquet(str(fx_smoke / "parsed_markdown.parquet"))
-    from pdf_parse_bench_spark.operators.extract import extract_spans
-    a = extract_spans(md.repartition(2), boilerplate=frozenset(),
-                      rebalance=False)
-    b = extract_spans(md.repartition(17), boilerplate=frozenset(),
-                      rebalance=False)
+    table, opts = _BACKEND_INPUTS[backend]
+    df = _read(spark, fx_smoke, table)
+    a = get_backend(backend)(df.repartition(2), **opts)
+    b = get_backend(backend)(df.repartition(17), **opts)
     assert a.count() == b.count()
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

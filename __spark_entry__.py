@@ -525,7 +525,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Driver-coverage rotation (r7 = VERDICT r6 item 4): the driver's
     # correctness gate checks the FIRST 50 registered queries. Round 7
     # re-enters ALL 33 queries deferred in round 6 (so the union of
-    # CORRECTNESS_r06 + r07 covers every registered query — nothing
+    # history/CORRECTNESS_r06 + r07 covers every registered query — nothing
     # misses two consecutive driver artifacts) and fills the remaining
     # 17 slots with the queries this optimization round rewrote most
     # deeply (python pair/shingle kernels, single-pass locked audit,

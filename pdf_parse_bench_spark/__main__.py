@@ -5,10 +5,16 @@ parameterized entry point:
     python -m pdf_parse_bench_spark backends
     python -m pdf_parse_bench_spark extract --backend markdown \
         --input fixtures/sf0.001/parsed_markdown.parquet --output /tmp/spans \
-        [--checkpoint /tmp/ckpt] [--cores 8]
+        [--checkpoint /tmp/ckpt] [--cores N]
     python -m pdf_parse_bench_spark score --extracted /tmp/spans \
         --golden fixtures/sf0.001/golden_spans.parquet
     python -m pdf_parse_bench_spark summarize --scores fixtures/sf0.001/extraction_scores.parquet
+
+`extract --checkpoint` runs one resumable markdown pass (resume.run_resumable):
+it appends the spans of the documents the checkpoint does not yet record as
+ok, plus one lineage row per document. Lineage exists for the markdown
+backend only, so any other backend refuses --checkpoint. `--cores` defaults
+to the process's CPU affinity count.
 """
 
 from __future__ import annotations
@@ -28,18 +34,21 @@ def main(argv: list[str] | None = None) -> int:
     p_ex.add_argument("--input", required=True)
     p_ex.add_argument("--output", required=True)
     p_ex.add_argument("--checkpoint", default=None)
-    p_ex.add_argument("--cores", type=int, default=8)
+    p_ex.add_argument("--cores", type=int, default=None)
 
     p_sc = sub.add_parser("score", help="exact + judged scoring vs golden")
     p_sc.add_argument("--extracted", required=True)
     p_sc.add_argument("--golden", required=True)
-    p_sc.add_argument("--cores", type=int, default=8)
+    p_sc.add_argument("--cores", type=int, default=None)
 
     p_su = sub.add_parser("summarize", help="grouped mean scores + leaderboard")
     p_su.add_argument("--scores", required=True)
-    p_su.add_argument("--cores", type=int, default=8)
+    p_su.add_argument("--cores", type=int, default=None)
 
     args = ap.parse_args(argv)
+    if args.cmd == "extract" and args.checkpoint and args.backend != "markdown":
+        ap.error(f"--checkpoint: lineage is markdown-only, not available "
+                 f"for --backend {args.backend}")
 
     from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
 
@@ -53,20 +62,24 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.cmd == "extract":
             df = spark.read.parquet(args.input)
-            spans = get_backend(args.backend)(df)
-            spans.write.mode("overwrite").parquet(args.output)
             if args.checkpoint:
-                from pdf_parse_bench_spark.operators.resume import lineage_of
-                from pyspark.sql import functions as F
-                lineage = (
-                    spans.groupBy("doc_id")
-                    .agg(F.count("*").alias("n_spans"))
-                    .select("doc_id", F.lit("extract").alias("stage"),
-                            F.lit("ok").alias("status"), "n_spans")
+                from pdf_parse_bench_spark.operators.extract import (
+                    _collect_boilerplate,
                 )
-                lineage.write.mode("overwrite").parquet(args.checkpoint)
-            n = spark.read.parquet(args.output).count()
-            print(f"wrote {n} spans to {args.output}")
+                from pdf_parse_bench_spark.operators.resume import (
+                    run_resumable,
+                )
+                run_resumable(df, args.output, args.checkpoint,
+                              boilerplate=_collect_boilerplate(df))
+                # appended over every pass, repeats included
+                n = spark.read.parquet(args.output).count()
+                print(f"{args.output} now holds {n} span rows from all "
+                      f"passes; read them with resume.read_resumed")
+            else:
+                get_backend(args.backend)(df).write.mode(
+                    "overwrite").parquet(args.output)
+                n = spark.read.parquet(args.output).count()
+                print(f"wrote {n} spans to {args.output}")
         elif args.cmd == "score":
             from pdf_parse_bench_spark import score_spans, score_spans_judged
             ext = spark.read.parquet(args.extracted)

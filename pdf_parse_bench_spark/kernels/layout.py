@@ -336,7 +336,7 @@ def reading_order(bboxes: np.ndarray,
                 # never overlap and keep their own band. (A cluster-and-
                 # choose variant that could also merge downward measured
                 # WORSE on the reference corpora than this simple upward
-                # rule; see CHANGES_r06.)
+                # rule; see history/CHANGES_r06.md.)
                 pm_o = prose_mask[idx][order]
                 bots = bb[order, 3]
                 nb = int(band.max()) + 1

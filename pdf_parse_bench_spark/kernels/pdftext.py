@@ -2152,6 +2152,38 @@ def _strip_page_chrome(pages: list[tuple[list, float]]
             for runs, page_h in pages]
 
 
+def _staged_pages(pdf_bytes: bytes, password: bytes,
+                  images: bool) -> list[tuple[list, float, list | None]]:
+    """(runs, page_h, image rects) per page, page chrome stripped — the
+    staging both public extractors share.
+
+    Pages come from the real ``/Pages`` tree when the file indexes one;
+    otherwise every content stream is treated as a page (truncated-file
+    fallback, which never carries image geometry). Image rects are
+    collected only when `images` is set, as Do-site geometry; their
+    pixels are never decoded here."""
+    staged: list[tuple[list, float]] = []
+    rects: list[list | None] = []
+    try:
+        doc = _PdfDoc(pdf_bytes, password=password)
+        for body, fonts, xobj_fn, _page_w, page_h in doc.pages():
+            if body:
+                page_rects = [] if images else None
+                staged.append((_page_runs(body, fonts, xobj_fn,
+                                          images=page_rects), page_h))
+                rects.append(page_rects)
+    except Exception:
+        staged, rects = [], []
+    if not staged:
+        for body in _iter_raw_streams(pdf_bytes):
+            runs = _page_runs(body, {})
+            if runs:
+                staged.append((runs, PAGE_H))
+                rects.append([])
+    return [(runs, page_h, r) for (runs, page_h), r
+            in zip(_strip_page_chrome(staged), rects)]
+
+
 def extract_pdf_text(pdf_bytes: bytes, password: bytes = b"") -> str:
     """Extract text from a PDF, reading-ordered within each page, with
     page chrome (running headers/footers, page numbers) suppressed by
@@ -2162,21 +2194,9 @@ def extract_pdf_text(pdf_bytes: bytes, password: bytes = b"") -> str:
     parsers/pypdf/__main__.py:30-32); otherwise every content stream is
     treated as a page (truncated-file fallback). `password` unlocks
     password-protected files (the passwords side-table hook)."""
-    staged: list[tuple[list, float]] = []
-    try:
-        doc = _PdfDoc(pdf_bytes, password=password)
-        for body, fonts, xobj_fn, _page_w, page_h in doc.pages():
-            if body:
-                staged.append((_page_runs(body, fonts, xobj_fn), page_h))
-    except Exception:
-        staged = []
-    if not staged:
-        for body in _iter_raw_streams(pdf_bytes):
-            runs = _page_runs(body, {})
-            if runs:
-                staged.append((runs, PAGE_H))
     pages = [_runs_to_text(runs, page_h)
-             for runs, page_h in _strip_page_chrome(staged)]
+             for runs, page_h, _ in _staged_pages(pdf_bytes, password,
+                                                  images=False)]
     return "\n".join(p for p in pages if p)
 
 
@@ -2188,35 +2208,9 @@ def extract_pdf_spans(pdf_bytes: bytes, password: bytes = b"") -> list[dict]:
     page_<x>_<y>_<w>_<h>.png figure ref (see _runs_to_spans), page by page
     in reading order."""
     out: list[dict] = []
-    staged: list[tuple[list, float]] = []
-    page_images: list[list] = []
-    try:
-        doc = _PdfDoc(pdf_bytes, password=password)
-        for body, fonts, xobj_fn, _page_w, page_h in doc.pages():
-            if body:
-                images: list = []
-                staged.append(
-                    (_page_runs(body, fonts, xobj_fn, images=images),
-                     page_h))
-                page_images.append(images)
-    except Exception:
-        staged = []
-        page_images = []
-    if not staged:
-        for body in _iter_raw_streams(pdf_bytes):
-            runs = _page_runs(body, {})
-            if runs:
-                staged.append((runs, PAGE_H))
-                page_images.append([])
-    page_spans = [
-        _runs_to_spans(runs, page_h, imgs)
-        for (runs, page_h), imgs in zip(_strip_page_chrome(staged),
-                                        page_images)
-    ]
-    off = 0
-    for sp in page_spans:
-        for kind, text, media_ref in sp:
+    for runs, page_h, rects in _staged_pages(pdf_bytes, password,
+                                             images=True):
+        for kind, text, media_ref in _runs_to_spans(runs, page_h, rects):
             out.append({"kind": kind, "text": text, "media_ref": media_ref,
-                        "offset": off})
-            off += 1
+                        "offset": len(out)})
     return out

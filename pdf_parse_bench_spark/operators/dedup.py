@@ -1,5 +1,6 @@
-"""Deduplication operators over the `documents` table — built-in-function
-only (JVM-side, whole-stage-codegen friendly); no Python UDFs anywhere.
+"""Deduplication operators over the `documents` table. Relational steps
+(joins, groupBys, banding) are built-in functions; per-document hashing
+runs as kernels through operators/text.py's ``text_kernel``.
 
 All hashing is md5-hex (identical in Spark and the DuckDB oracle), and every
 "min over hashes" uses lexicographic order on fixed-width hex, so results are
@@ -26,16 +27,19 @@ from pdf_parse_bench_spark.operators.skew import (
     HEAVY_KERNEL_MIN_BYTES as HEAVY_MIN,
     spread_for_kernel,
 )
+from pdf_parse_bench_spark.operators.text import (
+    doc_words,
+    ngram_digests,
+    text_kernel,
+    word_array,
+    word_grams,
+)
 
 MINHASH_K = 16
 LSH_BANDS = 4
 LSH_ROWS = 4  # K = BANDS * ROWS
 SHINGLE_N = 3
 SIMHASH_BITS = 16
-
-
-def _words(col: str = "text"):
-    return F.filter(F.split(F.trim(F.col(col)), " +"), lambda x: x != "")
 
 
 def dedup_exact(docs: DataFrame) -> DataFrame:
@@ -50,13 +54,6 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
 _MINHASH_MOD = 4294967296  # 2^32
 
 
-def _doc_words(text: str) -> list[str]:
-    """Python twin of _words(): split on single spaces, drop empties —
-    identical tokens to split(trim(text), ' +') for any input (runs of
-    spaces yield empty tokens that the filter drops either way)."""
-    return [t for t in text.split(" ") if t]
-
-
 def _doc_shingle_ab(text: str, n: int = SHINGLE_N):
     """(a, b) int64 arrays — the two big-endian 32-bit halves of
     md5(shingle) for every word n-gram of the doc (whole text as one
@@ -66,14 +63,21 @@ def _doc_shingle_ab(text: str, n: int = SHINGLE_N):
 
     import numpy as np
 
-    w = _doc_words(text)
-    if len(w) >= n:
-        shingles = (" ".join(w[i:i + n]) for i in range(len(w) - n + 1))
-    else:
-        shingles = (" ".join(w),)
-    buf = b"".join(hashlib.md5(s.encode()).digest()[:8] for s in shingles)
+    buf = b"".join(hashlib.md5(s.encode()).digest()[:8]
+                   for s in word_grams(doc_words(text), n))
     ab = np.frombuffer(buf, dtype=">u4").astype(np.int64).reshape(-1, 2)
     return ab[:, 0], ab[:, 1]
+
+
+def _minhash_signature(text: str, k: int):
+    """The doc's K minhash values (int64 array): h_i = (a + i·b) mod 2^32
+    over its shingles' md5 halves, minimized per i."""
+    import numpy as np
+
+    a, b = _doc_shingle_ab(text)
+    idx = np.arange(k, dtype=np.int64)
+    return ((a[:, None] + idx[None, :] * b[:, None])
+            % _MINHASH_MOD).min(axis=0)
 
 
 def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
@@ -91,64 +95,30 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     shingle plus a K-column groupBy shuffle; the kernel keeps the md5
     count identical and drops both the interpreted gram construction
     and the exchange."""
-    import numpy as np
-    import pandas as pd
-
-    idx = np.arange(k, dtype=np.int64)
-
-    def run(batches):
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                a, b = _doc_shingle_ab(text)
-                sigs.append(
-                    ((a[:, None] + idx[None, :] * b[:, None])
-                     % _MINHASH_MOD).min(axis=0))
-                ids.append(doc_id)
-            yield pd.DataFrame({"doc_id": ids, "signature": sigs})
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, signature array<long>")
+    return text_kernel(
+        docs,
+        lambda text: [{"signature": _minhash_signature(text, k).tolist()}],
+        "signature array<long>")
 
 
 def _minhash_band_rows(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """(doc_id, band, band_key) rows — md5 over the '|'-joined band slice
     of the minhash signature, identical strings to the r6 JVM
-    md5(concat_ws('|', ...)) band keys. One kernel pass, no exchange."""
+    md5(concat_ws('|', ...)) band keys. One kernel pass, no exchange;
+    the kernel emits the doc's keys in band order and posexplode numbers
+    them."""
     import hashlib
 
-    import numpy as np
-    import pandas as pd
+    def band_keys(text):
+        sig = _minhash_signature(text, k)
+        return [{"band_key": [
+            hashlib.md5("|".join(
+                str(v) for v in sig[band * LSH_ROWS:(band + 1) * LSH_ROWS]
+            ).encode()).hexdigest()
+            for band in range(LSH_BANDS)]}]
 
-    idx = np.arange(k, dtype=np.int64)
-
-    def run(batches):
-        for pdf in batches:
-            ids, bands, keys = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                a, b = _doc_shingle_ab(text)
-                sig = ((a[:, None] + idx[None, :] * b[:, None])
-                       % _MINHASH_MOD).min(axis=0)
-                for band in range(LSH_BANDS):
-                    key = hashlib.md5("|".join(
-                        str(v) for v in
-                        sig[band * LSH_ROWS:(band + 1) * LSH_ROWS]
-                    ).encode()).hexdigest()
-                    ids.append(doc_id)
-                    bands.append(band)
-                    keys.append(key)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "band": np.array(bands, dtype=np.int32),
-                "band_key": keys,
-            })
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, band int, band_key string")
+    return text_kernel(docs, band_keys, "band_key array<string>").select(
+        "doc_id", F.posexplode("band_key").alias("band", "band_key"))
 
 
 def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
@@ -175,27 +145,11 @@ def _shingle_sets_df(docs: DataFrame) -> DataFrame:
     """(doc_id, sh: array<string>) — the doc's DISTINCT word-3-gram
     shingles from one kernel pass (sorted for determinism; only set
     SIZES feed the Jaccard, so order is free)."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            ids, sets_ = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = _doc_words(text)
-                if len(w) >= SHINGLE_N:
-                    sh = sorted({
-                        " ".join(w[i:i + SHINGLE_N])
-                        for i in range(len(w) - SHINGLE_N + 1)})
-                else:
-                    sh = [" ".join(w)]
-                ids.append(doc_id)
-                sets_.append(sh)
-            yield pd.DataFrame({"doc_id": ids, "sh": sets_})
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, sh array<string>")
+    return text_kernel(
+        docs,
+        lambda text: [{"sh": sorted(set(word_grams(doc_words(text),
+                                               SHINGLE_N)))}],
+        "sh array<string>")
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -223,7 +177,7 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """Per-doc SimHash over word unigrams. Bit b's vote uses the MSB of hex
     nibble b of md5(word) (nibble >= '8'), so the identical expression runs
     in ANSI SQL."""
-    w = docs.select("doc_id", F.explode(_words()).alias("word"))
+    w = docs.select("doc_id", F.explode(word_array()).alias("word"))
     h = w.select("doc_id", F.md5("word").alias("h"))
     votes = h.groupBy("doc_id").agg(
         *[
@@ -364,43 +318,27 @@ def simhash64_blocks(docs: DataFrame) -> DataFrame:
     The r6 plan exploded every word and ran a 65-aggregate
     groupBy(doc_id) shuffle with 64 shiftright/and expressions per word
     row. Docs with no words emit no row, exactly like the r6 explode."""
+    import hashlib
+
     import numpy as np
-    import pandas as pd
 
     shifts = np.arange(32, dtype=np.int64)
+    weights = 1 << np.arange(16, dtype=np.int64)
 
-    def run(batches):
-        import hashlib
+    def blocks(text):
+        w = doc_words(text)
+        if not w:
+            return []
+        buf = b"".join(hashlib.md5(t.encode()).digest()[:8] for t in w)
+        ab = np.frombuffer(buf, dtype=">u4").astype(np.int64)
+        bits = (ab[:, None] >> shifts[None, :]) & 1
+        s = bits.reshape(-1, 2, 32).sum(axis=0)  # (2, 32)
+        sf = np.concatenate([s[0], s[1]])        # s_0..s_63
+        votes = (2 * sf > len(w)).astype(np.int64)
+        blk = (votes.reshape(4, 16) * weights).sum(axis=1)
+        return [dict(zip(("b0", "b1", "b2", "b3"), blk.tolist()))]
 
-        for pdf in batches:
-            ids, blks = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = _doc_words(text)
-                if not w:
-                    continue
-                buf = b"".join(
-                    hashlib.md5(t.encode()).digest()[:8] for t in w)
-                ab = np.frombuffer(buf, dtype=">u4").astype(np.int64)
-                bits = (ab[:, None] >> shifts[None, :]) & 1
-                s = bits.reshape(-1, 2, 32).sum(axis=0)  # (2, 32)
-                sf = np.concatenate([s[0], s[1]])        # s_0..s_63
-                votes = (2 * sf > len(w)).astype(np.int64)
-                blk = (votes.reshape(4, 16)
-                       * (1 << np.arange(16, dtype=np.int64))).sum(axis=1)
-                ids.append(doc_id)
-                blks.append(blk.astype(np.int32))
-            arr = (np.stack(blks) if blks
-                   else np.empty((0, 4), dtype=np.int32))
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "b0": arr[:, 0], "b1": arr[:, 1],
-                "b2": arr[:, 2], "b3": arr[:, 3],
-            })
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, b0 int, b1 int, b2 int, b3 int")
+    return text_kernel(docs, blocks, "b0 int, b1 int, b2 int, b3 int")
 
 
 def simhash_near_dups(docs: DataFrame,
@@ -577,29 +515,7 @@ def duplicate_ngram_pairs(docs: DataFrame, n: int = NGRAM_DUP_N,
     self-join (so ubiquitous boilerplate shingles can never explode the
     pair space), and the self-join reuses the shingle exchange. Output
     is (doc_a, doc_b, n_shared) — tiny relative to the corpus."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            ids, digs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = _doc_words(text)
-                if len(w) < n:
-                    continue
-                uniq = {
-                    hashlib.md5(" ".join(w[i:i + n]).encode()).digest()
-                    for i in range(len(w) - n + 1)}
-                ids.extend([doc_id] * len(uniq))
-                digs.extend(uniq)
-            yield pd.DataFrame({"doc_id": ids, "sh": digs})
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    g = spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, sh binary")
+    g = ngram_digests(docs, n)
     rare = (g.groupBy("sh")
             .agg(F.count("*").alias("df"))  # kernel rows are per-doc distinct
             .where((F.col("df") >= 2) & (F.col("df") <= max_df))

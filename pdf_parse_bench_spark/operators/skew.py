@@ -10,8 +10,9 @@ but is a deliberate non-choice at 10^12 docs. Instead:
     quantile-derived threshold) are isolated into their own partition slots
     so one giant document never shares a task with thousands of normal ones.
     Fully parallel: one approxQuantile pass + one shuffle.
-  - salted_repartition: classic (key, salt) spread for stages that do not
-    need whole-key grouping.
+  - spread_for_kernel: one hash repartition on doc_id when a single-row-
+    group scan would otherwise run a kernel stage as one task (size-gated,
+    a no-op on already-parallel scans).
 """
 
 from __future__ import annotations
@@ -102,29 +103,3 @@ def spread_for_kernel(df: DataFrame, key: str = "doc_id",
 MIN_SPREAD_BYTES = 4 * 1024 * 1024
 HEAVY_KERNEL_MIN_BYTES = 1024 * 1024
 
-
-def salted_repartition(df: DataFrame, key: str = "doc_id", n_salts: int = 8,
-                       num_partitions: int | None = None,
-                       salt_cols: list[str] | None = None,
-                       salt_seed: int = 29) -> DataFrame:
-    """Spread rows of hot keys across `n_salts` buckets. Only valid before
-    stages that do NOT need whole-key grouping (e.g. map-side transforms,
-    partial aggregations that re-merge later).
-
-    The salt is a content hash (xxhash64 of `salt_cols`, default all
-    columns, mixed with a pass seed), NOT monotonically_increasing_id: the
-    id changes on task retry/recompute, which would make the partitioning
-    non-replay-stable (a lost-executor recompute could route the same row
-    to a different partition than its first run)."""
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    cols = salt_cols if salt_cols is not None else df.columns
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in cols], F.lit(salt_seed)),
-               F.lit(n_salts)),
-    )
-    return (
-        salted.repartition(num_partitions, F.col(key), F.col("_salt"))
-        .drop("_salt")
-    )

@@ -10,9 +10,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from pdf_parse_bench_spark.functions import round_half_up
+from pdf_parse_bench_spark.operators.kernel import kernel_op
 from pdf_parse_bench_spark.operators.skew import (
     HEAVY_KERNEL_MIN_BYTES as HEAVY_MIN,
     spread_for_kernel,
+)
+from pdf_parse_bench_spark.operators.text import (
+    doc_words,
+    ngram_digests,
+    text_kernel,
+    word_array,
+    word_grams,
 )
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
@@ -30,13 +38,9 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "it")
 TOKEN_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
 
-def _words(col: str = "text"):
-    return F.filter(F.split(F.trim(F.col(col)), " +"), lambda x: x != "")
-
-
 def _lang_pred_expr():
     """(pred_lang, marker_hits) expressions over the text column."""
-    w = _words()
+    w = word_array()
 
     def _count(marker: str):
         # NB: the filter lambda must take exactly one arg — a second arg
@@ -62,7 +66,7 @@ def _quality_exprs(w=None):
     pre-materialized words-array Column as `w` to avoid re-inlining the
     split (doc_stats_rollup's barrier-staged plan)."""
     if w is None:
-        w = _words()
+        w = word_array()
     n_chars = F.length("text")
     n_words = F.size(w)
     n_punct = n_chars - F.length(F.regexp_replace("text", "[^a-zA-Z0-9 ]", ""))
@@ -151,7 +155,7 @@ def corpus_filter(docs: DataFrame, min_words: int = 8,
 
 def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count."""
-    ws = F.size(_words())
+    ws = F.size(word_array())
     bpe = F.size(F.regexp_extract_all("text", F.lit(TOKEN_PATTERN), F.lit(0)))
     return docs.select(
         "doc_id", ws.alias("ws_tokens"), bpe.alias("regex_tokens")
@@ -171,7 +175,7 @@ def vocab_stats(docs: DataFrame, k: int = 100) -> DataFrame:
     is derived afterwards on the k surviving rows only."""
     from pyspark.sql import Window
 
-    w = docs.select("doc_id", F.explode(_words()).alias("word"))
+    w = docs.select("doc_id", F.explode(word_array()).alias("word"))
     agg = w.groupBy("word").agg(
         F.count("*").alias("tf"),
         F.countDistinct("doc_id").alias("df"),
@@ -203,7 +207,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     # parallel)
     w = spread_for_kernel(docs.select("doc_id", "text"),
                       min_bytes=HEAVY_MIN).select(
-        "doc_id", F.explode(_words()).alias("word"))
+        "doc_id", F.explode(word_array()).alias("word"))
     tf = w.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df_tbl = tf.groupBy("word").agg(F.count("*").alias("df"))
     n = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -255,43 +259,25 @@ def winnowing_fingerprints(docs: DataFrame, k: int = WINNOW_K,
     is semantically identical but pays a 5M-row sort at sf0.1 (measured
     29s vs ~3s) — and the DuckDB oracle deliberately KEEPS that window
     formulation as the independent mirror. Docs shorter than k words
-    fingerprint their whole word sequence as one gram."""
+    fingerprint their whole word sequence as one gram. The kernel emits
+    one fp array per doc; the JVM explodes it."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
-    def run(batches):
-        for pdf in batches:
-            ids, fps = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = [t for t in text.split(" ") if t]
-                if len(ws) >= k:
-                    grams = (" ".join(ws[i:i + k])
-                             for i in range(len(ws) - k + 1))
-                else:
-                    grams = (" ".join(ws),)
-                buf = b"".join(
-                    hashlib.md5(g.encode()).digest()[:4] for g in grams)
-                hs = np.frombuffer(buf, dtype=">u4").astype(np.int64)
-                if hs.size >= w:
-                    mins = np.lib.stride_tricks.sliding_window_view(
-                        hs, w).min(axis=1)
-                else:
-                    mins = hs.min(keepdims=True)
-                uniq = np.unique(mins)
-                ids.extend([doc_id] * uniq.size)
-                fps.append(uniq)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "fp": np.concatenate(fps) if fps else
-                np.array([], dtype=np.int64),
-            })
+    def fingerprints(text):
+        buf = b"".join(hashlib.md5(g.encode()).digest()[:4]
+                       for g in word_grams(doc_words(text), k))
+        hs = np.frombuffer(buf, dtype=">u4").astype(np.int64)
+        if hs.size >= w:
+            mins = np.lib.stride_tricks.sliding_window_view(
+                hs, w).min(axis=1)
+        else:
+            mins = hs.min(keepdims=True)
+        return [{"fp": np.unique(mins).tolist()}]
 
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, fp long")
+    return text_kernel(docs, fingerprints, "fp array<long>").select(
+        "doc_id", F.explode("fp").alias("fp"))
 
 
 # C4/CCNet-style PII scrubbing: portable regexes (no lookaround — valid in
@@ -354,54 +340,46 @@ def doc_stats_rollup(docs: DataFrame) -> DataFrame:
     import math
     import re
 
-    import pandas as pd
-
     langs = sorted(LANG_MARKERS)
     marker2lang = {m: la for la in langs for m in LANG_MARKERS[la]}
     stop = set(STOPWORDS)
     punct_re = re.compile(r"[^a-zA-Z0-9 ]")
 
-    def feats_kernel(batches):
-        for pdf in batches:
-            srcs, preds, quals = [], [], []
-            for source, text in zip(pdf["source"], pdf["text"]):
-                toks = [t for t in text.split(" ") if t]
-                n_chars = len(text)
-                n_words = len(toks)
-                n_punct = n_chars - len(punct_re.sub("", text))
-                stop_hits = 0
-                counts = dict.fromkeys(langs, 0)
-                for t in toks:
-                    if t in stop:
-                        stop_hits += 1
-                    la = marker2lang.get(t)
-                    if la is not None:
-                        counts[la] += 1
-                pr = math.floor((n_punct / max(n_chars, 1))
-                                * 1000000.0 + 0.5) / 1000000.0
-                sr = math.floor((stop_hits / max(n_words, 1))
-                                * 1000000.0 + 0.5) / 1000000.0
-                quality = math.floor(
-                    (min(n_words / 50.0, 1.0) * 0.4
-                     + (1.0 - min(pr * 5, 1.0)) * 0.3
-                     + min(sr * 5, 1.0) * 0.3) * 1000000.0 + 0.5
-                ) / 1000000.0
-                best = max(counts.values())
-                pred = "unknown" if best <= 0 else next(
-                    la for la in langs if counts[la] == best)
-                srcs.append(source)
-                preds.append(pred)
-                quals.append(quality)
-            yield pd.DataFrame({"source": srcs, "pred_lang": preds,
-                                "quality": quals})
+    def feats_kernel(text):
+        toks = doc_words(text)
+        n_chars = len(text)
+        n_words = len(toks)
+        n_punct = n_chars - len(punct_re.sub("", text))
+        stop_hits = 0
+        counts = dict.fromkeys(langs, 0)
+        for t in toks:
+            if t in stop:
+                stop_hits += 1
+            la = marker2lang.get(t)
+            if la is not None:
+                counts[la] += 1
+        pr = math.floor((n_punct / max(n_chars, 1))
+                        * 1000000.0 + 0.5) / 1000000.0
+        sr = math.floor((stop_hits / max(n_words, 1))
+                        * 1000000.0 + 0.5) / 1000000.0
+        quality = math.floor(
+            (min(n_words / 50.0, 1.0) * 0.4
+             + (1.0 - min(pr * 5, 1.0)) * 0.3
+             + min(sr * 5, 1.0) * 0.3) * 1000000.0 + 0.5
+        ) / 1000000.0
+        best = max(counts.values())
+        pred = "unknown" if best <= 0 else next(
+            la for la in langs if counts[la] == best)
+        return [{"pred_lang": pred, "quality": quality}]
 
     # NOT spread_for_kernel'd: avg(quality) sums 1e-6-quantized doubles, so
     # its partial-sum ORDER is observable at the 6th decimal — repartitioning
     # upstream of the rollup flips boundary groups vs the oracle's sequential
     # sum (seen at sf0.01: one group off by 1e-6). The kernel is cheap enough
     # single-stage (~1 s at sf1.0); input order stays the scan order.
-    feats = docs.select("source", "text").mapInPandas(
-        feats_kernel, schema="source string, pred_lang string, quality double")
+    feats = kernel_op(docs, feats_kernel,
+                      "source string, pred_lang string, quality double",
+                      keys=("source",), args=["text"])
     return (
         feats.rollup("source", "pred_lang")
         .agg(F.count("*").cast("long").alias("n_docs"),
@@ -500,37 +478,6 @@ DECON_EVAL_REM = 3
 DECON_N = 8             # same shingle width as duplicate_ngram_pairs
 
 
-def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, sh): distinct word-n-gram md5 digests per document — one
-    Arrow-batched kernel pass (r7, guide §4.2: hashlib md5 bytes ARE the
-    JVM md5 hex, so the 16-byte digest is an equality-preserving
-    narrowing of the r6 hex string; the interpreted slice/concat_ws gram
-    transform and array_distinct disappear into a Python set)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            ids, digs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w = [t for t in text.split(" ") if t]
-                if len(w) < n:
-                    continue
-                uniq = {
-                    hashlib.md5(" ".join(w[i:i + n]).encode()).digest()
-                    for i in range(len(w) - n + 1)}
-                ids.extend([doc_id] * len(uniq))
-                digs.extend(uniq)
-            yield pd.DataFrame({"doc_id": ids, "sh": digs})
-
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return spread_for_kernel(docs.select("doc_id", "text"),
-                             min_bytes=HEAVY_MIN).mapInPandas(
-        run, schema=f"doc_id {id_t}, sh binary")
-
-
 def decontaminate(docs: DataFrame,
                   eval_docs: DataFrame | None = None) -> DataFrame:
     """Benchmark decontamination (GPT-3 appx C / Lee et al.): flag every
@@ -546,13 +493,13 @@ def decontaminate(docs: DataFrame,
     partial-agg count per flagged doc. Output: (doc_id, n_eval_grams),
     only contaminated docs."""
     if eval_docs is None:
-        g = _doc_shingles(docs, DECON_N)
+        g = ngram_digests(docs, DECON_N)
         is_eval = (F.col("doc_id") % DECON_EVAL_MOD) == DECON_EVAL_REM
         ev = g.where(is_eval).select("sh").distinct()
         tr = g.where(~is_eval)
     else:
-        ev = _doc_shingles(eval_docs, DECON_N).select("sh").distinct()
-        tr = _doc_shingles(docs, DECON_N)
+        ev = ngram_digests(eval_docs, DECON_N).select("sh").distinct()
+        tr = ngram_digests(docs, DECON_N)
     return (tr.join(F.broadcast(ev), "sh")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_eval_grams")))
@@ -586,7 +533,7 @@ def chunk_documents(docs: DataFrame, size: int = CHUNK_SIZE,
     sequence(), windows via slice(), one posexplode — all inside the
     scan projection at any scale."""
     step = size - overlap
-    ws = _words()
+    ws = word_array()
     w = docs.select("doc_id", ws.alias("ws")).where(F.size("ws") > 0)
     starts = F.sequence(F.lit(0), F.size("ws") - 1, F.lit(step))
     ex = w.select("doc_id", "ws",
@@ -673,37 +620,20 @@ def lm_score(docs: DataFrame) -> DataFrame:
     trigrams — algebraically identical to the r6 per-instance avg
     (every instance of a trigram carries the same nll; 6-dp parity
     asserted by tests/test_oracle_parity.py against the unchanged
-    per-instance oracle SQL)."""
+    per-instance oracle SQL). The kernel emits one (key, k) array pair
+    per doc; inline(arrays_zip) fans it out in the JVM."""
     import numpy as np
-    import pandas as pd
 
-    def tri_counts(batches):
-        for pdf in batches:
-            ids, keys, ks = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                a = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                if a.size < 3:
-                    continue
-                packed = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
-                u, c = np.unique(packed, return_counts=True)
-                ids.extend([doc_id] * u.size)
-                keys.append(u)
-                ks.append(c)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "key": np.concatenate(keys) if keys else
-                np.array([], dtype=np.int64),
-                "k": np.concatenate(ks) if ks else
-                np.array([], dtype=np.int64),
-            })
+    def tri_counts(text):
+        a = np.frombuffer(text.encode("utf-32-le"),
+                          dtype=np.uint32).astype(np.int64)
+        packed = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
+        u, c = np.unique(packed, return_counts=True)
+        return [{"key": u.tolist(), "k": c.tolist()}]
 
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    g = spread_for_kernel(
-        docs.where(F.length("text") >= 3).select("doc_id", "text"),
-        min_bytes=HEAVY_MIN,
-    ).mapInPandas(tri_counts, schema=f"doc_id {id_t}, key long, k long")
+    g = text_kernel(docs.where(F.length("text") >= 3), tri_counts,
+                     "key array<long>, k array<long>").select(
+        "doc_id", F.inline(F.arrays_zip("key", "k")))
     model = g.groupBy("key").agg(F.sum("k").alias("c"))
     total = model.agg(F.sum("c").alias("total"))
     scored = (g.join(model, "key")
@@ -791,7 +721,7 @@ def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN,
     # split-point sample, the per-bucket window and the bucket totals), so
     # an upstream shuffle would be paid three times — measured slower than
     # letting each consumer run the cheap codegen word-count in the scan
-    n = (docs.select("doc_id", F.size(_words()).alias("n"))
+    n = (docs.select("doc_id", F.size(word_array()).alias("n"))
          .where(F.col("n") > 0))
     splits = _range_split_points(n, buckets)
     if splits:

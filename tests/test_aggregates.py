@@ -148,13 +148,14 @@ def test_pack_sequences_exact_cover(spark):
     """The pack manifest must cover every word of every doc exactly
     once, in order: per-doc spans tile [1, n]; per-sequence totals are
     seq_len except the final partial sequence."""
+    from pdf_parse_bench_spark.operators.text import word_array
     from pdf_parse_bench_spark.operators.textstats import (
-        SEQ_LEN, pack_sequences, _words)
+        SEQ_LEN, pack_sequences)
     import pyspark.sql.functions as F
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     man = pack_sequences(docs).collect()
     n_by_doc = {r["doc_id"]: r["n"] for r in docs.select(
-        "doc_id", F.size(_words()).alias("n")).collect() if r["n"] > 0}
+        "doc_id", F.size(word_array()).alias("n")).collect() if r["n"] > 0}
     spans = {}
     for r in man:
         spans.setdefault(r["doc_id"], []).append(

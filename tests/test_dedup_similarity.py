@@ -4,6 +4,7 @@ operators actually *detect* what they claim to)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from pdf_parse_bench_spark.operators import dedup as dd
@@ -420,3 +421,38 @@ def test_semantic_dedup_hot_cell_split_bounds_group_size(spark):
         assert r["max_cosine"] >= sim.SEMDEDUP_T
     # the split must still find dups (vectors are near-identical)
     assert out.count() > 0
+
+
+# every per-document kernel_op operator of dedup/textstats except the two
+# whose float sums depend on partition order (doc_stats_rollup, lm_score)
+_KERNEL_OPS = {
+    "minhash_signatures": dd.minhash_signatures,
+    "minhash_band_rows": dd._minhash_band_rows,
+    "shingle_sets": dd._shingle_sets_df,
+    "simhash64_blocks": dd.simhash64_blocks,
+    "duplicate_ngram_pairs": dd.duplicate_ngram_pairs,
+    "winnowing_fingerprints": ts.winnowing_fingerprints,
+    "decontaminate": ts.decontaminate,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_KERNEL_OPS))
+def test_kernel_ops_partition_invariant(spark, op):
+    """Same rows at 2 and at 17 input partitions. The input is 14 docs —
+    ten real ones, a near-duplicate of doc 0, a copy of doc 1, a training
+    copy of eval doc 3 and an empty text — so every operator has output
+    to compare, and at 17 partitions each doc sits alone in its Arrow
+    batch: some partitions stay empty, and the empty text's batch makes
+    kernels that emit nothing for it return an empty frame."""
+    base = _docs(spark).select("doc_id", "text").where(F.col("doc_id") < 10)
+    twins = spark.createDataFrame(
+        [(100000, 0, " extra token"), (100001, 1, ""), (100004, 3, "")],
+        "doc_id long, src long, tail string")
+    docs = base.unionByName(
+        twins.join(base.withColumnRenamed("doc_id", "src"), "src")
+        .select("doc_id", F.concat("text", "tail").alias("text"))
+    ).unionByName(spark.createDataFrame([(100010, "")],
+                                        "doc_id long, text string"))
+    a, b = (sorted(map(tuple, _KERNEL_OPS[op](docs.repartition(n)).collect()))
+            for n in (2, 17))
+    assert a and a == b

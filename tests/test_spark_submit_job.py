@@ -1,15 +1,22 @@
-"""End-to-end spark-submit packaging test (north_rule: the job must run via
-`spark-submit --py-files` on a multi-executor cluster). Zips the package,
-submits jobs/extract_job.py against the sf0.001 fixture corpus plus one
-empty-markdown document with output + checkpoint sinks, and verifies the
-written spans equal golden: the empty doc's zero-span lineage sentinel
-(offset=-1) is checkpointed but never written as a span."""
+"""End-to-end job tests over the sf0.001 fixture corpus plus one
+empty-markdown document, with output + checkpoint sinks.
+
+- spark-submit packaging (north_rule: the job must run via
+  `spark-submit --py-files` on a multi-executor cluster): zips the package
+  and submits jobs/extract_job.py;
+- the CLI: `python -m pdf_parse_bench_spark extract --checkpoint`.
+
+Both verify the written spans equal golden: the empty doc's zero-span
+lineage sentinel (offset=-1) is checkpointed but never written as a
+span."""
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import subprocess
+import sys
 import zipfile
 from pathlib import Path
 
@@ -20,12 +27,7 @@ REPO = Path(__file__).resolve().parent.parent
 SPARK_SUBMIT = shutil.which("spark-submit")
 
 
-@pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
-def test_spark_submit_extract_job(spark, fx_smoke, tmp_path):
-    zip_path = tmp_path / "pdfpbs.zip"
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for f in (REPO / "pdf_parse_bench_spark").rglob("*.py"):
-            zf.write(f, f.relative_to(REPO))
+def _corpus_with_empty_doc(fx_smoke, tmp_path) -> Path:
     import pyarrow as pa
     import pyarrow.parquet as pq
     corpus = pq.read_table(fx_smoke / "parsed_markdown.parquet")
@@ -33,6 +35,26 @@ def test_spark_submit_extract_job(spark, fx_smoke, tmp_path):
                      schema=corpus.schema)
     in_path = tmp_path / "parsed_markdown.parquet"
     pq.write_table(pa.concat_tables([corpus, empty]), in_path)
+    return in_path
+
+
+def _assert_golden_spans(spark, fx_smoke, out_dir):
+    got = spark.read.parquet(str(out_dir))
+    assert got.where(got["offset"] < 0).isEmpty()
+    want = spark.read.parquet(str(fx_smoke / "golden_spans.parquet")).select(
+        "doc_id", "offset", "kind", "text", "media_ref"
+    )
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+@pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
+def test_spark_submit_extract_job(spark, fx_smoke, tmp_path):
+    zip_path = tmp_path / "pdfpbs.zip"
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for f in (REPO / "pdf_parse_bench_spark").rglob("*.py"):
+            zf.write(f, f.relative_to(REPO))
+    in_path = _corpus_with_empty_doc(fx_smoke, tmp_path)
     out_dir = tmp_path / "spans"
     ckpt_dir = tmp_path / "ckpt"
     r = subprocess.run(
@@ -55,14 +77,38 @@ def test_spark_submit_extract_job(spark, fx_smoke, tmp_path):
     stats = json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
     assert stats["docs"] == 501
 
-    got = spark.read.parquet(str(out_dir))
-    assert got.where(got["offset"] < 0).isEmpty()
-    want = spark.read.parquet(str(fx_smoke / "golden_spans.parquet")).select(
-        "doc_id", "offset", "kind", "text", "media_ref"
-    )
-    assert got.count() == want.count()
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
+    _assert_golden_spans(spark, fx_smoke, out_dir)
     lineage = spark.read.parquet(str(ckpt_dir))
     assert lineage.where(lineage.status != "ok").isEmpty()
     assert lineage.count() == 501
+
+
+def test_cli_extract_checkpoint_writes_lineage(spark, fx_smoke, tmp_path):
+    """`extract --checkpoint` is one resumable markdown pass: real lineage
+    (partition_id, error, the zero-span doc checkpointed ok), spans equal
+    golden; other backends refuse --checkpoint instead of faking lineage."""
+    in_path = _corpus_with_empty_doc(fx_smoke, tmp_path)
+    out_dir = tmp_path / "spans"
+    ckpt_dir = tmp_path / "ckpt"
+    env = {**os.environ,
+           "PYTHONPATH": os.pathsep.join(
+               filter(None, [str(REPO), os.environ.get("PYTHONPATH")]))}
+
+    def cli(*args):
+        return subprocess.run(
+            [sys.executable, "-m", "pdf_parse_bench_spark", "extract",
+             "--input", str(in_path), "--output", str(out_dir),
+             "--checkpoint", str(ckpt_dir), *args],
+            capture_output=True, text=True, timeout=420, cwd=REPO, env=env)
+
+    r = cli("--backend", "markdown")
+    assert r.returncode == 0, r.stderr[-2000:]
+    _assert_golden_spans(spark, fx_smoke, out_dir)
+    lineage = spark.read.parquet(str(ckpt_dir))
+    assert {"partition_id", "error"} <= set(lineage.columns)
+    assert lineage.where(lineage.status == "ok").count() == 501
+    assert lineage.count() == 501
+
+    r = cli("--backend", "html")
+    assert r.returncode != 0
+    assert "markdown-only" in r.stderr

@@ -62,7 +62,8 @@ from pdf_parse_bench_spark.kernels import textnorm as tn  # noqa: E402
 from pdf_parse_bench_spark.operators import media as mediaops  # noqa: E402
 from pdf_parse_bench_spark.operators.media import media_features  # noqa: E402
 from pdf_parse_bench_spark.operators.resume import (  # noqa: E402
-    lineage_summary,
+    extract_with_lineage,
+    lineage_of,
 )
 from pdf_parse_bench_spark.streaming import sessionize, windowed_event_counts  # noqa: E402
 
@@ -191,15 +192,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _f(s, d, "golden_spans"),
     )
     def extract_lineage(s, d):
-        # r7: lineage_summary counts spans inside the kernel — identical
-        # rows to lineage_of(extract_with_lineage(...)) without shuffling
-        # every span's text through a groupBy (pinned by
-        # tests/test_resume.py::test_lineage_summary_matches_composition)
+        # the lineage row is a projection of the one row per document the
+        # kernel returns, so counting spans needs no groupBy; the spread
+        # engages every core on the single-row-group fixture scan
+        from pdf_parse_bench_spark.operators.skew import spread_for_kernel
         md = _f(s, d, "parsed_markdown")
         bp = _collect_boilerplate(md)
-        return lineage_summary(md, boilerplate=bp).select(
-            "doc_id", "status", F.col("n_spans").cast("long").alias("n_spans")
-        )
+        return (lineage_of(extract_with_lineage(spread_for_kernel(md), bp))
+                .select("doc_id", "status", "n_spans"))
     q["extract_lineage"] = extract_lineage
 
     # ---- projections / filters / sequencing over the span model ----

@@ -3,7 +3,7 @@
     spark-submit --master local-cluster[N,8,6144] \
         --py-files pdf_parse_bench_spark.zip \
         jobs/extract_job.py --input <parquet> [--replicate K] \
-        [--output <dir>] [--checkpoint <dir>]
+        [--output <dir> [--checkpoint <dir>]]
 
 Reads a parsed_markdown parquet, computes corpus boilerplate, extracts
 ordered spans (vectorized kernel in Arrow batches), optionally writes spans
@@ -30,6 +30,9 @@ def main() -> None:
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
+    if args.checkpoint and not args.output:
+        ap.error("--checkpoint needs --output (lineage is written with "
+                 "the spans)")
 
     spark = SparkSession.builder.getOrCreate()
     from pdf_parse_bench_spark.operators.extract import (

@@ -92,9 +92,11 @@ def main(argv: list[str] | None = None) -> int:
             ).first()
             judged = score_spans_judged(ext, gold)
             avg = judged.agg(F.avg("score")).first()[0]
+            # no extracted (doc_id, offset) matches golden → nothing judged
+            mean = "n/a" if avg is None else f"{avg:.3f}/10"
             print(f"exact match: {row.matched}/{row.golden} "
                   f"({row.matched / max(1, row.golden):.4f}); "
-                  f"judged mean: {avg:.3f}/10")
+                  f"judged mean: {mean}")
         elif args.cmd == "summarize":
             from pdf_parse_bench_spark.operators.aggregates import (
                 grouped_mean_scores, leaderboard, leaderboard_markdown,

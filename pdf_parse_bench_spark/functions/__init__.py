@@ -15,11 +15,6 @@ def round_half_up(col: Column, digits: int = 6) -> Column:
     return F.floor(col * scale + F.lit(0.5)) / scale
 
 
-def sql_round_half_up(expr: str, digits: int = 6) -> str:
-    scale = 10 ** digits
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"
-
-
 def epoch_seconds(col_name: str) -> Column:
     """Timezone-free whole epoch seconds for TIMESTAMP_NTZ columns (parquet
     timestamps read as NTZ). Truncates sub-second fractions — use

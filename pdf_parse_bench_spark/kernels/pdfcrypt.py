@@ -100,9 +100,8 @@ def _build_tables():
 _SBOX, _INV_SBOX, _MUL = _build_tables()
 _RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36,
          0x6C, 0xD8, 0xAB, 0x4D]
-# byte-index permutations over the 16-byte block (state byte b[4c+r])
-_SHIFT_IDX = np.array([4 * ((c + r) % 4) + r
-                       for c in range(4) for r in range(4)], dtype=np.int64)
+# InvShiftRows as a byte-index permutation of the 16-byte block (state
+# byte b[4c+r])
 _INV_SHIFT_IDX = np.array([4 * ((c - r) % 4) + r
                            for c in range(4) for r in range(4)], dtype=np.int64)
 
@@ -138,18 +137,6 @@ def _inv_mix_columns(st: np.ndarray) -> np.ndarray:
     return out.reshape(-1, 16)
 
 
-def _mix_columns(st: np.ndarray) -> np.ndarray:
-    a = st.reshape(-1, 4, 4)
-    m2, m3 = _MUL[2], _MUL[3]
-    a0, a1, a2, a3 = a[:, :, 0], a[:, :, 1], a[:, :, 2], a[:, :, 3]
-    out = np.empty_like(a)
-    out[:, :, 0] = m2[a0] ^ m3[a1] ^ a2 ^ a3
-    out[:, :, 1] = a0 ^ m2[a1] ^ m3[a2] ^ a3
-    out[:, :, 2] = a0 ^ a1 ^ m2[a2] ^ m3[a3]
-    out[:, :, 3] = m3[a0] ^ a1 ^ a2 ^ m2[a3]
-    return out.reshape(-1, 16)
-
-
 def _ecb_decrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
     """Vectorised AES InvCipher over an (N, 16) uint8 array of blocks."""
     nr = rk.shape[0] - 1
@@ -162,20 +149,6 @@ def _ecb_decrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
     st = st[:, _INV_SHIFT_IDX]
     st = _INV_SBOX[st]
     return st ^ rk[0]
-
-
-def _ecb_encrypt_blocks(blocks: np.ndarray, rk: np.ndarray) -> np.ndarray:
-    """Vectorised AES Cipher over (N, 16) blocks (generator/KDF side)."""
-    nr = rk.shape[0] - 1
-    st = blocks ^ rk[0]
-    for rnd in range(1, nr):
-        st = _SBOX[st]
-        st = st[:, _SHIFT_IDX]
-        st = _mix_columns(st)
-        st = st ^ rk[rnd]
-    st = _SBOX[st]
-    st = st[:, _SHIFT_IDX]
-    return st ^ rk[nr]
 
 
 def _build_te():

@@ -34,10 +34,13 @@ from pdf_parse_bench_spark.operators.kernel import kernel_op
 from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
 
-def compute_boilerplate(md_df: DataFrame, min_docs: int = 5) -> DataFrame:
-    """Lines that appear as the first or last non-empty line of >= min_docs
-    documents. The result is tiny and meant to be broadcast into the
-    extraction kernel.
+BOILERPLATE_MIN_DOCS = 5
+
+
+def compute_boilerplate(md_df: DataFrame) -> DataFrame:
+    """Lines that appear as the first or last non-empty line of at least
+    BOILERPLATE_MIN_DOCS documents. The result is tiny and meant to be
+    broadcast into the extraction kernel.
 
     r7 (guide §2.3 — shuffle/ship only what the decision needs): only the
     FIRST and LAST non-empty line of each doc matter, so the edge lines
@@ -63,13 +66,13 @@ def compute_boilerplate(md_df: DataFrame, min_docs: int = 5) -> DataFrame:
     return (
         edges.groupBy("line")
         .agg(F.count("*").alias("n_docs"))  # edge rows are per-doc distinct
-        .where(F.col("n_docs") >= min_docs)
+        .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
         .select("line")
     )
 
 
-def _collect_boilerplate(md_df: DataFrame, min_docs: int = 5) -> frozenset[str]:
-    return frozenset(r.line for r in compute_boilerplate(md_df, min_docs).collect())
+def _collect_boilerplate(md_df: DataFrame) -> frozenset[str]:
+    return frozenset(r.line for r in compute_boilerplate(md_df).collect())
 
 
 def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,

@@ -9,7 +9,12 @@ Design (SURVEY.md §4 "skip-existing" → anti-join):
     (left_anti) and re-runs only those — idempotent because output is
     keyed by doc_id and rewritten per doc;
   - UDFs never abort the job: per-document try/except turns failures into
-    status='error' lineage rows (X4, pipeline/pipeline.py:80-84).
+    status='error' lineage rows (X4, pipeline/pipeline.py:80-84);
+  - the kernel returns ONE row per document (status, error, spans array;
+    operators/kernel.py's fan-out convention): the lineage row is a
+    projection of it and the span rows are its array inlined in the JVM,
+    so a zero-span or failed doc needs no placeholder span and the
+    lineage needs no groupBy.
 
 The checkpoint is a parquet directory (append-only); on a real cluster it
 is an Iceberg table with `bucket(doc_id)` partitioning so the anti-join is
@@ -25,25 +30,22 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
 from pdf_parse_bench_spark.operators.kernel import kernel_op
 
-_SPAN_COLS = ["doc_id", "offset", "kind", "text", "media_ref"]
-_SENTINEL = {"offset": -1, "kind": "", "text": "", "media_ref": ""}
+STAGE = "extract"
 
 
 def _lineage_rows(doc_id: str, md: str, boilerplate: frozenset[str],
                   fail_docs: frozenset[str]) -> list[dict]:
-    """One doc's lineage rows: its spans tagged status='ok', or ONE
-    offset=-1 row — status='error' with repr(exc) when parsing raised, or
-    an ok sentinel for a zero-span doc (empty / all-boilerplate), so
-    lineage checkpoints it — otherwise pending() re-selects it forever
-    and resume never drains."""
+    """One doc's single lineage row: status='ok' with its spans — none
+    for an empty / all-boilerplate doc, which still checkpoints, so
+    pending() does not re-select it forever — or status='error' with
+    repr(exc) and no spans when parsing raised."""
     try:
         if doc_id in fail_docs:
             raise RuntimeError("injected failure")
         spans = parse_markdown(md, boilerplate)
     except Exception as exc:  # X4: isolate, never abort
-        return [{**_SENTINEL, "status": "error", "error": repr(exc)}]
-    return ([{**s, "status": "ok", "error": None} for s in spans]
-            or [{**_SENTINEL, "status": "ok", "error": None}])
+        return [{"status": "error", "error": repr(exc), "spans": []}]
+    return [{"status": "ok", "error": None, "spans": spans}]
 
 
 def extract_with_lineage(
@@ -51,78 +53,35 @@ def extract_with_lineage(
     boilerplate: frozenset[str] = frozenset(),
     fail_docs: frozenset[str] = frozenset(),
 ) -> DataFrame:
-    """Extraction that never aborts: one output row per span plus a
-    status/partition column; failed docs emit a single error row.
+    """Extraction that never aborts: one row per document with its
+    status, error and spans array (empty for a failed doc).
     `fail_docs` injects deterministic failures for resume tests.
     partition_id is read right after the map stage — no exchange in
     between, so it is the task that ran the kernel."""
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
-    spans = kernel_op(
+    docs = kernel_op(
         md_df, lambda doc_id, md: _lineage_rows(doc_id, md, *bp.value),
-        "doc_id string, offset int, kind string, text string, "
-        "media_ref string, status string, error string",
+        "doc_id string, status string, error string, spans array<struct<"
+        "offset:int, kind:string, text:string, media_ref:string>>",
         args=["doc_id", "markdown"])
-    return spans.select(*_SPAN_COLS,
-                        F.spark_partition_id().alias("partition_id"),
-                        "status", "error")
+    return docs.select("doc_id",
+                       F.spark_partition_id().alias("partition_id"),
+                       "status", "error", "spans")
 
 
 def ok_spans(result: DataFrame) -> DataFrame:
-    """The span rows of a lineage-annotated result: error rows and
-    zero-span sentinels (offset=-1) are lineage only, never output."""
-    return (result.where((F.col("status") == "ok") & (F.col("offset") >= 0))
-            .select(*_SPAN_COLS))
+    """The span rows of a lineage-annotated result, fanned out in the
+    JVM; failed docs are lineage only, never output."""
+    return (result.where(F.col("status") == "ok")
+            .select("doc_id", F.inline("spans")))
 
 
-def lineage_of(result: DataFrame, stage: str = "extract") -> DataFrame:
-    """Collapse a lineage-annotated result to one row per doc (the
-    checkpoint/metrics table, X5/X7)."""
-    # severity as an explicit int (error=0 < ok=1), not an accident of
-    # string collation: a doc with ANY error row checkpoints as error
-    return result.groupBy("doc_id").agg(
-        F.lit(stage).alias("stage"),
-        F.max("partition_id").alias("partition_id"),
-        F.when(F.min(F.when(F.col("status") == "error", 0).otherwise(1))
-               == 0, "error").otherwise("ok").alias("status"),
-        F.max("error").alias("error"),
-        F.sum(F.when((F.col("status") == "ok") & (F.col("offset") >= 0), 1)
-              .otherwise(0)).alias("n_spans"),  # sentinels don't count
-    )
-
-
-def lineage_summary(
-    md_df: DataFrame,
-    boilerplate: frozenset[str] = frozenset(),
-    fail_docs: frozenset[str] = frozenset(),
-    stage: str = "extract",
-) -> DataFrame:
-    """One lineage row per document WITHOUT materializing span rows —
-    row-identical to ``lineage_of(extract_with_lineage(...))`` because a
-    document lives in exactly one input row, so the per-doc aggregates
-    (max partition_id, any-error status, sentinel-excluded span count)
-    collapse to values the kernel knows in place. r7 (guide §2.3
-    "aggregate before you shuffle"): the audit path this feeds only needs
-    (doc_id, status, n_spans), and the r6 composition shuffled every
-    extracted span's text through a groupBy just to count it. Input is
-    spread so the parse engages every core on single-row-group layouts
-    (counts only downstream — no order-sensitive float aggregation)."""
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
-    bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
-
-    def summary(doc_id, md):
-        rows = _lineage_rows(doc_id, md, *bp.value)
-        return [{"status": rows[0]["status"], "error": rows[0]["error"],
-                 "n_spans": sum(r["offset"] >= 0 for r in rows)}]
-
-    docs = kernel_op(spread_for_kernel(md_df.select("doc_id", "markdown")),
-                     summary,
-                     "doc_id string, status string, error string, "
-                     "n_spans long",
-                     args=["doc_id", "markdown"])
-    return docs.select("doc_id", F.lit(stage).alias("stage"),
-                       F.spark_partition_id().alias("partition_id"),
-                       "status", "error", "n_spans")
+def lineage_of(result: DataFrame) -> DataFrame:
+    """The checkpoint/metrics table (X5/X7): a projection of the one
+    row per document, so no shuffle."""
+    return result.select(
+        "doc_id", F.lit(STAGE).alias("stage"), "partition_id", "status",
+        "error", F.size("spans").cast("long").alias("n_spans"))
 
 
 def pending(inputs: DataFrame, checkpoint_dir: str) -> DataFrame:

@@ -20,19 +20,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def rebalance_by_size(df: DataFrame, size_col: Column,
-                      num_partitions: int | None = None,
-                      big_quantile: float = 0.99) -> DataFrame:
+BIG_QUANTILE = 0.99
+
+
+def rebalance_by_size(df: DataFrame, size_col: Column) -> DataFrame:
     """Repartition so pandas-UDF tasks get balanced work.
 
-    Normal rows: uniform hash spread over `num_partitions`. Rows above the
-    `big_quantile` size threshold: spread over a dedicated extra band of
-    partitions (one straggler cannot hide a thousand small docs behind it,
-    and AQE cannot split a running Python task).
+    Normal rows: uniform hash spread over 2 x defaultParallelism
+    partitions. Rows above the BIG_QUANTILE size threshold: spread over a
+    dedicated extra band of partitions (one straggler cannot hide a
+    thousand small docs behind it, and AQE cannot split a running Python
+    task).
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+    num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
     sized = df.withColumn("_size", size_col)
     # r7: threshold from a BOUNDED-PREFIX sample (limit), not a fraction
     # sample. sample(0.01) still scans every row to flip its coin — at
@@ -45,7 +45,7 @@ def rebalance_by_size(df: DataFrame, size_col: Column,
     # of every corpus here); a size-sorted adversarial layout would only
     # skew the BALANCE bands, never results.
     row = (sized.select("_size").limit(8192)
-           .agg(F.percentile_approx("_size", big_quantile, 1000)
+           .agg(F.percentile_approx("_size", BIG_QUANTILE, 1000)
                 .alias("t")).first())
     threshold = float(row["t"]) if row and row["t"] is not None \
         else float("inf")

@@ -16,13 +16,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def assert_pushed_filters(df: DataFrame, fragment: str) -> None:
-    plan = formatted_plan(df)
-    assert "PushedFilters: [" in plan and fragment in plan, (
-        f"expected pushed filter containing {fragment!r};\n{plan}"
-    )
-
-
 def assert_read_schema_only(df: DataFrame, columns: set[str]) -> None:
     """The parquet ReadSchema must contain exactly these columns."""
     plan = formatted_plan(df)

@@ -134,15 +134,3 @@ EXTRACTION_SCORES_SCHEMA = T.StructType(
         T.StructField("errors", T.ArrayType(T.StringType(), False), False),
     ]
 )
-
-# Per-partition lineage rows (north_rule: checkpointed lineage + metrics).
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # 'ok' | 'error'
-        T.StructField("error", T.StringType(), True),
-        T.StructField("n_spans", T.IntegerType(), False),
-    ]
-)

@@ -13,11 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1/S4: parquet scan — Catalyst column pruning + predicate pushdown
@@ -42,7 +37,8 @@ def read_pdf_corpus(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_spans(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5/S6 sink. Iceberg form: df.writeTo(tbl).overwritePartitions() with
-    PARTITIONED BY (bucket(256, doc_id)) for the 10^12-doc layout."""
-    df.write.mode(mode).parquet(path)
+def write_spans(df: DataFrame, path: str) -> None:
+    """S5/S6 sink (overwrites `path`). Iceberg form:
+    df.writeTo(tbl).overwritePartitions() with PARTITIONED BY
+    (bucket(256, doc_id)) for the 10^12-doc layout."""
+    df.write.mode("overwrite").parquet(path)

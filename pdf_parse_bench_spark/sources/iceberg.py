@@ -42,16 +42,6 @@ def documents_ddl(table: str = "db.documents") -> str:
     """
 
 
-def spans_ddl(table: str = "db.extractions") -> str:
-    return f"""
-        CREATE TABLE IF NOT EXISTS {table} (
-            doc_id STRING NOT NULL, offset INT NOT NULL, kind STRING NOT NULL,
-            text STRING NOT NULL, media_ref STRING NOT NULL
-        ) USING iceberg
-        PARTITIONED BY (bucket({N_BUCKETS}, doc_id))
-    """
-
-
 def write_spans(df: DataFrame, target: str) -> None:
     """Iceberg: idempotent partition overwrite; parquet fallback otherwise.
 

@@ -9,6 +9,7 @@ from pdf_parse_bench_spark.operators.extract import _collect_boilerplate
 from pdf_parse_bench_spark.operators.resume import (
     extract_with_lineage,
     lineage_of,
+    ok_spans,
     pending,
     read_resumed,
     run_resumable,
@@ -61,8 +62,8 @@ def test_resume_after_partial_failure(spark, fx_smoke, tmp_path):
 
 def test_zero_span_docs_drain(spark, fx_smoke, tmp_path):
     """A doc whose markdown parses to zero spans must still checkpoint
-    (ok sentinel) so the pending set drains; the sentinel never reaches
-    the span output."""
+    (one ok lineage row, n_spans=0) so the pending set drains; it never
+    reaches the span output."""
     md = spark.createDataFrame(
         [("zempty", ""), ("zreal", "Real content line.")],
         "doc_id string, markdown string",
@@ -102,18 +103,42 @@ def test_lineage_partition_metrics(spark, fx_smoke):
     assert all(r.stage == "extract" for r in rows)
 
 
-def test_lineage_summary_matches_composition(spark, fx_smoke):
-    """r7 pin: the fused one-row-per-doc lineage_summary must be
-    row-identical to lineage_of(extract_with_lineage(...)) — including an
-    injected failure and a zero-span (all-boilerplate) doc."""
-    from pdf_parse_bench_spark.operators.resume import lineage_summary
+def test_one_lineage_row_per_doc(spark, fx_smoke, tmp_path):
+    """extract_with_lineage returns exactly one row per input document —
+    an injected failure (error, no spans) and an empty-markdown doc (ok,
+    no spans) included — lineage_of is a projection of it (no Exchange),
+    and run_resumable's checkpoint and span parquet keep their schemas."""
+    in_path = str(tmp_path / "in")
+    _md(spark, fx_smoke).limit(25).union(spark.createDataFrame(
+        [("zempty", "")], "doc_id string, markdown string")
+    ).write.parquet(in_path)
+    md = spark.read.parquet(in_path)  # a plain scan: no Exchange below
+    fail = frozenset(r.doc_id for r in md.limit(1).collect())
+    res = extract_with_lineage(md, fail_docs=fail)
+    assert res.count() == 26
+    assert res.select("doc_id").distinct().count() == 26
 
-    md = _md(spark, fx_smoke).limit(25)
-    fail = frozenset(r.doc_id for r in md.limit(2).collect())
-    cols = ["doc_id", "stage", "status", "error", "n_spans"]
-    fused = {tuple(r) for r in
-             lineage_summary(md, fail_docs=fail).select(*cols).collect()}
-    composed = {tuple(r) for r in
-                lineage_of(extract_with_lineage(md, fail_docs=fail))
-                .select(*cols).collect()}
-    assert fused == composed and len(fused) == 25
+    lin = lineage_of(res)
+    plan = lin._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    rows = {r.doc_id: r for r in lin.collect()}
+    assert len(rows) == 26
+    assert all(r.stage == "extract" for r in rows.values())
+    (failed,) = fail
+    assert rows[failed].status == "error" and rows[failed].n_spans == 0
+    assert "injected failure" in rows[failed].error
+    assert (rows["zempty"].status, rows["zempty"].error,
+            rows["zempty"].n_spans) == ("ok", None, 0)
+    # n_spans counts exactly the span rows each doc writes
+    written = ok_spans(res).groupBy("doc_id").count().collect()
+    assert ({r.doc_id: r["count"] for r in written}
+            == {d: r.n_spans for d, r in rows.items() if r.n_spans})
+
+    out, ckpt = str(tmp_path / "spans"), str(tmp_path / "ckpt")
+    run_resumable(md, out, ckpt, fail_docs=fail)
+    assert spark.read.parquet(ckpt).schema.simpleString() == (
+        "struct<doc_id:string,stage:string,partition_id:int,status:string,"
+        "error:string,n_spans:bigint>")
+    assert spark.read.parquet(out).schema.simpleString() == (
+        "struct<doc_id:string,offset:int,kind:string,text:string,"
+        "media_ref:string>")

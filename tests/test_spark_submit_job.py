@@ -6,9 +6,9 @@ empty-markdown document, with output + checkpoint sinks.
   and submits jobs/extract_job.py;
 - the CLI: `python -m pdf_parse_bench_spark extract --checkpoint`.
 
-Both verify the written spans equal golden: the empty doc's zero-span
-lineage sentinel (offset=-1) is checkpointed but never written as a
-span."""
+Both verify the written spans equal golden: the empty doc checkpoints
+as one ok lineage row with n_spans=0 and writes no span row. The CLI
+`score` and the job's argument checks run in subprocesses too."""
 
 from __future__ import annotations
 
@@ -46,6 +46,19 @@ def _assert_golden_spans(spark, fx_smoke, out_dir):
     )
     assert got.count() == want.count()
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def _run_python(*args):
+    """`python ARGS` from the repo root with the package importable."""
+    env = {**os.environ,
+           "PYTHONPATH": os.pathsep.join(
+               filter(None, [str(REPO), os.environ.get("PYTHONPATH")]))}
+    return subprocess.run([sys.executable, *args], capture_output=True,
+                          text=True, timeout=420, cwd=REPO, env=env)
+
+
+def _run_module(*args):
+    return _run_python("-m", "pdf_parse_bench_spark", *args)
 
 
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")
@@ -90,16 +103,11 @@ def test_cli_extract_checkpoint_writes_lineage(spark, fx_smoke, tmp_path):
     in_path = _corpus_with_empty_doc(fx_smoke, tmp_path)
     out_dir = tmp_path / "spans"
     ckpt_dir = tmp_path / "ckpt"
-    env = {**os.environ,
-           "PYTHONPATH": os.pathsep.join(
-               filter(None, [str(REPO), os.environ.get("PYTHONPATH")]))}
 
     def cli(*args):
-        return subprocess.run(
-            [sys.executable, "-m", "pdf_parse_bench_spark", "extract",
-             "--input", str(in_path), "--output", str(out_dir),
-             "--checkpoint", str(ckpt_dir), *args],
-            capture_output=True, text=True, timeout=420, cwd=REPO, env=env)
+        return _run_module("extract", "--input", str(in_path),
+                           "--output", str(out_dir),
+                           "--checkpoint", str(ckpt_dir), *args)
 
     r = cli("--backend", "markdown")
     assert r.returncode == 0, r.stderr[-2000:]
@@ -112,3 +120,36 @@ def test_cli_extract_checkpoint_writes_lineage(spark, fx_smoke, tmp_path):
     r = cli("--backend", "html")
     assert r.returncode != 0
     assert "markdown-only" in r.stderr
+
+
+def test_extract_job_rejects_checkpoint_without_output(fx_smoke, tmp_path):
+    """--checkpoint alone would count spans and write no lineage: the job
+    refuses it before Spark starts."""
+    ckpt_dir = tmp_path / "ckpt"
+    r = _run_python(str(REPO / "jobs" / "extract_job.py"),
+                    "--input", str(fx_smoke / "parsed_markdown.parquet"),
+                    "--checkpoint", str(ckpt_dir), "--runs", "1")
+    assert r.returncode != 0
+    assert "--checkpoint needs --output" in r.stderr
+    assert not ckpt_dir.exists()
+
+
+def test_cli_score_without_overlap(tmp_path):
+    """An extraction sharing no document with golden scores 0 exact
+    matches and prints 'n/a' for the judged mean (nothing was judged)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    golden = tmp_path / "golden.parquet"
+    extracted = tmp_path / "extracted.parquet"
+    schema = pa.schema([("doc_id", pa.string()), ("offset", pa.int32()),
+                        ("kind", pa.string()), ("text", pa.string()),
+                        ("media_ref", pa.string())])
+    for path, doc in ((golden, "gold-doc"), (extracted, "other-doc")):
+        pq.write_table(pa.table({"doc_id": [doc], "offset": [0],
+                                 "kind": ["text"], "text": ["Hello."],
+                                 "media_ref": [""]}, schema=schema), path)
+    r = _run_module("score", "--extracted", str(extracted),
+                    "--golden", str(golden), "--cores", "1")
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "exact match: 0/1" in r.stdout
+    assert "judged mean: n/a" in r.stdout

@@ -649,9 +649,10 @@ def _lsh_pairs_sql() -> str:
     )
 
 
-def _dedup_clusters_sql(threshold: float = 0.5) -> str:
-    """Connected components of the Jaccard>=threshold graph via a recursive
-    CTE (min-label propagation) — the oracle twin of dd.dedup_clusters."""
+def _dedup_clusters_sql() -> str:
+    """Connected components of the Jaccard>=dd.CLUSTER_JACCARD graph via a
+    recursive CTE (min-label propagation) — the oracle twin of
+    dd.dedup_clusters."""
     jac = ("floor((CAST(inter AS DOUBLE) / (la + lb - inter)) * 1000000 + 0.5)"
            " / 1000000")
     return (
@@ -665,7 +666,7 @@ def _dedup_clusters_sql(threshold: float = 0.5) -> str:
         "len(x.sh) AS la, len(y.sh) AS lb "
         "FROM cands JOIN dsh x ON cands.doc_a = x.doc_id "
         "JOIN dsh y ON cands.doc_b = y.doc_id) "
-        f"WHERE {jac} >= {threshold}), "
+        f"WHERE {jac} >= {dd.CLUSTER_JACCARD}), "
         "sym AS (SELECT doc_a, doc_b FROM edges "
         "UNION ALL SELECT doc_b AS doc_a, doc_a AS doc_b FROM edges), "
         "comp(doc_id, label) AS ("

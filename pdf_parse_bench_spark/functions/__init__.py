@@ -101,10 +101,10 @@ def preprocess_unicode_expr(col: str = "text") -> Column:
 # complex (reference tags GT tables with this label, synth_pdf/content.py:
 # 78-86; consumed by eval/llm_judge.py:45 — fixture twin fixtures.py:118).
 # Pure codegen. DuckDB twin: len(string_split(text, '\\')) - 2.
-def table_complexity_expr(kind_col: str = "kind", text_col: str = "text") -> Column:
-    rows = F.size(F.split(F.col(text_col), r"\\\\")) - 2
+def table_complexity_expr() -> Column:
+    rows = F.size(F.split(F.col("text"), r"\\\\")) - 2
     return F.when(
-        F.col(kind_col) == "table",
+        F.col("kind") == "table",
         F.when(rows <= 3, F.lit("simple"))
         .when(rows <= 6, F.lit("moderate"))
         .otherwise(F.lit("complex")),

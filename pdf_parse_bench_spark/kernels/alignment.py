@@ -87,13 +87,8 @@ def _window_scan(needle_norm: str, hay_norm: str) -> tuple[int, int]:
     return best_start, best_dist
 
 
-def find_original_segment(
-    llm_segment: str,
-    markdown_content: str,
-    edit_distance_ratio: float = EDIT_DISTANCE_RATIO,
-    search_radius: int = SEARCH_RADIUS,
-    bonus_fn=formula_delimiter_bonus,
-) -> str | None:
+def find_original_segment(llm_segment: str,
+                          markdown_content: str) -> str | None:
     """Reference J2 (segment_extractor.py:628-711): locate the original
     (unnormalized) segment in markdown; None when nothing within tolerance."""
     needle = unescape_control(llm_segment)
@@ -109,23 +104,24 @@ def find_original_segment(
             orig_idx.append(i)
     hay_norm = "".join(hay_norm_chars)
     start_n, dist = _window_scan(needle_norm, hay_norm)
-    if dist > max(1, int(edit_distance_ratio * len(needle_norm))):
+    if dist > max(1, int(EDIT_DISTANCE_RATIO * len(needle_norm))):
         return None
     end_n = min(start_n + len(needle_norm), len(hay_norm)) - 1
     o_start = orig_idx[start_n]
     o_end = orig_idx[end_n] + 1
     # boundary refinement ±radius maximizing delimiter bonus − extra chars
     best, best_score = None, -1e9
-    for ds in range(-search_radius, search_radius + 1):
+    for ds in range(-SEARCH_RADIUS, SEARCH_RADIUS + 1):
         s = o_start + ds
         if s < 0 or s >= len(markdown_content):
             continue
-        for de in range(-search_radius, search_radius + 1):
+        for de in range(-SEARCH_RADIUS, SEARCH_RADIUS + 1):
             e = o_end + de
             if e <= s or e > len(markdown_content):
                 continue
             cand = markdown_content[s:e]
-            score = bonus_fn(cand) - 0.05 * (abs(ds) + abs(de))
+            score = (formula_delimiter_bonus(cand)
+                     - 0.05 * (abs(ds) + abs(de)))
             if score > best_score:
                 best_score, best = score, cand.strip()
     return best

@@ -27,11 +27,10 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF))
 
 
-def encode_png(arr: np.ndarray, filter_mode: str = "mixed") -> bytes:
-    """Encode a (h, w) gray or (h, w, 3|4) color uint8 array.
-
-    filter_mode 'mixed' cycles None/Sub/Up per row (so decoders must handle
-    real filter variety); 'none' emits filter 0 only."""
+def encode_png(arr: np.ndarray) -> bytes:
+    """Encode a (h, w) gray or (h, w, 3|4) color uint8 array. Row
+    filters cycle None/Sub/Up (so decoders must handle real filter
+    variety)."""
     arr = np.asarray(arr, dtype=np.uint8)
     if arr.ndim == 2:
         color_type = 0
@@ -48,7 +47,7 @@ def encode_png(arr: np.ndarray, filter_mode: str = "mixed") -> bytes:
     ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
     # whole-image vectorized filtering (uint8 wrap-around == mod 256);
     # byte-identical to the old per-row loop, ~6 array ops per image
-    ft = (np.arange(h) % 3) if filter_mode == "mixed" else np.zeros(h, np.int64)
+    ft = np.arange(h) % 3
     flat = data.reshape(h, w * ch)
     body = flat.copy()
     sub_rows = ft == 1

@@ -54,33 +54,33 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
 _MINHASH_MOD = 4294967296  # 2^32
 
 
-def _doc_shingle_ab(text: str, n: int = SHINGLE_N):
+def _doc_shingle_ab(text: str):
     """(a, b) int64 arrays — the two big-endian 32-bit halves of
-    md5(shingle) for every word n-gram of the doc (whole text as one
-    shingle when shorter than n words), byte-identical to the JVM
-    conv(substring(md5(shingle), 1|9, 8), 16, 10) pair."""
+    md5(shingle) for every word SHINGLE_N-gram of the doc (whole text as
+    one shingle when shorter than SHINGLE_N words), byte-identical to the
+    JVM conv(substring(md5(shingle), 1|9, 8), 16, 10) pair."""
     import hashlib
 
     import numpy as np
 
     buf = b"".join(hashlib.md5(s.encode()).digest()[:8]
-                   for s in word_grams(doc_words(text), n))
+                   for s in word_grams(doc_words(text), SHINGLE_N))
     ab = np.frombuffer(buf, dtype=">u4").astype(np.int64).reshape(-1, 2)
     return ab[:, 0], ab[:, 1]
 
 
-def _minhash_signature(text: str, k: int):
+def _minhash_signature(text: str):
     """The doc's K minhash values (int64 array): h_i = (a + i·b) mod 2^32
     over its shingles' md5 halves, minimized per i."""
     import numpy as np
 
     a, b = _doc_shingle_ab(text)
-    idx = np.arange(k, dtype=np.int64)
+    idx = np.arange(MINHASH_K, dtype=np.int64)
     return ((a[:, None] + idx[None, :] * b[:, None])
             % _MINHASH_MOD).min(axis=0)
 
 
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """K minhash values per doc via Kirsch-Mitzenmacher double hashing:
     ONE md5 per shingle yields two 32-bit halves (a, b); h_i = (a + i·b)
     mod 2^32 gives K pairwise-distinct hash functions with the same LSH
@@ -97,11 +97,11 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     and the exchange."""
     return text_kernel(
         docs,
-        lambda text: [{"signature": _minhash_signature(text, k).tolist()}],
+        lambda text: [{"signature": _minhash_signature(text).tolist()}],
         "signature array<long>")
 
 
-def _minhash_band_rows(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def _minhash_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) rows — md5 over the '|'-joined band slice
     of the minhash signature, identical strings to the r6 JVM
     md5(concat_ws('|', ...)) band keys. One kernel pass, no exchange;
@@ -110,7 +110,7 @@ def _minhash_band_rows(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     import hashlib
 
     def band_keys(text):
-        sig = _minhash_signature(text, k)
+        sig = _minhash_signature(text)
         return [{"band_key": [
             hashlib.md5("|".join(
                 str(v) for v in sig[band * LSH_ROWS:(band + 1) * LSH_ROWS]
@@ -173,7 +173,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     return j
 
 
-def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash over word unigrams. Bit b's vote uses the MSB of hex
     nibble b of md5(word) (nibble >= '8'), so the identical expression runs
     in ANSI SQL."""
@@ -184,14 +184,14 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
             F.sum(
                 F.when(F.substring("h", b + 1, 1) >= "8", 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     sim = votes.select(
         "doc_id",
         sum(
             F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ).alias("simhash"),
     )
     return sim
@@ -200,11 +200,12 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
 EMB_LSH_PLANES = 16
 EMB_LSH_ROWS = 4  # bits per band → EMB_LSH_PLANES/EMB_LSH_ROWS bands
 
+CLUSTER_JACCARD = 0.5  # shingle Jaccard at/above which dedup_clusters links
 
-def dedup_clusters(docs: DataFrame, threshold: float = 0.5,
-                   max_iter: int = 20) -> DataFrame:
+
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """Connected components over the verified near-dup graph: every doc gets
-    cluster_id = min doc_id reachable through Jaccard>=threshold edges
+    cluster_id = min doc_id reachable through Jaccard>=CLUSTER_JACCARD edges
     (singletons cluster with themselves) — the canonical-doc selection step
     a dedup pipeline runs after pair generation.
 
@@ -213,15 +214,14 @@ def dedup_clusters(docs: DataFrame, threshold: float = 0.5,
     stop when no label changed. A pointer-doubling shortcut
     (label := label-of-label) after each propagation makes rounds needed
     O(log diameter) instead of O(diameter), so a pathological long duplicate
-    chain converges inside max_iter; every round is one distributed
-    join + groupBy — no driver-side graph. Lineage is truncated per round
-    via localCheckpoint so plans don't grow with iterations. Raises
-    RuntimeError if max_iter is exhausted before convergence — silently
-    returning partially-propagated labels would split a long chain into
-    multiple clusters."""
-    edges = ngram_jaccard_pairs(docs, threshold).select("doc_a", "doc_b")
-    labels, _rounds = propagate_min_labels(
-        docs.select("doc_id"), edges, max_iter=max_iter)
+    chain converges inside propagate_min_labels' max_iter; every round is
+    one distributed join + groupBy — no driver-side graph. Lineage is
+    truncated per round via localCheckpoint so plans don't grow with
+    iterations. Raises RuntimeError if max_iter is exhausted before
+    convergence — silently returning partially-propagated labels would
+    split a long chain into multiple clusters."""
+    edges = ngram_jaccard_pairs(docs, CLUSTER_JACCARD).select("doc_a", "doc_b")
+    labels, _rounds = propagate_min_labels(docs.select("doc_id"), edges)
     return labels
 
 
@@ -341,8 +341,7 @@ def simhash64_blocks(docs: DataFrame) -> DataFrame:
     return text_kernel(docs, blocks, "b0 int, b1 int, b2 int, b3 int")
 
 
-def simhash_near_dups(docs: DataFrame,
-                      max_hamming: int = SIMHASH64_MAX_HAMMING) -> DataFrame:
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
     """Hamming-<=3 neighbor pairs over 64-bit SimHash signatures without an
     all-pairs join (Manku et al., WWW'07 block-permutation trick): two
     signatures within Hamming distance 3 must agree EXACTLY on at least one
@@ -353,7 +352,7 @@ def simhash_near_dups(docs: DataFrame,
     r7 (guide §2.3/§2.4): each band row CARRIES the four signature blocks
     (8 bytes — cheaper than a join), so the Hamming popcount evaluates
     inline in the self-join output and the survivors-only distinct runs on
-    the ~0.1% of candidates that pass `<= max_hamming`. The r6 plan
+    the ~0.1% of candidates that pass `<= SIMHASH64_MAX_HAMMING`. The r6 plan
     distinct-ed the RAW candidate pair space first (19M rows at sf1.0 —
     block values of short docs collide heavily) and then re-joined the
     signature table twice; duplicates of a surviving pair carry identical
@@ -378,7 +377,7 @@ def simhash_near_dups(docs: DataFrame,
         .select(F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"),
                 hamming.cast("long").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH64_MAX_HAMMING)
         .distinct()
     )
 
@@ -386,14 +385,13 @@ def simhash_near_dups(docs: DataFrame,
 EMB_PAIR_BLOCK = 2048  # row-block size for the within-bucket pair matrix
 
 
-def embedding_near_dups(emb: DataFrame, threshold: float = 0.4,
-                        n_planes: int = EMB_LSH_PLANES,
-                        band_rows: int = EMB_LSH_ROWS) -> DataFrame:
+def embedding_near_dups(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded random-projection LSH
     (the MinHash-banding construction applied to sign bits): each vector
-    gets a P-bit signature from P seeded random hyperplanes; the signature
-    splits into P/R bands of R bits; vectors sharing any (band, band_key)
-    become candidates, verified by exact float64 cosine >= threshold.
+    gets a P-bit signature from P = EMB_LSH_PLANES seeded random
+    hyperplanes; the signature splits into P/R bands of R = EMB_LSH_ROWS
+    bits; vectors sharing any (band, band_key) become candidates,
+    verified by exact float64 cosine >= threshold.
 
     Scale shape: verification runs per (band, band_key) bucket —
     2^R * n_bands buckets — never corpus-quadratic; recall rises with more
@@ -420,10 +418,10 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.4,
     import pandas as pd
     from pdf_parse_bench_spark.operators.similarity import hyperplanes
 
-    pl = np.array(hyperplanes(n_planes), dtype=np.float64)  # (P, dim)
-    n_bands = n_planes // band_rows
-    mask = (1 << band_rows) - 1
-    w_p = 1 << np.arange(n_planes, dtype=np.int64)
+    pl = np.array(hyperplanes(EMB_LSH_PLANES), dtype=np.float64)  # (P, dim)
+    n_bands = EMB_LSH_PLANES // EMB_LSH_ROWS
+    mask = (1 << EMB_LSH_ROWS) - 1
+    w_p = 1 << np.arange(EMB_LSH_PLANES, dtype=np.int64)
 
     def explode_bands(batches):
         for pdf in batches:
@@ -442,7 +440,8 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.4,
                 "vec_id": np.tile(pdf["vec_id"].to_numpy(), n_bands),
                 "band": np.repeat(np.arange(n_bands, dtype=np.int32), n),
                 "band_key": np.concatenate([
-                    ((sig >> (b * band_rows)) & mask) for b in range(n_bands)
+                    ((sig >> (b * EMB_LSH_ROWS)) & mask)
+                    for b in range(n_bands)
                 ]).astype(np.int32),
                 "v": list(mat) * n_bands,
             })
@@ -497,14 +496,13 @@ NGRAM_DUP_MAX_DF = 20  # shingles in more docs than this are boilerplate, not du
 NGRAM_DUP_MIN_SHARED = 3
 
 
-def duplicate_ngram_pairs(docs: DataFrame, n: int = NGRAM_DUP_N,
-                          max_df: int = NGRAM_DUP_MAX_DF,
-                          min_shared: int = NGRAM_DUP_MIN_SHARED) -> DataFrame:
+def duplicate_ngram_pairs(docs: DataFrame) -> DataFrame:
     """Exact-substring duplicate detection (the Lee et al. "Deduplicating
     Training Data Makes Language Models Better" map-reduce shape): every
     doc emits its distinct word-8-gram shingle hashes; shingles appearing
-    in 2..max_df docs (rarer than boilerplate) vote for doc pairs; pairs
-    sharing >= min_shared rare shingles are exact-substring duplicates.
+    in 2..NGRAM_DUP_MAX_DF docs (rarer than boilerplate) vote for doc
+    pairs; pairs sharing >= NGRAM_DUP_MIN_SHARED rare shingles are
+    exact-substring duplicates.
 
     Scale shape: per-doc DISTINCT shingle digests come out of one
     Arrow-batched kernel (r7, guide §4.2 — hashlib md5 bytes ARE the
@@ -515,10 +513,10 @@ def duplicate_ngram_pairs(docs: DataFrame, n: int = NGRAM_DUP_N,
     self-join (so ubiquitous boilerplate shingles can never explode the
     pair space), and the self-join reuses the shingle exchange. Output
     is (doc_a, doc_b, n_shared) — tiny relative to the corpus."""
-    g = ngram_digests(docs, n)
+    g = ngram_digests(docs, NGRAM_DUP_N)
     rare = (g.groupBy("sh")
             .agg(F.count("*").alias("df"))  # kernel rows are per-doc distinct
-            .where((F.col("df") >= 2) & (F.col("df") <= max_df))
+            .where((F.col("df") >= 2) & (F.col("df") <= NGRAM_DUP_MAX_DF))
             .select("sh"))
     gr = g.join(rare, "sh")
     pairs = (
@@ -528,6 +526,6 @@ def duplicate_ngram_pairs(docs: DataFrame, n: int = NGRAM_DUP_N,
         .groupBy(F.col("a.doc_id").alias("doc_a"),
                  F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= NGRAM_DUP_MIN_SHARED)
     )
     return pairs

@@ -84,17 +84,19 @@ def lineage_of(result: DataFrame) -> DataFrame:
         "error", F.size("spans").cast("long").alias("n_spans"))
 
 
+def _ok_doc_ids(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
+    """The documents the checkpoint records as ok, one row each."""
+    return (spark.read.parquet(checkpoint_dir)
+            .where(F.col("status") == "ok")
+            .select("doc_id")
+            .distinct())
+
+
 def pending(inputs: DataFrame, checkpoint_dir: str) -> DataFrame:
     """Inputs not yet successfully checkpointed (P5: the anti-join)."""
-    spark = inputs.sparkSession
     if not _has_data(checkpoint_dir):
         return inputs
-    done = (
-        spark.read.parquet(checkpoint_dir)
-        .where(F.col("status") == "ok")
-        .select("doc_id")
-        .distinct()
-    )
+    done = _ok_doc_ids(inputs.sparkSession, checkpoint_dir)
     return inputs.join(done, "doc_id", "left_anti")
 
 
@@ -124,13 +126,7 @@ def read_resumed(spark: SparkSession, out_dir: str,
     (doc_id, offset) key — a full-row distinct would key the exchange on
     long text payloads)."""
     spans = spark.read.parquet(out_dir)
-    ok = (
-        spark.read.parquet(checkpoint_dir)
-        .where(F.col("status") == "ok")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("_n"))
-        .select("doc_id")
-    )
+    ok = _ok_doc_ids(spark, checkpoint_dir)
     w = Window.partitionBy("doc_id", "offset").orderBy(F.lit(1))
     return (
         spans.join(ok, "doc_id", "inner")

@@ -23,14 +23,13 @@ EMB_DIM = 64  # testdata embeddings.parquet: array<float>[64]
 ANN_PLANES = 8  # 2^8 buckets; raise with corpus size (scan fraction ~ (P+1)/2^P)
 
 
-def hyperplanes(n_planes: int, dim: int = EMB_DIM,
-                seed: int = LSH_SEED) -> list[list[float]]:
+def hyperplanes(n_planes: int) -> list[list[float]]:
     """Seeded random Gaussian hyperplanes for sign-LSH, entries rounded to
     6 dp so the identical literals embed in the DuckDB oracle SQL. Signs of
     random projections (not raw dims) spread mass evenly across 2^P buckets
     regardless of per-dimension bias."""
-    rng = np.random.default_rng([seed, n_planes, dim])
-    return [[round(float(x), 6) for x in rng.standard_normal(dim)]
+    rng = np.random.default_rng([LSH_SEED, n_planes, EMB_DIM])
+    return [[round(float(x), 6) for x in rng.standard_normal(EMB_DIM)]
             for _ in range(n_planes)]
 
 
@@ -48,11 +47,11 @@ def sign_bucket(vcol, planes: list[list[float]]):
     return sum(bits).cast("int")
 
 
-def _as_double(col: str = "embedding"):
-    return F.transform(col, lambda x: x.cast("double"))
+def _as_double():
+    return F.transform("embedding", lambda x: x.cast("double"))
 
 
-def _with_norm(df: DataFrame, out: str = "v") -> DataFrame:
+def _with_norm(df: DataFrame) -> DataFrame:
     from pdf_parse_bench_spark.operators.skew import (
         HEAVY_KERNEL_MIN_BYTES,
         spread_for_kernel,
@@ -65,9 +64,9 @@ def _with_norm(df: DataFrame, out: str = "v") -> DataFrame:
         df.select("vec_id", "embedding"), key="vec_id",
         min_bytes=HEAVY_KERNEL_MIN_BYTES,
     ).select(
-        "vec_id", _as_double().alias(out)
+        "vec_id", _as_double().alias("v")
     ).withColumn(
-        "norm", F.sqrt(F.aggregate(out, F.lit(0.0), lambda a, x: a + x * x))
+        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
     )
 
 
@@ -203,22 +202,21 @@ def _sig_words_udf(bits: int):
     return _word(0), _word(32)
 
 
-def sketch_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
-                bits: int = SKETCH_BITS,
-                ham_threshold: int = SKETCH_HAM_T) -> DataFrame:
+def sketch_topk(emb: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Committed ANN default: sign-sketch + fixed-threshold exact rerank.
 
-    Every vector gets a `bits`-wide sign-LSH signature (seeded hyperplanes,
-    packed 32 bits/word); a query accepts corpus rows with Hamming distance
-    `<= ham_threshold` on the signature (bit_count(xor) — a pure-codegen
-    Filter, no shuffle, no window) and exactly re-scores only those — at
-    T=27 a measured 15-20% of the corpus, recall@10 0.70-0.82 (see
-    SKETCH_HAM_T calibration note; lsh_recall is the instrument to re-pick
-    T when the corpus geometry changes). Chosen over bucket multi-probe
-    because on an isotropic corpus (true neighbors at ~75°) bucket
-    collision probability collapses (measured 0.12–0.38 recall; see
-    lsh_recall docstring) while the Hamming estimate of angle has ~3.5° std
-    at 64 bits — enough to separate the neighbor/bulk gap.
+    Every vector gets a SKETCH_BITS-wide sign-LSH signature (seeded
+    hyperplanes, packed 32 bits/word); a query accepts corpus rows with
+    Hamming distance `<= SKETCH_HAM_T` on the signature (bit_count(xor) —
+    a pure-codegen Filter, no shuffle, no window) and exactly re-scores
+    only those — at T=27 a measured 15-20% of the corpus, recall@10
+    0.70-0.82 (see SKETCH_HAM_T calibration note; lsh_recall is the
+    instrument to re-pick T when the corpus geometry changes). Chosen
+    over bucket multi-probe because on an isotropic corpus (true
+    neighbors at ~75°) bucket collision probability collapses (measured
+    0.12–0.38 recall; see lsh_recall docstring) while the Hamming
+    estimate of angle has ~3.5° std at 64 bits — enough to separate the
+    neighbor/bulk gap.
 
     At 10^12 docs the signature table is its own compact Iceberg table
     (16 bytes/row), coarse-partitioned by a few sketch bits so a query
@@ -226,7 +224,7 @@ def sketch_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
     bounded by the threshold's acceptance rate, and the final ranking is
     the two-phase partial top-k (`_per_query_topk`) — no full-corpus
     per-query sort anywhere in the plan."""
-    sig0, sig1 = _sig_words_udf(bits)
+    sig0, sig1 = _sig_words_udf(SKETCH_BITS)
     corpus = _with_norm(emb).select(
         "vec_id", "v", "norm",
         sig0("v").alias("s0"), sig1("v").alias("s1"))
@@ -244,26 +242,27 @@ def sketch_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
         )
     )
     cand = (
-        pairs.where(F.col("ham") <= ham_threshold)
+        pairs.where(F.col("ham") <= SKETCH_HAM_T)
         .withColumn("cosine", _cosine("qv", "v", F.col("qnorm"), F.col("norm")))
     )
     return _per_query_topk(cand, k)
 
 
 def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
-             n_planes: int = ANN_PLANES, probe_radius: int = 1) -> DataFrame:
+             probe_radius: int = 1) -> DataFrame:
     """Bucketed multi-probe sign-LSH ANN: each corpus vector hashes to one
-    of 2^P buckets (P seeded random hyperplanes); a query scores only
-    vectors in buckets within Hamming distance `probe_radius` of its own —
-    scanned fraction ~(1+P)/2^P at radius 1 (P=8 → 3.5%), plus C(P,2)/2^P
-    at radius 2 (P=8 → 14.5%). The low-latency point-lookup shape: at
-    100 TB the int bucket becomes the Iceberg partition key, turning each
-    probe into a partition-pruned scan (raise P with corpus size — P=24
-    scans ~1.5e-6 of the corpus). Approximate — may differ from brute
-    force; that IS the contract, and on an isotropic corpus its recall is
-    poor (measured 0.12 at radius 1 / 0.38 at radius 2 — see lsh_recall),
-    which is why sketch_topk is the committed default for `ann_lsh`."""
-    planes = hyperplanes(n_planes)
+    of 2^P buckets (P = ANN_PLANES seeded random hyperplanes); a query
+    scores only vectors in buckets within Hamming distance `probe_radius`
+    of its own — scanned fraction ~(1+P)/2^P at radius 1 (P=8 → 3.5%),
+    plus C(P,2)/2^P at radius 2 (P=8 → 14.5%). The low-latency
+    point-lookup shape: at 100 TB the int bucket becomes the Iceberg
+    partition key, turning each probe into a partition-pruned scan
+    (raise P with corpus size — P=24 scans ~1.5e-6 of the corpus).
+    Approximate — may differ from brute force; that IS the contract, and
+    on an isotropic corpus its recall is poor (measured 0.12 at radius 1
+    / 0.38 at radius 2 — see lsh_recall), which is why sketch_topk is the
+    committed default for `ann_lsh`."""
+    planes = hyperplanes(ANN_PLANES)
     corpus = _with_norm(emb).withColumn("bucket", sign_bucket(F.col("v"), planes))
     queries = (
         corpus.where(F.col("vec_id") < n_queries)
@@ -278,11 +277,11 @@ def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
     # each (query, vector) pair is generated at most once — no dedup needed)
     flips = [F.col("bucket")]
     flips += [F.col("bucket").bitwiseXOR(F.lit(1 << i))
-              for i in range(n_planes)]
+              for i in range(ANN_PLANES)]
     if probe_radius >= 2:
         flips += [
             F.col("bucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(n_planes) for j in range(i + 1, n_planes)
+            for i in range(ANN_PLANES) for j in range(i + 1, ANN_PLANES)
         ]
     probes = queries.select(
         "query_id", "qv", "qnorm",
@@ -298,19 +297,19 @@ def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
 
 IVF_CELLS = 16    # coarse cells at fixture scale; ~sqrt(N) in production
 IVF_NPROBE = 4    # cells probed per query -> scan fraction ~ nprobe/cells
+IVF_TRAIN_ITERS = 5  # Lloyd iterations in train_ivf_centroids
 
 
-def ivf_centroids(cells: int = IVF_CELLS, dim: int = EMB_DIM,
-                  seed: int = LSH_SEED) -> list[list[float]]:
+def ivf_centroids() -> list[list[float]]:
     """Deterministic coarse-quantizer centroids (seeded Gaussian, rounded
     to 6 dp so the identical literals embed in the DuckDB oracle). In
     production the centroids come from a k-means run over a sample —
     training is offline and out of band either way; everything this
     operator proves (cell assignment, multi-cell probing, exact rerank
     within probed cells) is quantizer-agnostic."""
-    rng = np.random.default_rng([seed, 7, cells, dim])
-    return [[round(float(x), 6) for x in rng.standard_normal(dim)]
-            for _ in range(cells)]
+    rng = np.random.default_rng([LSH_SEED, 7, IVF_CELLS, EMB_DIM])
+    return [[round(float(x), 6) for x in rng.standard_normal(EMB_DIM)]
+            for _ in range(IVF_CELLS)]
 
 
 def _dot_lit(vcol, plane: list[float]):
@@ -320,9 +319,7 @@ def _dot_lit(vcol, plane: list[float]):
         F.lit(0.0), lambda a, x: a + x)
 
 
-def train_ivf_centroids(sample: "np.ndarray", cells: int = IVF_CELLS,
-                        iters: int = 5,
-                        seed: int = LSH_SEED) -> list[list[float]]:
+def train_ivf_centroids(sample: "np.ndarray") -> list[list[float]]:
     """Offline spherical k-means for the IVF coarse quantizer (Lloyd
     iterations with max-dot assignment and re-normalized means — the
     SAME argmax-dot rule ivf_topk uses for cell assignment, so trained
@@ -330,15 +327,15 @@ def train_ivf_centroids(sample: "np.ndarray", cells: int = IVF_CELLS,
     100 TB you train on a ~0.1% sample the same way and broadcast the
     result; the operator is quantizer-agnostic (see
     test_ivf_trained_centroids_beat_random). Deterministic: seeded
-    init from sample rows, fixed iteration count, empty cells re-seeded
-    from the sample."""
-    rng = np.random.default_rng([seed, 11, cells])
+    init from sample rows, IVF_TRAIN_ITERS iterations, empty cells
+    re-seeded from the sample."""
+    rng = np.random.default_rng([LSH_SEED, 11, IVF_CELLS])
     x = np.asarray(sample, dtype=np.float64)
-    c = x[rng.choice(len(x), size=cells, replace=False)].copy()
+    c = x[rng.choice(len(x), size=IVF_CELLS, replace=False)].copy()
     c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    for _ in range(iters):
+    for _ in range(IVF_TRAIN_ITERS):
         assign = (x @ c.T).argmax(axis=1)
-        for j in range(cells):
+        for j in range(IVF_CELLS):
             pts = x[assign == j]
             c[j] = pts.mean(axis=0) if len(pts) else x[rng.integers(len(x))]
         c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
@@ -346,11 +343,10 @@ def train_ivf_centroids(sample: "np.ndarray", cells: int = IVF_CELLS,
 
 
 def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
-             cells: int = IVF_CELLS, nprobe: int = IVF_NPROBE,
              centroids: list[list[float]] | None = None) -> DataFrame:
     """IVF-partitioned ANN (the inverted-file shape the brief names as
     the scale path): every corpus vector is assigned to its best coarse
-    cell; a query probes its `nprobe` nearest cells and reranks with
+    cell; a query probes its IVF_NPROBE nearest cells and reranks with
     exact cosine only inside them.
 
     Scale shape: cell assignment is a ZERO-shuffle greatest-of-structs
@@ -362,7 +358,7 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
     the isotropic 64-d corpus: recall@10 ~0.38 at 12/128 cells (see
     lsh_recall docstring) — between bucket-LSH radius-1 and the
     committed sketch default, with the best at-rest pruning story."""
-    cents = centroids if centroids is not None else ivf_centroids(cells)
+    cents = centroids if centroids is not None else ivf_centroids()
     corpus = _with_norm(emb)
     # greatest on (dot, -cell) structs == argmax dot, ties -> SMALLEST
     # cell id (matches the oracle's ORDER BY d DESC, cell ASC)
@@ -387,7 +383,7 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
             F.col("v").alias("qv"),
             F.col("norm").alias("qnorm"),
             F.explode(F.slice(F.reverse(F.array_sort(probe_arr)),
-                              1, nprobe)).alias("p"))
+                              1, IVF_NPROBE)).alias("p"))
         .select("query_id", "qv", "qnorm",
                 F.col("p.cell").alias("cell"))
     )
@@ -442,9 +438,7 @@ SEMDEDUP_T = 0.4  # within-cell cosine at/above which vectors are near-dups
 SEMDEDUP_CELL_CAP = 4096  # max rows compared as ONE group (hot-cell split)
 
 
-def semantic_dedup(emb: DataFrame, cells: int = IVF_CELLS,
-                   threshold: float = SEMDEDUP_T,
-                   centroids: list[list[float]] | None = None,
+def semantic_dedup(emb: DataFrame,
                    cell_cap: int = SEMDEDUP_CELL_CAP) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate removal by
     comparing vectors ONLY within their coarse cluster — the quadratic
@@ -490,9 +484,7 @@ def semantic_dedup(emb: DataFrame, cells: int = IVF_CELLS,
     import pandas as pd
     from pdf_parse_bench_spark.operators.dedup import EMB_PAIR_BLOCK
 
-    cents = np.array(
-        centroids if centroids is not None else ivf_centroids(cells),
-        dtype=np.float64)  # (C, dim)
+    cents = np.array(ivf_centroids(), dtype=np.float64)  # (C, dim)
 
     def assign(batches):
         for pdf in batches:
@@ -552,7 +544,7 @@ def semantic_dedup(emb: DataFrame, cells: int = IVF_CELLS,
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dots / (nrm[i0:i1][:, None] * nrm[None, :])
                 cos = np.floor(cos * 1000000.0 + 0.5) / 1000000.0
-            m = (cos >= threshold) & (
+            m = (cos >= SEMDEDUP_T) & (
                 np.arange(i0, i1)[:, None] < np.arange(g)[None, :])
             anym = m.any(axis=0)
             first = m.argmax(axis=0)

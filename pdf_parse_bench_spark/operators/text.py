@@ -18,10 +18,10 @@ from pdf_parse_bench_spark.operators.skew import (
 )
 
 
-def word_array(col: str = "text"):
+def word_array():
     """The doc's words as an array column: split(trim(text), ' +') minus
     empties — the one tokenization every text operator shares."""
-    return F.filter(F.split(F.trim(F.col(col)), " +"), lambda x: x != "")
+    return F.filter(F.split(F.trim(F.col("text")), " +"), lambda x: x != "")
 
 
 def doc_words(text: str) -> list[str]:

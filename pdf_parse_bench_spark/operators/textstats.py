@@ -60,13 +60,11 @@ def _lang_pred_expr():
     return pred, best
 
 
-def _quality_exprs(w=None):
+def _quality_exprs():
     """Quality feature expressions over the text column (shared by
-    quality_score and corpus_filter so both stay single-scan). Pass a
-    pre-materialized words-array Column as `w` to avoid re-inlining the
-    split (doc_stats_rollup's barrier-staged plan)."""
-    if w is None:
-        w = word_array()
+    quality_score, corpus_filter and quality_percentiles so each stays
+    single-scan)."""
+    w = word_array()
     n_chars = F.length("text")
     n_words = F.size(w)
     n_punct = n_chars - F.length(F.regexp_replace("text", "[^a-zA-Z0-9 ]", ""))
@@ -107,10 +105,14 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_filter(docs: DataFrame, min_words: int = 8,
-                  max_punct_ratio: float = 0.2,
-                  min_quality: float = 0.3,
-                  lang: str = "en") -> DataFrame:
+# corpus_filter's bars, checked in the order the reject reasons list them
+FILTER_LANG = "en"
+FILTER_MIN_WORDS = 8
+FILTER_MAX_PUNCT_RATIO = 0.2
+FILTER_MIN_QUALITY = 0.3
+
+
+def corpus_filter(docs: DataFrame) -> DataFrame:
     """C4/Gopher-style corpus cleaning pass, composed from the stats
     operators: per doc, keep iff (a) canonical under exact dedup (smallest
     doc_id for its normalized fingerprint), (b) predicted language matches,
@@ -141,10 +143,10 @@ def corpus_filter(docs: DataFrame, min_words: int = 8,
     j = feats.withColumn("_rn", F.row_number().over(w))
     reason = (
         F.when(F.col("_rn") > 1, F.lit("duplicate"))
-        .when(F.col("pred_lang") != lang, F.lit("lang"))
-        .when(F.col("n_words") < min_words, F.lit("too_short"))
-        .when(F.col("punct_ratio") > max_punct_ratio, F.lit("punct"))
-        .when(F.col("quality") < min_quality, F.lit("low_quality"))
+        .when(F.col("pred_lang") != FILTER_LANG, F.lit("lang"))
+        .when(F.col("n_words") < FILTER_MIN_WORDS, F.lit("too_short"))
+        .when(F.col("punct_ratio") > FILTER_MAX_PUNCT_RATIO, F.lit("punct"))
+        .when(F.col("quality") < FILTER_MIN_QUALITY, F.lit("low_quality"))
     )
     return j.select(
         "doc_id",
@@ -189,16 +191,19 @@ def vocab_stats(docs: DataFrame, k: int = 100) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-doc top-k terms by tf·idf (idf = ln(N/df)), rounded to 6 dp
-    before ranking so ordering is engine-portable; ties break lexically.
-    Shape: one explode + two aggregations. The per-word document-frequency
-    table joins back onto the (doc, word) tf table WITHOUT a broadcast
-    hint: at 100 TB the distinct-word table is 10^8-10^9 rows and cannot
-    be a broadcast — both sides are already keyed on `word`, so the
-    shuffle join is one co-partitioned exchange (and AQE may still pick a
-    broadcast when the vocab is actually small). Only the 1-row corpus
-    count is force-broadcast."""
+TFIDF_TOP_K = 3  # terms kept per doc by tfidf_top_terms
+
+
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Per-doc top-TFIDF_TOP_K terms by tf·idf (idf = ln(N/df)), rounded
+    to 6 dp before ranking so ordering is engine-portable; ties break
+    lexically. Shape: one explode + two aggregations. The per-word
+    document-frequency table joins back onto the (doc, word) tf table
+    WITHOUT a broadcast hint: at 100 TB the distinct-word table is
+    10^8-10^9 rows and cannot be a broadcast — both sides are already
+    keyed on `word`, so the shuffle join is one co-partitioned exchange
+    (and AQE may still pick a broadcast when the vocab is actually
+    small). Only the 1-row corpus count is force-broadcast."""
     from pyspark.sql import Window
 
     # spread before the explode: the single-row-group fixture layout would
@@ -220,7 +225,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     win = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("word"))
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "word", "tfidf", "rank")
     )
 
@@ -239,14 +244,14 @@ WINNOW_K = 3  # words per k-gram
 WINNOW_W = 4  # window of consecutive k-gram hashes per fingerprint
 
 
-def winnowing_fingerprints(docs: DataFrame, k: int = WINNOW_K,
-                           w: int = WINNOW_W) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al., SIGMOD'03): hash every
-    word k-gram to a 32-bit int, then keep the MIN hash of each window of
-    `w` consecutive k-grams; the doc's fingerprint set is the DISTINCT
-    window minima. Guarantees any shared run of >= k+w-1 words between
-    two docs contributes at least one common fingerprint — the local
-    analog of the whole-text md5 above, robust to partial overlap.
+    word k-gram (k = WINNOW_K) to a 32-bit int, then keep the MIN hash of
+    each window of w = WINNOW_W consecutive k-grams; the doc's fingerprint
+    set is the DISTINCT window minima. Guarantees any shared run of
+    >= k+w-1 words between two docs contributes at least one common
+    fingerprint — the local analog of the whole-text md5 above, robust to
+    partial overlap.
 
     Physical shape: ZERO shuffles — one Arrow-batched kernel per doc
     (r7, guide §4.2: hashlib md5 first-4-bytes == the JVM
@@ -267,11 +272,11 @@ def winnowing_fingerprints(docs: DataFrame, k: int = WINNOW_K,
 
     def fingerprints(text):
         buf = b"".join(hashlib.md5(g.encode()).digest()[:4]
-                       for g in word_grams(doc_words(text), k))
+                       for g in word_grams(doc_words(text), WINNOW_K))
         hs = np.frombuffer(buf, dtype=">u4").astype(np.int64)
-        if hs.size >= w:
+        if hs.size >= WINNOW_W:
             mins = np.lib.stride_tricks.sliding_window_view(
-                hs, w).min(axis=1)
+                hs, WINNOW_W).min(axis=1)
         else:
             mins = hs.min(keepdims=True)
         return [{"fp": np.unique(mins).tolist()}]
@@ -687,11 +692,10 @@ def _range_split_points(n: DataFrame, buckets: int) -> list:
     return sample[step::step][:buckets - 1]
 
 
-def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN,
-                   buckets: int = None) -> DataFrame:
+def pack_sequences(docs: DataFrame, buckets: int = None) -> DataFrame:
     """Concat-and-split sequence packing — the GPT-style packing step:
     conceptually concatenate every document's words in doc_id order and
-    cut fixed-length training sequences; emit the pack MANIFEST
+    cut SEQ_LEN-word training sequences; emit the pack MANIFEST
     (seq_id, doc_id, word_from, word_to) that tells every sequence
     which word span of which document it carries.
 
@@ -744,15 +748,15 @@ def pack_sequences(docs: DataFrame, seq_len: int = SEQ_LEN,
     placed = (local.join(
         F.broadcast(offsets.select("_bucket", "poffset")), "_bucket")
         .withColumn("start", F.col("poffset") + F.col("local_start")))
-    first = F.floor(F.col("start") / seq_len)
-    last = F.floor((F.col("start") + F.col("n") - 1) / seq_len)
+    first = F.floor(F.col("start") / SEQ_LEN)
+    last = F.floor((F.col("start") + F.col("n") - 1) / SEQ_LEN)
     ex = placed.select(
         "doc_id", "n", "start",
         F.explode(F.sequence(first, last)).alias("seq_id"))
     word_from = F.greatest(
-        F.col("seq_id") * seq_len - F.col("start"), F.lit(0)) + 1
+        F.col("seq_id") * SEQ_LEN - F.col("start"), F.lit(0)) + 1
     word_to = F.least(
-        (F.col("seq_id") + 1) * seq_len - F.col("start"), F.col("n"))
+        (F.col("seq_id") + 1) * SEQ_LEN - F.col("start"), F.col("n"))
     return ex.select(
         F.col("seq_id").cast("long").alias("seq_id"),
         "doc_id",

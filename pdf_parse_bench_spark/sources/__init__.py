@@ -14,13 +14,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """S1/S4: parquet scan — Catalyst column pruning + predicate pushdown
-    apply automatically; keep `select` narrow at call sites."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def read_fixture(spark: SparkSession, fixture_dir, name: str) -> DataFrame:
+    """S1/S4: parquet scan of `<fixture_dir>/<name>.parquet` — Catalyst
+    column pruning + predicate pushdown apply automatically; keep `select`
+    narrow at call sites."""
     return spark.read.parquet(os.path.join(str(fixture_dir), f"{name}.parquet"))
 
 

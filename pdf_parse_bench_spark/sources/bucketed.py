@@ -17,13 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 N_BUCKETS = 8  # local demo size; 256 on the cluster (iceberg.py:21)
 
 
-def write_bucketed(df: DataFrame, table: str, key: str = "doc_id",
+def write_bucketed(df: DataFrame, table: str,
                    n_buckets: int = N_BUCKETS,
                    path: str | None = None) -> None:
-    """Persist as a parquet table bucketed + sorted on `key`. Matching
+    """Persist as a parquet table bucketed + sorted on doc_id. Matching
     bucket counts on two tables co-locate their join keys at write time."""
     w = (df.write.mode("overwrite")
-         .bucketBy(n_buckets, key).sortBy(key)
+         .bucketBy(n_buckets, "doc_id").sortBy("doc_id")
          .format("parquet"))
     if path:
         w = w.option("path", path)

@@ -18,6 +18,9 @@ from pdf_parse_bench_spark.functions import round_half_up
 from pdf_parse_bench_spark.operators.extract import extract_spans
 from pdf_parse_bench_spark.schemas import PARSED_MARKDOWN_SCHEMA
 
+DEDUP_WATERMARK = "2 hours"  # stream_dedup's event-time dedup horizon
+SESSION_GAP_MINUTES = 30     # sessionize: a longer gap starts a new session
+
 
 def stream_extract(
     spark: SparkSession,
@@ -99,7 +102,7 @@ def stateful_user_totals(stream: DataFrame):
     )
 
 
-def stream_dedup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_dedup(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup for a 100 TB ingest path: watermark-bounded
     dedup on the content hash — state holds one md5 per distinct doc within
     the watermark horizon and is EVICTED after it, so state size is bounded
@@ -111,12 +114,12 @@ def stream_dedup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     src = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
         src.withColumn("text_hash", F.md5("text"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization per user (batch formulation: lag + cumulative
     sum over an event-time window — the applyInPandasWithState analog that
     the DuckDB oracle can check)."""
@@ -130,7 +133,8 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     gap = F.expr("timestampdiff(MICROSECOND, _prev_ts, ts)")
     marked = events.withColumn("_prev_ts", F.lag("ts").over(w)).withColumn(
         "new_session",
-        F.when(F.col("_prev_ts").isNull() | (gap > gap_minutes * 60 * 1000000), 1)
+        F.when(F.col("_prev_ts").isNull()
+               | (gap > SESSION_GAP_MINUTES * 60 * 1000000), 1)
         .otherwise(0),
     ).drop("_prev_ts")
     sessions = marked.withColumn(

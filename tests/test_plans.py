@@ -457,3 +457,53 @@ def test_simhash_near_dups_single_self_join(spark):
         assert "ReusedExchange" in executed, executed
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_unset_options_stay_constants():
+    """Values the parity oracles fix are module constants, not options a
+    caller could set and silently diverge from the oracle with."""
+    import inspect
+
+    from pdf_parse_bench_spark import functions, streaming
+    from pdf_parse_bench_spark.kernels import alignment, png
+    from pdf_parse_bench_spark.operators import text
+    from pdf_parse_bench_spark.sources import bucketed
+
+    removed = {
+        dd.minhash_signatures: {"k"},
+        dd._minhash_band_rows: {"k"},
+        dd._doc_shingle_ab: {"n"},
+        dd.simhash_signatures: {"bits"},
+        dd.dedup_clusters: {"threshold", "max_iter"},
+        dd.simhash_near_dups: {"max_hamming"},
+        dd.embedding_near_dups: {"n_planes", "band_rows"},
+        dd.duplicate_ngram_pairs: {"n", "max_df", "min_shared"},
+        sim.hyperplanes: {"dim", "seed"},
+        sim.ivf_centroids: {"cells", "dim", "seed"},
+        sim.train_ivf_centroids: {"cells", "iters", "seed"},
+        sim.sketch_topk: {"bits", "ham_threshold"},
+        sim.lsh_topk: {"n_planes"},
+        sim.ivf_topk: {"cells", "nprobe"},
+        sim.semantic_dedup: {"cells", "threshold", "centroids"},
+        sim._as_double: {"col"},
+        sim._with_norm: {"out"},
+        ts.corpus_filter: {"min_words", "max_punct_ratio", "min_quality",
+                           "lang"},
+        ts.tfidf_top_terms: {"k"},
+        ts.winnowing_fingerprints: {"k", "w"},
+        ts._quality_exprs: {"w"},
+        ts.pack_sequences: {"seq_len"},
+        text.word_array: {"col"},
+        functions.table_complexity_expr: {"kind_col", "text_col"},
+        alignment.find_original_segment: {"edit_distance_ratio",
+                                          "search_radius", "bonus_fn"},
+        png.encode_png: {"filter_mode"},
+        bucketed.write_bucketed: {"key"},
+        streaming.stream_dedup: {"watermark"},
+        streaming.sessionize: {"gap_minutes"},
+        entry._dedup_clusters_sql: {"threshold"},
+    }
+    assert sum(map(len, removed.values())) == 50  # 49 options + the oracle's
+    for fn, names in removed.items():
+        params = set(inspect.signature(fn).parameters)
+        assert not params & names, (fn.__qualname__, params & names)

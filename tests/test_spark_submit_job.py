@@ -82,7 +82,6 @@ def test_spark_submit_extract_job(spark, fx_smoke, tmp_path):
             "--input", str(in_path),
             "--output", str(out_dir),
             "--checkpoint", str(ckpt_dir),
-            "--runs", "1",
         ],
         capture_output=True, text=True, timeout=420,
     )
@@ -128,10 +127,33 @@ def test_extract_job_rejects_checkpoint_without_output(fx_smoke, tmp_path):
     ckpt_dir = tmp_path / "ckpt"
     r = _run_python(str(REPO / "jobs" / "extract_job.py"),
                     "--input", str(fx_smoke / "parsed_markdown.parquet"),
-                    "--checkpoint", str(ckpt_dir), "--runs", "1")
+                    "--checkpoint", str(ckpt_dir))
     assert r.returncode != 0
     assert "--checkpoint needs --output" in r.stderr
     assert not ckpt_dir.exists()
+
+
+def test_extract_job_resubmit_resumes(fx_smoke, tmp_path):
+    """With --output and --checkpoint the job is one resumable pass: a
+    re-submitted job finds every document checkpointed ok and rewrites
+    neither the span files nor the lineage."""
+    import pyarrow.parquet as pq
+    in_path = _corpus_with_empty_doc(fx_smoke, tmp_path)
+    out_dir = tmp_path / "spans"
+    ckpt_dir = tmp_path / "ckpt"
+
+    def submit():
+        r = _run_python(str(REPO / "jobs" / "extract_job.py"),
+                        "--input", str(in_path), "--output", str(out_dir),
+                        "--checkpoint", str(ckpt_dir))
+        assert r.returncode == 0, r.stderr[-2000:]
+        return [sorted(p.name for p in d.glob("*.parquet"))
+                for d in (out_dir, ckpt_dir)]
+
+    first = submit()
+    assert all(first)
+    assert submit() == first
+    assert pq.read_table(ckpt_dir).num_rows == 501
 
 
 def test_cli_score_without_overlap(tmp_path):

@@ -164,9 +164,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         md = docs.select(
             "doc_id", F.array_join(pieces, "\n\n").alias("markdown")
         )
-        # rebalance=False: the input is already hash-spread above, and the
-        # size rebalance would re-shuffle the freshly assembled markdown a
-        # second time for no balance gain (uniform synthetic docs)
+        # rebalance=False: the input is already spread above, and the
+        # spread's df.rdd read would run that shuffle eagerly
         return extract_spans(md, boilerplate=frozenset(), rebalance=False)
     q["nested_pipeline"] = nested_pipeline
     q["align_noisy"] = lambda s, d: align_extractions(

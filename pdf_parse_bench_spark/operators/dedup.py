@@ -23,10 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.functions import round_half_up
-from pdf_parse_bench_spark.operators.skew import (
-    HEAVY_KERNEL_MIN_BYTES as HEAVY_MIN,
-    spread_for_kernel,
-)
+from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 from pdf_parse_bench_spark.operators.text import (
     doc_words,
     ngram_digests,
@@ -447,8 +444,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
             })
 
     exploded = spread_for_kernel(
-        emb.select("vec_id", "embedding"), key="vec_id",
-        min_bytes=HEAVY_MIN).mapInPandas(
+        emb.select("vec_id", "embedding"), key="vec_id").mapInPandas(
         explode_bands,
         schema="vec_id long, band int, band_key int, v array<double>")
 

@@ -8,7 +8,8 @@ build. Stages:
   markdown corpus ──► compute_boilerplate (corpus-level repeated first/last
                       line aggregation — the distributed analog of the
                       reference's per-page y-cluster header/footer strip, P2)
-                 ──► extract_spans (kernel_op over size-rebalanced rows)
+                 ──► extract_spans (kernel_op over one wave of hash-spread
+                      rows, operators/skew.spread_for_kernel)
   layout blocks  ──► extract_spans_from_layout (collect_list per doc_id
                       → batched kernel_op: XY-cut order + category strip)
   pdf bytes      ──► parse_pdfs / pdf_spans (kernel_op byte-stream
@@ -31,7 +32,10 @@ from pdf_parse_bench_spark.kernels.htmldoc import parse_html
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
 from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_text
 from pdf_parse_bench_spark.operators.kernel import kernel_op
-from pdf_parse_bench_spark.operators.skew import rebalance_by_size
+from pdf_parse_bench_spark.operators.skew import (
+    MIN_SPREAD_BYTES,
+    spread_for_kernel,
+)
 
 
 BOILERPLATE_MIN_DOCS = 5
@@ -51,14 +55,13 @@ def compute_boilerplate(md_df: DataFrame) -> DataFrame:
     (spaces-only, matching the kernel-side strip) canonicalizes both.
     No Python boundary, no full-line materialization; the one exchange
     carries two short lines per doc into the count."""
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
     pat = r"\A(?:[ ]*\n)*[ ]*([^\n]*)"
     first = F.trim(F.regexp_extract("markdown", pat, 1))
     last = F.trim(F.reverse(
         F.regexp_extract(F.reverse(F.col("markdown")), pat, 1)))
     edges = (
-        spread_for_kernel(md_df.select("doc_id", "markdown"))
+        spread_for_kernel(md_df.select("doc_id", "markdown"),
+                          min_bytes=MIN_SPREAD_BYTES)
         .select("doc_id",
                 F.explode(F.array_distinct(F.array(first, last))).alias("line"))
         .where(F.col("line") != "")
@@ -80,14 +83,16 @@ def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,
     """Unguided extraction: markdown → ordered spans (flagship path).
 
     One ``kernel_op`` runs ``parse_markdown`` per document against the
-    broadcast boilerplate set (collected from the corpus when not given);
-    ``rebalance`` size-rebalances the input first (operators/skew.py) and
-    is off only where the caller has already spread the rows."""
+    broadcast boilerplate set (collected from the corpus when not given).
+    ``rebalance`` spreads the input over one wave of Python tasks first
+    (skew.spread_for_kernel, no Spark job); it is off where the caller
+    has already spread the rows, or where the input is a streaming frame,
+    whose ``df.rdd`` the spread cannot read."""
     if boilerplate is None:
         boilerplate = _collect_boilerplate(md_df)
     bp = md_df.sparkSession.sparkContext.broadcast(boilerplate)
     if rebalance:
-        md_df = rebalance_by_size(md_df, size_col=F.length("markdown"))
+        md_df = spread_for_kernel(md_df)
     return kernel_op(md_df, lambda md: parse_markdown(md, bp.value),
                      schemas.EXTRACTED_SPANS_SCHEMA, args=["markdown"])
 
@@ -103,12 +108,11 @@ def extract_spans_from_layout(blocks_df: DataFrame) -> DataFrame:
     sf0.1: 5.9 s grouped vs sub-second batched for a 0.3 s/32-core
     kernel). array_sort canonicalizes block order so the result never
     depends on shuffle arrival order."""
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
     # pre-spread on the SAME key as the groupBy: the repartition replaces
     # (not adds to) the aggregation exchange, moving the collect_list
     # partials off the 2-task single-row-group scan onto all cores
-    grouped = spread_for_kernel(blocks_df).groupBy("doc_id").agg(
+    grouped = spread_for_kernel(
+        blocks_df, min_bytes=MIN_SPREAD_BYTES).groupBy("doc_id").agg(
         F.array_sort(F.collect_list(
             F.struct("page_no", "bbox", "category", "text"))).alias("blocks"))
     return kernel_op(
@@ -120,7 +124,7 @@ def extract_spans_from_html(html_df: DataFrame) -> DataFrame:
     """Structured-markup path (M4 analog; north_rule's HTML boilerplate
     strip + DOM heuristics): header/footer/nav/script subtrees dropped by
     DOM role, body walked in document order, spans emitted."""
-    html_df = rebalance_by_size(html_df, size_col=F.length("html"))
+    html_df = spread_for_kernel(html_df)
     return kernel_op(html_df, parse_html, schemas.EXTRACTED_SPANS_SCHEMA,
                      args=["html"])
 
@@ -131,7 +135,7 @@ def extract_spans_from_tei(tei_df: DataFrame) -> DataFrame:
     kernel inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.teidoc import parse_tei
 
-    tei_df = rebalance_by_size(tei_df, size_col=F.length("tei"))
+    tei_df = spread_for_kernel(tei_df)
     return kernel_op(tei_df, parse_tei, schemas.EXTRACTED_SPANS_SCHEMA,
                      args=["tei"])
 
@@ -139,7 +143,7 @@ def extract_spans_from_tei(tei_df: DataFrame) -> DataFrame:
 def parse_pdfs(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     """Raw-PDF path (M2): byte-stream tokenizer inside Arrow batches."""
     if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+        pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(pdf_df, lambda b: [{"text": extract_pdf_text(bytes(b))}],
                      schemas.PDF_TEXT_SCHEMA, args=["pdf_bytes"])
 
@@ -153,7 +157,7 @@ def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_spans
 
     if rebalance:
-        pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+        pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(pdf_df, lambda b: extract_pdf_spans(bytes(b)),
                      "doc_id string, offset int, kind string, text string, "
                      "media_ref string", args=["pdf_bytes"])
@@ -186,7 +190,7 @@ def pdf_encrypt_audit(pdf_df: DataFrame,
     probes exactly as before."""
     from pdf_parse_bench_spark.kernels.pdfcrypt import sniff_encryption
 
-    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    pdf_df = spread_for_kernel(pdf_df)
     args = ["pdf_bytes"]
     if passwords_df is not None:
         pdf_df = pdf_df.join(
@@ -219,7 +223,7 @@ def rasterize_pages(pdf_df: DataFrame, include_png: bool = True) -> DataFrame:
     All inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.pdftext import rasterize_pdf
 
-    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    pdf_df = spread_for_kernel(pdf_df)
     cols = ("page_no", "png", "width", "height", "ink_ratio")
     return kernel_op(
         pdf_df,
@@ -236,11 +240,11 @@ def pdf_image_stats_op(pdf_df: DataFrame) -> DataFrame:
     decoded) via kernels/pdftext.pdf_image_stats — DCTDecode streams
     (baseline AND progressive JPEG) and raw/Flate rasters decode to true
     means; undecodable data degrades to decoded=false rows, never an
-    abort (X4). Same pruned-scan → size-rebalance → kernel_op shape as
-    the other PDF fan-outs."""
+    abort (X4). Same pruned-scan → spread_for_kernel → kernel_op shape
+    as the other PDF fan-outs."""
     from pdf_parse_bench_spark.kernels.pdftext import pdf_image_stats
 
-    pdf_df = rebalance_by_size(pdf_df, size_col=F.length("pdf_bytes"))
+    pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(
         pdf_df, lambda b: pdf_image_stats(bytes(b)),
         "doc_id string, page_no int, seq int, media_ref string, "
@@ -263,12 +267,11 @@ def align_extractions(md_df: DataFrame, golden_df: DataFrame,
     # shuffle shape as the previous cogroup, without applyInPandas's
     # per-group pandas overhead (docs absent from either side contribute
     # nothing, exactly like the old empty-group early-return).
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
     # pre-spread on the groupBy key (replaces, not adds to, the aggregation
     # exchange): the single-row-group golden table otherwise builds its
     # collect_list partials in the 2-task scan stage
-    packed = spread_for_kernel(golden_df).groupBy("doc_id").agg(
+    packed = spread_for_kernel(
+        golden_df, min_bytes=MIN_SPREAD_BYTES).groupBy("doc_id").agg(
         F.array_sort(F.collect_list(
             F.struct("offset", "kind", "text", "media_ref"))).alias("gt"))
     joined = md_df.select("doc_id", "markdown").join(packed, "doc_id")

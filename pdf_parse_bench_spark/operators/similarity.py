@@ -52,17 +52,13 @@ def _as_double():
 
 
 def _with_norm(df: DataFrame) -> DataFrame:
-    from pdf_parse_bench_spark.operators.skew import (
-        HEAVY_KERNEL_MIN_BYTES,
-        spread_for_kernel,
-    )
+    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
     # spread: the single-row-group embeddings file would evaluate every
     # interpreted fold (norms, plane/centroid dots) in ONE scan task;
     # per-row arithmetic is order-independent, so rows are unchanged
     return spread_for_kernel(
-        df.select("vec_id", "embedding"), key="vec_id",
-        min_bytes=HEAVY_KERNEL_MIN_BYTES,
+        df.select("vec_id", "embedding"), key="vec_id"
     ).select(
         "vec_id", _as_double().alias("v")
     ).withColumn(
@@ -505,14 +501,10 @@ def semantic_dedup(emb: DataFrame,
                 "v": list(mat),
             })
 
-    from pdf_parse_bench_spark.operators.skew import (
-        HEAVY_KERNEL_MIN_BYTES,
-        spread_for_kernel,
-    )
+    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
     assigned = spread_for_kernel(
-        emb.select("vec_id", "embedding"), key="vec_id",
-        min_bytes=HEAVY_KERNEL_MIN_BYTES).mapInPandas(
+        emb.select("vec_id", "embedding"), key="vec_id").mapInPandas(
         assign, schema="vec_id long, cell int, v array<double>")
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("_csize"))
     assigned = (

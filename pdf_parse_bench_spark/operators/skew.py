@@ -1,18 +1,30 @@
-"""Skew handling for UDF stages (north_rule: salted repartitioning on doc_id).
+"""Sizing of kernel stages (north_rule: salted repartitioning on doc_id).
 
-AQE's skew-join splitting does not cover pandas-UDF stage skew (a 50x-sized
-document stalls one task, invisible to the optimizer — SURVEY.md §4). Design
-constraint: nothing here may serialize through the driver or a single-
-partition global sort — a `Window.orderBy(size)` bin-packer would be exact
-but is a deliberate non-choice at 10^12 docs. Instead:
+Every Python task costs a fixed 0.15-0.3 s on a 4-vCPU host, even when
+its partition is empty: the worker waits for the JVM's header before it
+sees a row. An identity ``mapInPandas`` over 2,000 rows takes 0.34-0.50 s
+on 4 partitions, 0.64-0.81 s on 8, 0.93-1.10 s on 12 (also with 8 of the
+12 empty) and 1.36 s on 16; the same 12-partition job without Python
+takes 0.066 s. So a kernel stage should run as ONE wave of Python tasks
+with no job before it, not as several waves behind an eager sample.
+Nothing here may collect rows to one process or run a single-partition
+global sort (a ``Window.orderBy(size)`` bin-packer is a deliberate
+non-choice at 10^12 docs).
 
-  - rebalance_by_size: hash-uniform spread, except oversized rows (size >
-    quantile-derived threshold) are isolated into their own partition slots
-    so one giant document never shares a task with thousands of normal ones.
-    Fully parallel: one approxQuantile pass + one shuffle.
-  - spread_for_kernel: one hash repartition on doc_id when a single-row-
-    group scan would otherwise run a kernel stage as one task (size-gated,
-    a no-op on already-parallel scans).
+  - spread_for_kernel: the one sizing rule for kernel stages. No Spark
+    job: ``n = min(defaultParallelism, ceil(size estimate / TASK_BYTES))``
+    hash partitions on the key, and no exchange at all when ``n <= 1`` or
+    the input already has ``n`` partitions (the 100 TB layout: thousands
+    of files and row groups). The sf fixture tables are single parquet
+    row groups that no maxPartitionBytes setting can split, so without
+    the spread their kernel stage runs as one task.
+  - rebalance_by_size: hash spread over two waves, plus a band of
+    partitions that isolates the rows above an eagerly sampled p99 size,
+    so one giant payload never shares a task with thousands of small
+    ones (AQE cannot split a running Python task). Only the media
+    decoders use it: no workload measures them, and on markdown and PDF
+    every band variant lost to a plain one-wave hash (a band in the same
+    wave made a straggler, one of its own cost a wave).
 """
 
 from __future__ import annotations
@@ -62,44 +74,42 @@ def rebalance_by_size(df: DataFrame, size_col: Column) -> DataFrame:
 
 
 def spread_for_kernel(df: DataFrame, key: str = "doc_id",
-                      min_bytes: int | None = None) -> DataFrame:
-    """Ensure a per-row kernel stage engages every core (guide §2.5 "input
-    skew": one huge unsplittable file).
+                      min_bytes: int = 0) -> DataFrame:
+    """Spread a kernel stage's input over one wave of Python tasks.
 
-    The sf fixture tables are written as a SINGLE parquet row group, which
-    no maxPartitionBytes / minPartitionNum setting can split — so the scan
-    stage (and any per-doc kernel fused into it) runs as ONE task no matter
-    the cluster size. When the scan already has at least one partition per
-    core (the 100 TB layout: thousands of files/row groups), this is a
-    no-op — no exchange is added; otherwise one hash repartition on `key`
-    spreads the rows. Partition count derives from defaultParallelism, not
-    a local constant, and the hash key is a stable column (replay-safe
-    under task retry, unlike round-robin of nondeterministic input).
+    ``n = min(defaultParallelism, ceil(catalyst size estimate /
+    TASK_BYTES))`` partitions, hashed on `key` (a stable column, so the
+    spread is replay-safe under task retry). The estimate is free: no
+    Spark job runs, and an input the optimizer cannot size counts as
+    large. No exchange is added when ``n <= 1`` or when the input already
+    has ``n`` partitions. Reading that partition count from ``df.rdd``
+    runs any exchange the input already has, so an input that is
+    shuffled already should skip the spread (``rebalance=False``).
 
-    Inputs below `min_bytes` (catalyst size estimate; default
-    MIN_SPREAD_BYTES) are also left alone: for a few MB the shuffle +
-    many-task python overhead exceeds the parallelism win (measured at
-    sf0.1), and a single task finishes in well under a second anyway —
-    the gate derives from input size, never from a fixed core count.
-    Call sites whose kernels do heavy per-row CPU (md5 shingling,
-    trigram counting, plane folds) pass HEAVY_KERNEL_MIN_BYTES: for
-    those, compressed bytes understate the work by orders of
-    magnitude."""
-    if min_bytes is None:
-        min_bytes = MIN_SPREAD_BYTES
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    if df.rdd.getNumPartitions() >= n:
-        return df
+    Inputs estimated below `min_bytes` are left alone. Only the
+    pre-spreads that feed an aggregation pass it (MIN_SPREAD_BYTES):
+    their exchange replaces the aggregation's own, and below 4 MB the
+    spread traded 17-30% layout time for 9-22% more peak RSS."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     try:
         size = int(df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
     except Exception:
-        size = min_bytes
-    if size < min_bytes:
+        size = None
+    if size is not None:
+        if size < min_bytes:
+            return df
+        n = min(n, -(-size // TASK_BYTES))
+    if n <= 1 or df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, key)
 
 
+# Input bytes per Python task. Swept over 16, 64, 128, 256 and 1024 KiB
+# in local[4]: a 429 KB PDF input ran in 0.74 s on 4 tasks against 1.30 s
+# unspread, and a 244 KB markdown input moved within noise. On the ~1 MB
+# perfbench inputs (medians of 3 seeds), 256 KiB left pdf_extract 3
+# tasks and cost it 7% of its docs/s; 1024 KiB left one task and cost
+# pdf_extract 41% and md_extract 20%.
+TASK_BYTES = 64 * 1024
 MIN_SPREAD_BYTES = 4 * 1024 * 1024
-HEAVY_KERNEL_MIN_BYTES = 1024 * 1024
-

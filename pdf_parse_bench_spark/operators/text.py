@@ -12,10 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.operators.kernel import kernel_op
-from pdf_parse_bench_spark.operators.skew import (
-    HEAVY_KERNEL_MIN_BYTES as HEAVY_MIN,
-    spread_for_kernel,
-)
+from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
 
 def word_array():
@@ -43,9 +40,8 @@ def text_kernel(docs: DataFrame, kernel, schema: str) -> DataFrame:
     """``kernel(text)`` per doc on the spread (doc_id, text) input; the
     schema names only the value columns, doc_id keeps its input type."""
     id_t = docs.schema["doc_id"].dataType.simpleString()
-    return kernel_op(spread_for_kernel(docs.select("doc_id", "text"),
-                                       min_bytes=HEAVY_MIN),
-                     kernel, f"doc_id {id_t}, {schema}", args=["text"])
+    return kernel_op(spread_for_kernel(docs.select("doc_id", "text")), kernel,
+                     f"doc_id {id_t}, {schema}", args=["text"])
 
 
 def ngram_digests(docs: DataFrame, n: int) -> DataFrame:

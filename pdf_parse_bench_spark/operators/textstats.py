@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from pdf_parse_bench_spark.functions import round_half_up
 from pdf_parse_bench_spark.operators.kernel import kernel_op
-from pdf_parse_bench_spark.operators.skew import (
-    HEAVY_KERNEL_MIN_BYTES as HEAVY_MIN,
-    spread_for_kernel,
-)
+from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 from pdf_parse_bench_spark.operators.text import (
     doc_words,
     ngram_digests,
@@ -210,8 +207,7 @@ def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     # otherwise run the whole word explode + partial aggregation in ONE
     # scan task (guide §2.5 input skew; no-op when the scan is already
     # parallel)
-    w = spread_for_kernel(docs.select("doc_id", "text"),
-                      min_bytes=HEAVY_MIN).select(
+    w = spread_for_kernel(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(word_array()).alias("word"))
     tf = w.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df_tbl = tf.groupBy("word").agg(F.count("*").alias("df"))

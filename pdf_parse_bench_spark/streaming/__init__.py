@@ -36,8 +36,9 @@ def stream_extract(
         spark.readStream.schema(PARSED_MARKDOWN_SCHEMA)
         .parquet(input_dir)
     )
-    # rebalance_by_size needs a batch-only shuffle; in streaming the file
-    # source's maxFilesPerTrigger bounds batch skew instead.
+    # rebalance=False: spread_for_kernel reads df.rdd, which a streaming
+    # frame cannot give; the file source's maxFilesPerTrigger bounds
+    # batch skew instead.
     spans = extract_spans(stream, boilerplate=boilerplate, rebalance=False)
     return (
         spans.writeStream.format("memory")

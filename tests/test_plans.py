@@ -507,3 +507,35 @@ def test_unset_options_stay_constants():
     for fn, names in removed.items():
         params = set(inspect.signature(fn).parameters)
         assert not params & names, (fn.__qualname__, params & names)
+
+
+def test_kernel_stages_one_wave_no_eager_job(spark, fx_smoke):
+    """Building a markdown or PDF extraction starts no Spark job (no eager
+    size sample), and its kernel stage runs in one wave: at most
+    defaultParallelism Python tasks."""
+    from pdf_parse_bench_spark.operators.extract import (
+        extract_spans,
+        parse_pdfs,
+        pdf_spans,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    md = spark.read.parquet(str(fx_smoke / "parsed_markdown.parquet"))
+    pdfs = spark.read.parquet(str(fx_smoke / "pdf_docs.parquet"))
+    builds = {
+        "extract_spans": lambda: extract_spans(md, boilerplate=frozenset()),
+        "pdf_spans": lambda: pdf_spans(pdfs),
+        "parse_pdfs": lambda: parse_pdfs(pdfs),
+    }
+    for name, build in builds.items():
+        before = set(tracker.getJobIdsForGroup(None))
+        out = build()
+        built = set(tracker.getJobIdsForGroup(None)) - before
+        assert not built, (name, "jobs while building", sorted(built))
+        out.write.format("noop").mode("overwrite").save()
+        ran = set(tracker.getJobIdsForGroup(None)) - before
+        tasks = [tracker.getStageInfo(s).numTasks
+                 for j in ran for s in tracker.getJobInfo(j).stageIds
+                 if tracker.getStageInfo(s) is not None]
+        assert tasks and max(tasks) <= sc.defaultParallelism, (name, tasks)

@@ -148,8 +148,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         markdown via pure higher-order functions (no explode) ->
         extraction kernel -> spans. Must reproduce golden exactly."""
         from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-        # spread: the interpreted HOF markdown re-assembly would otherwise
-        # run inside the single-row-group scan task
+        # spread here, not in the kernel: the interpreted HOF markdown
+        # re-assembly is a JVM stage ahead of kernel_op and would otherwise
+        # run inside the single-row-group scan task; kernel_op then finds
+        # its input shuffled and adds nothing
         docs = spread_for_kernel(_f(s, d, "spans_documents"))
         pieces = F.filter(
             F.transform(
@@ -164,9 +166,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         md = docs.select(
             "doc_id", F.array_join(pieces, "\n\n").alias("markdown")
         )
-        # rebalance=False: the input is already spread above, and the
-        # spread's df.rdd read would run that shuffle eagerly
-        return extract_spans(md, boilerplate=frozenset(), rebalance=False)
+        return extract_spans(md, boilerplate=frozenset())
     q["nested_pipeline"] = nested_pipeline
     q["align_noisy"] = lambda s, d: align_extractions(
         _f(s, d, "noisy_markdown"),
@@ -192,12 +192,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     def extract_lineage(s, d):
         # the lineage row is a projection of the one row per document the
-        # kernel returns, so counting spans needs no groupBy; the spread
-        # engages every core on the single-row-group fixture scan
-        from pdf_parse_bench_spark.operators.skew import spread_for_kernel
+        # kernel returns, so counting spans needs no groupBy
         md = _f(s, d, "parsed_markdown")
         bp = _collect_boilerplate(md)
-        return (lineage_of(extract_with_lineage(spread_for_kernel(md), bp))
+        return (lineage_of(extract_with_lineage(md, bp))
                 .select("doc_id", "status", "n_spans"))
     q["extract_lineage"] = extract_lineage
 
@@ -240,8 +238,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- scalar functions ----
     def delimiter_normalization(s, d):
         from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-        # spread: the regexp_extract_all over the whole markdown column
-        # would otherwise run inside the single-row-group scan task
+        # spread: no kernel_op sizes this JVM-only stage, and the
+        # regexp_extract_all over the whole markdown column would
+        # otherwise run inside the single-row-group scan task
         md = spread_for_kernel(_f(s, d, "parsed_markdown"))
         pat = r"(\$\$[\s\S]*?\$\$|\\\[[\s\S]*?\\\])"
         return md.select(

@@ -61,7 +61,7 @@ def main() -> None:
     if args.checkpoint:
         run_resumable(md, args.output, args.checkpoint, boilerplate=bp)
     else:
-        spans = extract_spans(md, boilerplate=bp, rebalance=False)
+        spans = extract_spans(md, boilerplate=bp)
         if args.output:
             spans.write.mode("overwrite").parquet(args.output)
         else:

@@ -443,8 +443,10 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
                 "v": list(mat) * n_bands,
             })
 
+    # spread here: explode_bands is a batch-matrix mapInPandas, not a
+    # kernel_op, so nothing else sizes its input
     exploded = spread_for_kernel(
-        emb.select("vec_id", "embedding"), key="vec_id").mapInPandas(
+        emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
         explode_bands,
         schema="vec_id long, band int, band_key int, v array<double>")
 

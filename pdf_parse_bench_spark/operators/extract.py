@@ -8,8 +8,8 @@ build. Stages:
   markdown corpus ──► compute_boilerplate (corpus-level repeated first/last
                       line aggregation — the distributed analog of the
                       reference's per-page y-cluster header/footer strip, P2)
-                 ──► extract_spans (kernel_op over one wave of hash-spread
-                      rows, operators/skew.spread_for_kernel)
+                 ──► extract_spans (kernel_op, which spreads its input
+                      over one wave of Python tasks)
   layout blocks  ──► extract_spans_from_layout (collect_list per doc_id
                       → batched kernel_op: XY-cut order + category strip)
   pdf bytes      ──► parse_pdfs / pdf_spans (kernel_op byte-stream
@@ -59,6 +59,9 @@ def compute_boilerplate(md_df: DataFrame) -> DataFrame:
     first = F.trim(F.regexp_extract("markdown", pat, 1))
     last = F.trim(F.reverse(
         F.regexp_extract(F.reverse(F.col("markdown")), pat, 1)))
+    # spread on the groupBy's own input, not the kernel's: above
+    # MIN_SPREAD_BYTES the repartition replaces the count's exchange and
+    # moves the explode off the single-row-group scan task
     edges = (
         spread_for_kernel(md_df.select("doc_id", "markdown"),
                           min_bytes=MIN_SPREAD_BYTES)
@@ -84,15 +87,11 @@ def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,
 
     One ``kernel_op`` runs ``parse_markdown`` per document against the
     broadcast boilerplate set (collected from the corpus when not given).
-    ``rebalance`` spreads the input over one wave of Python tasks first
-    (skew.spread_for_kernel, no Spark job); it is off where the caller
-    has already spread the rows, or where the input is a streaming frame,
-    whose ``df.rdd`` the spread cannot read."""
+    ``rebalance`` has no effect (kernel_op sizes the stage); it stays only
+    for callers that still pass it."""
     if boilerplate is None:
         boilerplate = _collect_boilerplate(md_df)
     bp = md_df.sparkSession.sparkContext.broadcast(boilerplate)
-    if rebalance:
-        md_df = spread_for_kernel(md_df)
     return kernel_op(md_df, lambda md: parse_markdown(md, bp.value),
                      schemas.EXTRACTED_SPANS_SCHEMA, args=["markdown"])
 
@@ -124,7 +123,6 @@ def extract_spans_from_html(html_df: DataFrame) -> DataFrame:
     """Structured-markup path (M4 analog; north_rule's HTML boilerplate
     strip + DOM heuristics): header/footer/nav/script subtrees dropped by
     DOM role, body walked in document order, spans emitted."""
-    html_df = spread_for_kernel(html_df)
     return kernel_op(html_df, parse_html, schemas.EXTRACTED_SPANS_SCHEMA,
                      args=["html"])
 
@@ -135,15 +133,12 @@ def extract_spans_from_tei(tei_df: DataFrame) -> DataFrame:
     kernel inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.teidoc import parse_tei
 
-    tei_df = spread_for_kernel(tei_df)
     return kernel_op(tei_df, parse_tei, schemas.EXTRACTED_SPANS_SCHEMA,
                      args=["tei"])
 
 
-def parse_pdfs(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
+def parse_pdfs(pdf_df: DataFrame) -> DataFrame:
     """Raw-PDF path (M2): byte-stream tokenizer inside Arrow batches."""
-    if rebalance:
-        pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(pdf_df, lambda b: [{"text": extract_pdf_text(bytes(b))}],
                      schemas.PDF_TEXT_SCHEMA, args=["pdf_bytes"])
 
@@ -153,11 +148,11 @@ def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     separation (math-face runs + formula-line banding,
     kernels/pdftext._runs_to_spans) → ordered (kind, text) spans per doc —
     the reference's per-backend extraction contract recovered without a
-    VLM (block model: parsers/dots_ocr/__main__.py:125-142)."""
+    VLM (block model: parsers/dots_ocr/__main__.py:125-142).
+    ``rebalance`` has no effect (kernel_op sizes the stage); it stays only
+    for callers that still pass it."""
     from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_spans
 
-    if rebalance:
-        pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(pdf_df, lambda b: extract_pdf_spans(bytes(b)),
                      "doc_id string, offset int, kind string, text string, "
                      "media_ref string", args=["pdf_bytes"])
@@ -190,10 +185,11 @@ def pdf_encrypt_audit(pdf_df: DataFrame,
     probes exactly as before."""
     from pdf_parse_bench_spark.kernels.pdfcrypt import sniff_encryption
 
-    pdf_df = spread_for_kernel(pdf_df)
     args = ["pdf_bytes"]
     if passwords_df is not None:
-        pdf_df = pdf_df.join(
+        # spread before the join: the broadcast join's plan is adaptive,
+        # so kernel_op would leave the kernel on the scan's tasks
+        pdf_df = spread_for_kernel(pdf_df).join(
             F.broadcast(passwords_df.select("doc_id", "password")),
             "doc_id", "left")
         args.append("password")
@@ -223,7 +219,6 @@ def rasterize_pages(pdf_df: DataFrame, include_png: bool = True) -> DataFrame:
     All inside Arrow batches."""
     from pdf_parse_bench_spark.kernels.pdftext import rasterize_pdf
 
-    pdf_df = spread_for_kernel(pdf_df)
     cols = ("page_no", "png", "width", "height", "ink_ratio")
     return kernel_op(
         pdf_df,
@@ -240,11 +235,10 @@ def pdf_image_stats_op(pdf_df: DataFrame) -> DataFrame:
     decoded) via kernels/pdftext.pdf_image_stats — DCTDecode streams
     (baseline AND progressive JPEG) and raw/Flate rasters decode to true
     means; undecodable data degrades to decoded=false rows, never an
-    abort (X4). Same pruned-scan → spread_for_kernel → kernel_op shape
-    as the other PDF fan-outs."""
+    abort (X4). Same pruned-scan → kernel_op shape as the other PDF
+    fan-outs."""
     from pdf_parse_bench_spark.kernels.pdftext import pdf_image_stats
 
-    pdf_df = spread_for_kernel(pdf_df)
     return kernel_op(
         pdf_df, lambda b: pdf_image_stats(bytes(b)),
         "doc_id string, page_no int, seq int, media_ref string, "

@@ -3,10 +3,11 @@
 The reference runs each backend through one interface (`PDFParser.parse`,
 utilities/base_parser.py:8-43); here that interface is ``kernel_op``: a
 plain Python kernel maps one document's argument values to the rows it
-emits, and this module owns the Python boundary around it — the single
-``mapInPandas`` call, the per-batch loop, the key copy and the columnar
-frame build. Sizing (operators/skew.py) and failure isolation stay with
-the caller.
+emits, and this module owns the Python boundary around it — the stage's
+one-wave sizing (operators/skew.spread_for_kernel, hashed on ``keys``),
+the single ``mapInPandas`` call, the per-batch loop, the key copy and
+the columnar frame build. No caller spreads a kernel's input; failure
+isolation stays with the caller.
 
 Fan-out convention: a kernel that turns one document into many small
 numeric rows (winnowing fingerprints, shingle digests, trigram counts)
@@ -45,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from pdf_parse_bench_spark.operators.skew import spread_for_kernel
+
 
 def kernel_op(df: DataFrame,
               kernel: Callable[..., Sequence[Mapping]],
@@ -57,7 +60,9 @@ def kernel_op(df: DataFrame,
     column; the helper copies the input row's ``keys`` columns onto every
     one of them, so the kernel supplies only the remaining columns of
     ``schema`` (extra entries are ignored). An empty list drops the input
-    row. One pandas frame is built per Arrow batch, column by column."""
+    row. One pandas frame is built per Arrow batch, column by column.
+    The (keys, args) projection is spread over one wave of Python tasks
+    first (skew.spread_for_kernel)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     keys, args = list(keys), list(args)
@@ -77,5 +82,5 @@ def kernel_op(df: DataFrame,
                     col.extend([r[c] for r in rows])
             yield pd.DataFrame(out)
 
-    return (df.select(*dict.fromkeys(keys + args))
+    return (spread_for_kernel(df.select(*dict.fromkeys(keys + args)), *keys)
             .mapInPandas(run, schema=schema))

@@ -65,11 +65,11 @@ def _half_up(x: float, scale: float = 1e6) -> float:
 
 def decode_media(media_df: DataFrame) -> DataFrame:
     """Per-row decode over (doc_id, offset, media_ref, media_bytes),
-    format-sniffed by magic bytes. Input is size-rebalanced first
-    (operators/skew.rebalance_by_size): a media table is written in few
-    large files, so without the explicit repartition the decode stage runs
-    on a handful of tasks and an oversized payload stalls its whole
-    partition — invisible to AQE because it is UDF-stage skew.
+    format-sniffed by magic bytes. A media table is written in few large
+    files, so kernel_op's one-wave spread (operators/skew.py, hashed on
+    the three key columns, no Spark job) is what puts the decode on every
+    core. There is no band for oversized payloads: the eager p99 sample
+    it needed cost a job and a second wave of Python tasks.
 
       - PNG → real pixel decode (kernels/png.py) → width/height/channels +
         mean intensity in [0,1] (6 dp half-up, engine-portable); status 'ok'
@@ -85,9 +85,7 @@ def decode_media(media_df: DataFrame) -> DataFrame:
         a task failure and never an all-null row (X4 isolation)."""
     from pdf_parse_bench_spark.kernels.jpeg import (
         is_jpeg, jpeg_decode, jpeg_dims)
-    from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    media_df = rebalance_by_size(media_df, size_col=F.length("media_bytes"))
     ph_mean = _half_up(float(error_placeholder().mean()) / 255.0)
 
     def decode(b):
@@ -143,11 +141,9 @@ def render_formula_artifacts(formulas: DataFrame,
     §4.1); the render and stats math is identical either way."""
     from pdf_parse_bench_spark.kernels.png import encode_png
     from pdf_parse_bench_spark.kernels.render import render_formula
-    from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    # same UDF-stage skew story as decode_media
-    formulas = rebalance_by_size(formulas, size_col=F.length("formula"))
-
+    # sized like decode_media: kernel_op hashes (doc_id, offset) over one
+    # wave of tasks instead of rendering inside the single-row-group scan
     ph = error_placeholder()
     placeholder = {
         "width": ph.shape[1], "height": ph.shape[0],
@@ -206,18 +202,15 @@ def shrink_pixels(img: np.ndarray, max_side: int = THUMB_SIDE) -> np.ndarray:
 
 def thumbnail_media(media_df: DataFrame) -> DataFrame:
     """Thumbnail generation over the media table — the resize stage a
-    training-data pipeline runs before a vision encoder, as a
-    size-rebalanced kernel_op over Arrow batches (never per-row
-    Python). Decode via the real PNG/JPEG kernels, block-average shrink
-    per `shrink_pixels` to THUMB_SIDE, re-encode PNG; emits thumb dims,
+    training-data pipeline runs before a vision encoder, as a kernel_op
+    over Arrow batches (never per-row Python). Decode via the real
+    PNG/JPEG kernels, block-average shrink per `shrink_pixels` to
+    THUMB_SIDE, re-encode PNG; emits thumb dims,
     the thumb's mean intensity (6 dp half-up) and the re-encoded byte
     count. Undecodable payloads get the error-placeholder's thumbnail
     (status 'decode_error') — never a task failure (X4 isolation)."""
     from pdf_parse_bench_spark.kernels.jpeg import is_jpeg, jpeg_decode
     from pdf_parse_bench_spark.kernels.png import encode_png
-    from pdf_parse_bench_spark.operators.skew import rebalance_by_size
-
-    media_df = rebalance_by_size(media_df, size_col=F.length("media_bytes"))
 
     def thumbnail(b):
         raw = bytes(b) if b is not None else b""
@@ -250,8 +243,7 @@ def thumbnail_media(media_df: DataFrame) -> DataFrame:
 
 def audio_features(audio_df: DataFrame) -> DataFrame:
     """WAV metadata + PCM-16 signal stats over (doc_id, media_ref,
-    media_bytes), as a size-rebalanced kernel_op (audio payloads skew
-    exactly like oversized PDFs). Per row:
+    media_bytes), as a kernel_op over Arrow batches. Per row:
 
       - PCM-16 → channels/rate/bits/n_samples/duration_ms + mean absolute
         amplitude (integer-sum / n, 3 dp half-up) and peak |amplitude|;
@@ -261,9 +253,7 @@ def audio_features(audio_df: DataFrame) -> DataFrame:
       - anything else / corrupt → an all-zero row with status
         'decode_error' — never a task failure (X4 isolation)."""
     from pdf_parse_bench_spark.kernels.wav import parse_wav
-    from pdf_parse_bench_spark.operators.skew import rebalance_by_size
 
-    audio_df = rebalance_by_size(audio_df, size_col=F.length("media_bytes"))
     meta_cols = ("channels", "sample_rate", "bits", "n_samples",
                  "duration_ms")
 
@@ -301,15 +291,10 @@ def video_frames(video_df: DataFrame) -> DataFrame:
     """Frame-sampling over Y4M video payloads: one output row per sampled
     frame (frame 0, FRAME_STRIDE, 2*FRAME_STRIDE, ...) with the frame's
     luma mean (6 dp half-up) — the pre-embedding subsample a multimodal
-    training pipeline runs before a vision encoder. Size-rebalanced
-    kernel_op (video rows are the heaviest payloads in the media table —
-    exactly the UDF-stage skew rebalance_by_size exists for). Corrupt or
-    non-Y4M payloads yield ONE frame_no=-1 row with status
-    'decode_error' (X4: visible, never a task failure)."""
+    training pipeline runs before a vision encoder, as a kernel_op over
+    Arrow batches. Corrupt or non-Y4M payloads yield ONE frame_no=-1 row
+    with status 'decode_error' (X4: visible, never a task failure)."""
     from pdf_parse_bench_spark.kernels.y4m import parse_y4m
-    from pdf_parse_bench_spark.operators.skew import rebalance_by_size
-
-    video_df = rebalance_by_size(video_df, size_col=F.length("media_bytes"))
 
     def frames(b):
         raw = bytes(b) if b is not None else b""

@@ -55,10 +55,11 @@ def _with_norm(df: DataFrame) -> DataFrame:
     from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
     # spread: the single-row-group embeddings file would evaluate every
-    # interpreted fold (norms, plane/centroid dots) in ONE scan task;
-    # per-row arithmetic is order-independent, so rows are unchanged
+    # interpreted fold (norms, plane/centroid dots) in ONE scan task, and
+    # these JVM stages have no kernel_op to size them; per-row arithmetic
+    # is order-independent, so rows are unchanged
     return spread_for_kernel(
-        df.select("vec_id", "embedding"), key="vec_id"
+        df.select("vec_id", "embedding"), "vec_id"
     ).select(
         "vec_id", _as_double().alias("v")
     ).withColumn(
@@ -503,8 +504,9 @@ def semantic_dedup(emb: DataFrame,
 
     from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
+    # spread here: assign is a batch-matrix mapInPandas, not a kernel_op
     assigned = spread_for_kernel(
-        emb.select("vec_id", "embedding"), key="vec_id").mapInPandas(
+        emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
         assign, schema="vec_id long, cell int, v array<double>")
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("_csize"))
     assigned = (

@@ -11,20 +11,19 @@ Nothing here may collect rows to one process or run a single-partition
 global sort (a ``Window.orderBy(size)`` bin-packer is a deliberate
 non-choice at 10^12 docs).
 
-  - spread_for_kernel: the one sizing rule for kernel stages. No Spark
-    job: ``n = min(defaultParallelism, ceil(size estimate / TASK_BYTES))``
-    hash partitions on the key, and no exchange at all when ``n <= 1`` or
-    the input already has ``n`` partitions (the 100 TB layout: thousands
-    of files and row groups). The sf fixture tables are single parquet
-    row groups that no maxPartitionBytes setting can split, so without
-    the spread their kernel stage runs as one task.
+  - spread_for_kernel: the one sizing rule for kernel stages, applied by
+    ``kernel_op`` to every kernel's input. It reads only the plan and
+    runs no Spark job. The sf fixture tables are single parquet row
+    groups that no maxPartitionBytes setting can split, so without the
+    spread their kernel stage runs as one task. Other callers are the
+    aggregation pre-spreads and the JVM stages and batch-matrix kernels
+    that would otherwise run inside that one scan task.
   - rebalance_by_size: hash spread over two waves, plus a band of
-    partitions that isolates the rows above an eagerly sampled p99 size,
-    so one giant payload never shares a task with thousands of small
-    ones (AQE cannot split a running Python task). Only the media
-    decoders use it: no workload measures them, and on markdown and PDF
-    every band variant lost to a plain one-wave hash (a band in the same
-    wave made a straggler, one of its own cost a wave).
+    partitions that isolates the rows above an eagerly sampled p99 size.
+    Nothing in the package calls it: on markdown and PDF every band
+    variant lost to a plain one-wave hash (a band in the same wave made
+    a straggler, one of its own cost a wave). perfbench's traced skew
+    layers still time it.
 """
 
 from __future__ import annotations
@@ -73,36 +72,44 @@ def rebalance_by_size(df: DataFrame, size_col: Column) -> DataFrame:
     )
 
 
-def spread_for_kernel(df: DataFrame, key: str = "doc_id",
+def spread_for_kernel(df: DataFrame, *keys: str,
                       min_bytes: int = 0) -> DataFrame:
     """Spread a kernel stage's input over one wave of Python tasks.
 
-    ``n = min(defaultParallelism, ceil(catalyst size estimate /
-    TASK_BYTES))`` partitions, hashed on `key` (a stable column, so the
-    spread is replay-safe under task retry). The estimate is free: no
-    Spark job runs, and an input the optimizer cannot size counts as
-    large. No exchange is added when ``n <= 1`` or when the input already
-    has ``n`` partitions. Reading that partition count from ``df.rdd``
-    runs any exchange the input already has, so an input that is
-    shuffled already should skip the spread (``rebalance=False``).
+    Hashes on `keys` (``doc_id`` when none are given): stable columns, so
+    the spread is replay-safe under task retry. No Spark job runs to
+    decide; the input is left alone when
+
+    1. it is a streaming frame, which has no partitions to count;
+    2. its physical plan is adaptive, i.e. it already has an exchange (a
+       groupBy, a join, a ``repartition``, or a cache of one of those):
+       that shuffle placed the rows already, and counting its partitions
+       through ``df.rdd`` would run it;
+    3. otherwise ``n = min(defaultParallelism, ceil(catalyst size
+       estimate / TASK_BYTES))`` and ``n <= 1`` or the input already has
+       ``n`` partitions (the 100 TB layout: thousands of files and row
+       groups). An input the optimizer cannot size counts as large.
 
     Inputs estimated below `min_bytes` are left alone. Only the
     pre-spreads that feed an aggregation pass it (MIN_SPREAD_BYTES):
     their exchange replaces the aggregation's own, and below 4 MB the
     spread traded 17-30% layout time for 9-22% more peak RSS."""
+    if df.isStreaming:
+        return df
+    qe = df._jdf.queryExecution()
     n = df.sparkSession.sparkContext.defaultParallelism
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
+        size = int(qe.optimizedPlan().stats().sizeInBytes())
     except Exception:
         size = None
     if size is not None:
         if size < min_bytes:
             return df
         n = min(n, -(-size // TASK_BYTES))
-    if n <= 1 or df.rdd.getNumPartitions() >= n:
+    if (n <= 1 or qe.executedPlan().nodeName() == "AdaptiveSparkPlan"
+            or df.rdd.getNumPartitions() >= n):
         return df
-    return df.repartition(n, key)
+    return df.repartition(n, *(keys or ("doc_id",)))
 
 
 # Input bytes per Python task. Swept over 16, 64, 128, 256 and 1024 KiB

@@ -3,8 +3,8 @@ dedup and textstats operators.
 
 ``word_array`` (JVM column) and ``doc_words`` (Python, inside kernels)
 are the one tokenization every text operator uses; ``text_kernel`` runs
-a per-doc kernel over the size-spread (doc_id, text) input, which is
-how every dedup/textstats hashing stage sizes its Python tasks.
+a per-doc kernel over the (doc_id, text) input, which is how every
+dedup/textstats hashing stage reaches the Python boundary.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.operators.kernel import kernel_op
-from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
 
 def word_array():
@@ -37,11 +36,10 @@ def word_grams(words: list[str], n: int) -> list[str]:
 
 
 def text_kernel(docs: DataFrame, kernel, schema: str) -> DataFrame:
-    """``kernel(text)`` per doc on the spread (doc_id, text) input; the
-    schema names only the value columns, doc_id keeps its input type."""
+    """``kernel(text)`` per doc on the (doc_id, text) input; the schema
+    names only the value columns, doc_id keeps its input type."""
     id_t = docs.schema["doc_id"].dataType.simpleString()
-    return kernel_op(spread_for_kernel(docs.select("doc_id", "text")), kernel,
-                     f"doc_id {id_t}, {schema}", args=["text"])
+    return kernel_op(docs, kernel, f"doc_id {id_t}, {schema}", args=["text"])
 
 
 def ngram_digests(docs: DataFrame, n: int) -> DataFrame:

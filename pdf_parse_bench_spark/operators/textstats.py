@@ -206,7 +206,7 @@ def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     # spread before the explode: the single-row-group fixture layout would
     # otherwise run the whole word explode + partial aggregation in ONE
     # scan task (guide §2.5 input skew; no-op when the scan is already
-    # parallel)
+    # parallel). A JVM-only stage, so no kernel_op sizes it.
     w = spread_for_kernel(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(word_array()).alias("word"))
     tf = w.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
@@ -373,11 +373,15 @@ def doc_stats_rollup(docs: DataFrame) -> DataFrame:
             la for la in langs if counts[la] == best)
         return [{"pred_lang": pred, "quality": quality}]
 
-    # NOT spread_for_kernel'd: avg(quality) sums 1e-6-quantized doubles, so
-    # its partial-sum ORDER is observable at the 6th decimal — repartitioning
-    # upstream of the rollup flips boundary groups vs the oracle's sequential
-    # sum (seen at sf0.01: one group off by 1e-6). The kernel is cheap enough
-    # single-stage (~1 s at sf1.0); input order stays the scan order.
+    # avg(quality) sums 1e-6-quantized doubles, so its partial-sum ORDER is
+    # observable at the 6th decimal: a round-robin or doc_id spread upstream
+    # of the rollup flips boundary groups vs the oracle's sequential sum
+    # (seen at sf0.01: one group off by 1e-6). kernel_op's spread keeps
+    # the order: at sf0.01 the (source, text) input is estimated at 37 KB,
+    # so n = 1 and there is no exchange; above that it hashes on
+    # keys=("source",), which keeps each source's rows in one task in the
+    # order of the one scan task; only the grand total then sums partials
+    # from several tasks.
     feats = kernel_op(docs, feats_kernel,
                       "source string, pred_lang string, quality double",
                       keys=("source",), args=["text"])

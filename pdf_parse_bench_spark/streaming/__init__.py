@@ -36,10 +36,7 @@ def stream_extract(
         spark.readStream.schema(PARSED_MARKDOWN_SCHEMA)
         .parquet(input_dir)
     )
-    # rebalance=False: spread_for_kernel reads df.rdd, which a streaming
-    # frame cannot give; the file source's maxFilesPerTrigger bounds
-    # batch skew instead.
-    spans = extract_spans(stream, boilerplate=boilerplate, rebalance=False)
+    spans = extract_spans(stream, boilerplate=boilerplate)
     return (
         spans.writeStream.format("memory")
         .queryName(table_name)

@@ -134,7 +134,7 @@ def test_binaryfile_pdf_source(spark, fx_smoke, tmp_path):
     for r in pdfs.itertuples(index=False):
         (d / f"{r.doc_id}.pdf").write_bytes(bytes(r.pdf_bytes))
     corpus = read_pdf_corpus(spark, str(d))
-    got = parse_pdfs(corpus, rebalance=False)
+    got = parse_pdfs(corpus)
     gold = _read(spark, fx_smoke, "golden_pdf_text")
     want = gold.where(gold.doc_id.isin(list(pdfs.doc_id)))
     assert got.count() == 20
@@ -178,16 +178,16 @@ def test_benchmark_facade(spark, fx_smoke):
     assert all(v == 10.0 for v in rows.values())
 
 
-# smoke input table and options per registered backend; markdown skips its
-# size rebalance (and PDFs theirs) so the kernel sees the 2 vs 17 layouts
+# smoke input table and options per registered backend; kernel_op leaves
+# a repartitioned input alone, so every backend's kernel sees the 2 vs 17
+# layouts
 _BACKEND_INPUTS = {
-    "markdown": ("parsed_markdown",
-                 {"boilerplate": frozenset(), "rebalance": False}),
+    "markdown": ("parsed_markdown", {"boilerplate": frozenset()}),
     "html": ("html_documents", {}),
     "tei": ("tei_documents", {}),
     "layout": ("layout_blocks", {}),
-    "pdf-text": ("pdf_docs", {"rebalance": False}),
-    "pdf-spans": ("pdf_docs", {"rebalance": False}),
+    "pdf-text": ("pdf_docs", {}),
+    "pdf-spans": ("pdf_docs", {}),
 }
 
 

@@ -539,3 +539,62 @@ def test_kernel_stages_one_wave_no_eager_job(spark, fx_smoke):
                  for j in ran for s in tracker.getJobInfo(j).stageIds
                  if tracker.getStageInfo(s) is not None]
         assert tasks and max(tasks) <= sc.defaultParallelism, (name, tasks)
+
+
+def test_kernel_op_sizes_its_input(spark, fx_smoke):
+    """kernel_op owns the one-wave rule: it spreads a raw scan to the
+    rule's n tasks without running a job, and leaves an input that is
+    already shuffled (groupBy, repartition) or streaming alone."""
+    from pdf_parse_bench_spark.operators.extract import (
+        extract_spans,
+        extract_spans_from_layout,
+    )
+    from pdf_parse_bench_spark.operators.media import decode_media
+    from pdf_parse_bench_spark.operators.resume import extract_with_lineage
+    from pdf_parse_bench_spark.operators.skew import TASK_BYTES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_and_tasks(build):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = build()
+        built = set(tracker.getJobIdsForGroup(None)) - before
+        out.write.format("noop").mode("overwrite").save()
+        ran = set(tracker.getJobIdsForGroup(None)) - before
+        tasks = [tracker.getStageInfo(s).numTasks
+                 for j in ran for s in tracker.getJobInfo(j).stageIds
+                 if tracker.getStageInfo(s) is not None]
+        return out, built, tasks
+
+    def read(name):
+        return spark.read.parquet(str(fx_smoke / f"{name}.parquet"))
+
+    def exchanges(df):
+        return (df._jdf.queryExecution().executedPlan().toString()
+                .count("Exchange "))
+
+    media = read("media_files")  # reading a parquet schema runs a job
+    _, built, _ = jobs_and_tasks(lambda: decode_media(media))
+    assert not built, ("decode_media jobs while building", sorted(built))
+
+    md = read("parsed_markdown")
+    est = int(md.select("doc_id", "markdown")._jdf.queryExecution()
+              .optimizedPlan().stats().sizeInBytes())
+    n = min(sc.defaultParallelism, -(-est // TASK_BYTES))
+    assert n > 1
+    _, built, tasks = jobs_and_tasks(
+        lambda: extract_with_lineage(md, frozenset()))
+    assert not built and max(tasks) == n, (n, tasks)
+
+    layout = extract_spans_from_layout(read("layout_blocks"))
+    assert exchanges(layout) == 1  # the groupBy's own
+
+    out, built, tasks = jobs_and_tasks(
+        lambda: extract_spans(md.repartition(17), boilerplate=frozenset()))
+    assert not built and max(tasks) == 17, tasks
+    assert exchanges(out) == 1
+
+    stream = (spark.readStream.schema(md.schema)
+              .parquet(str(fx_smoke / "parsed_markdown.parquet")))
+    assert extract_spans(stream, boilerplate=frozenset()).isStreaming

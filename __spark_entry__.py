@@ -743,7 +743,7 @@ _EMB_NORM_CTE = (
 
 def _sketch_words_sql(bits: int) -> tuple[str, str]:
     """The two 32-bit sign-sketch words from the SAME seeded hyperplanes
-    the Spark operator uses (similarity._sig_words)."""
+    the Spark operator uses (similarity._sig_words_udf)."""
     planes = sim.hyperplanes(bits)
     words = []
     for w in range(0, bits, 32):

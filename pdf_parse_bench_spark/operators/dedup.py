@@ -20,10 +20,19 @@ DataFrame API.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.functions import round_half_up
-from pdf_parse_bench_spark.operators.skew import spread_for_kernel
+from pdf_parse_bench_spark.operators.similarity import (
+    fold_dots,
+    hyperplanes,
+    map_embeddings,
+    pair_cosines,
+)
 from pdf_parse_bench_spark.operators.text import (
     doc_words,
     ngram_digests,
@@ -56,10 +65,6 @@ def _doc_shingle_ab(text: str):
     md5(shingle) for every word SHINGLE_N-gram of the doc (whole text as
     one shingle when shorter than SHINGLE_N words), byte-identical to the
     JVM conv(substring(md5(shingle), 1|9, 8), 16, 10) pair."""
-    import hashlib
-
-    import numpy as np
-
     buf = b"".join(hashlib.md5(s.encode()).digest()[:8]
                    for s in word_grams(doc_words(text), SHINGLE_N))
     ab = np.frombuffer(buf, dtype=">u4").astype(np.int64).reshape(-1, 2)
@@ -69,8 +74,6 @@ def _doc_shingle_ab(text: str):
 def _minhash_signature(text: str):
     """The doc's K minhash values (int64 array): h_i = (a + i·b) mod 2^32
     over its shingles' md5 halves, minimized per i."""
-    import numpy as np
-
     a, b = _doc_shingle_ab(text)
     idx = np.arange(MINHASH_K, dtype=np.int64)
     return ((a[:, None] + idx[None, :] * b[:, None])
@@ -104,8 +107,6 @@ def _minhash_band_rows(docs: DataFrame) -> DataFrame:
     md5(concat_ws('|', ...)) band keys. One kernel pass, no exchange;
     the kernel emits the doc's keys in band order and posexplode numbers
     them."""
-    import hashlib
-
     def band_keys(text):
         sig = _minhash_signature(text)
         return [{"band_key": [
@@ -315,10 +316,6 @@ def simhash64_blocks(docs: DataFrame) -> DataFrame:
     The r6 plan exploded every word and ran a 65-aggregate
     groupBy(doc_id) shuffle with 64 shiftright/and expressions per word
     row. Docs with no words emit no row, exactly like the r6 explode."""
-    import hashlib
-
-    import numpy as np
-
     shifts = np.arange(32, dtype=np.int64)
     weights = 1 << np.arange(16, dtype=np.int64)
 
@@ -379,9 +376,6 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
     )
 
 
-EMB_PAIR_BLOCK = 2048  # row-block size for the within-bucket pair matrix
-
-
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded random-projection LSH
     (the MinHash-banding construction applied to sign bits): each vector
@@ -402,91 +396,51 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
     fold per candidate ROW-PAIR inside the join (O(bucket^2) interpreted
     expressions — 78 s at sf1.0); this version ships (vec_id, band,
     band_key, v) once through ONE exchange and computes each bucket's
-    pair-cosine matrix as vectorized float64 ops in row blocks of
-    EMB_PAIR_BLOCK (memory O(block * bucket), work identical). All
-    arithmetic replays the JVM fold's operation order exactly — dot and
-    norm accumulate dimension-by-dimension, then one divide and the
-    floor(x*1e6+0.5)/1e6 rounding — so every surviving pair's cosine is
+    pair cosines with similarity.pair_cosines (row blocks, fold-order
+    dots: ``fold_dots``), so every surviving pair's cosine is
     bit-identical to the r6 plan and the DuckDB oracle (asserted by
     tests/test_oracle_parity.py; r6 hashes unchanged). Cross-band
     duplicate pairs carry identical rows and collapse in the final
     distinct(), exactly as before."""
-    import numpy as np
-    import pandas as pd
-    from pdf_parse_bench_spark.operators.similarity import hyperplanes
-
     pl = np.array(hyperplanes(EMB_LSH_PLANES), dtype=np.float64)  # (P, dim)
     n_bands = EMB_LSH_PLANES // EMB_LSH_ROWS
     mask = (1 << EMB_LSH_ROWS) - 1
     w_p = 1 << np.arange(EMB_LSH_PLANES, dtype=np.int64)
 
-    def explode_bands(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            # signature: sign of dot(v, plane_p), accumulated dim-by-dim in
-            # the same order as the JVM zip_with/aggregate fold so borderline
-            # signs match sign_bucket() exactly
-            acc = np.zeros((n, pl.shape[0]))
-            for d in range(mat.shape[1]):
-                acc += mat[:, d][:, None] * pl[:, d][None, :]
-            sig = ((acc >= 0).astype(np.int64) * w_p).sum(axis=1)
-            yield pd.DataFrame({
-                "vec_id": np.tile(pdf["vec_id"].to_numpy(), n_bands),
-                "band": np.repeat(np.arange(n_bands, dtype=np.int32), n),
-                "band_key": np.concatenate([
-                    ((sig >> (b * EMB_LSH_ROWS)) & mask)
-                    for b in range(n_bands)
-                ]).astype(np.int32),
-                "v": list(mat) * n_bands,
-            })
-
-    # spread here: explode_bands is a batch-matrix mapInPandas, not a
-    # kernel_op, so nothing else sizes its input
-    exploded = spread_for_kernel(
-        emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-        explode_bands,
-        schema="vec_id long, band int, band_key int, v array<double>")
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        g, dim = mat.shape
-        nrm = np.zeros(g)
-        for d in range(dim):
-            c = mat[:, d]
-            nrm += c * c
-        nrm = np.sqrt(nrm)
-        out_a, out_b, out_c = [], [], []
-        for i0 in range(0, g, EMB_PAIR_BLOCK):
-            i1 = min(i0 + EMB_PAIR_BLOCK, g)
-            dots = np.zeros((i1 - i0, g))
-            for d in range(dim):
-                c = mat[:, d]
-                dots += c[i0:i1][:, None] * c[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i0:i1][:, None] * nrm[None, :])
-                cos = np.floor(cos * 1000000.0 + 0.5) / 1000000.0
-            ii, jj = np.nonzero(cos >= threshold)
-            keep = (ii + i0) < jj  # vec_a < vec_b under the sorted order
-            out_a.append(ids[ii[keep] + i0])
-            out_b.append(ids[jj[keep]])
-            out_c.append(cos[ii[keep], jj[keep]])
+    def explode_bands(ids, mat):
+        # fold-order dots, so borderline signs match sign_bucket() exactly
+        sig = ((fold_dots(mat, pl) >= 0).astype(np.int64) * w_p).sum(axis=1)
         return pd.DataFrame({
-            "vec_a": np.concatenate(out_a) if out_a else
-            np.array([], dtype=np.int64),
-            "vec_b": np.concatenate(out_b) if out_b else
-            np.array([], dtype=np.int64),
-            "cosine": np.concatenate(out_c) if out_c else
-            np.array([], dtype=np.float64),
+            "vec_id": np.tile(ids, n_bands),
+            "band": np.repeat(np.arange(n_bands, dtype=np.int32), len(ids)),
+            "band_key": np.concatenate([
+                ((sig >> (b * EMB_LSH_ROWS)) & mask) for b in range(n_bands)
+            ]).astype(np.int32),
+            "v": list(mat) * n_bands,
         })
 
+    exploded = map_embeddings(
+        emb, explode_bands,
+        "vec_id long, band int, band_key int, v array<double>")
     pairs = exploded.groupBy("band", "band_key").applyInPandas(
-        verify, schema="vec_a long, vec_b long, cosine double")
+        lambda pdf: _near_dup_pairs(pdf, threshold),
+        schema="vec_a long, vec_b long, cosine double")
     return pairs.distinct()
+
+
+def _near_dup_pairs(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """embedding_near_dups' group function: the (vec_a < vec_b) pairs of
+    one (band, band_key) bucket at cosine >= threshold."""
+    frames = []
+    for ids, i0, cos in pair_cosines(pdf):
+        ii, jj = np.nonzero(cos >= threshold)
+        keep = (ii + i0) < jj  # vec_a < vec_b under the sorted order
+        frames.append(pd.DataFrame({
+            "vec_a": ids[ii[keep] + i0],
+            "vec_b": ids[jj[keep]],
+            "cosine": cos[ii[keep], jj[keep]],
+        }))
+    return pd.concat(frames, ignore_index=True)
 
 
 NGRAM_DUP_N = 8        # shingle width (words) — Lee et al. exact-substring dedup

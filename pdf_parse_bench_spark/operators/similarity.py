@@ -5,18 +5,23 @@ against the full corpus; one scan, no shuffle until the per-query top-k
 aggregation. Scale path: sign-LSH bucketing restricts each query to its
 bucket (the IVF analog: bucket = coarse cell).
 
-All arithmetic in float64 via built-in higher-order functions
-(zip_with/aggregate — JVM-side, no Python UDF), rounded to 6 dp so the
-DuckDB oracle matches bit-for-bit.
+All arithmetic is float64, rounded to 6 dp so the DuckDB oracle matches
+bit-for-bit: built-in higher-order folds (zip_with/aggregate) on the JVM,
+and in the batch-matrix kernels (``map_embeddings``, here and in
+operators/dedup.py) NumPy that replays the same fold order
+(``fold_dots``, ``pair_cosines``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pdf_parse_bench_spark.functions import round_half_up
+from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
 LSH_SEED = 20260816
 EMB_DIM = 64  # testdata embeddings.parquet: array<float>[64]
@@ -33,18 +38,20 @@ def hyperplanes(n_planes: int) -> list[list[float]]:
             for _ in range(n_planes)]
 
 
+def _dot_lit(vcol, plane: list[float]):
+    return F.aggregate(
+        F.zip_with(vcol, F.array(*[F.lit(x) for x in plane]),
+                   lambda x, y: x * y),
+        F.lit(0.0), lambda a, x: a + x)
+
+
 def sign_bucket(vcol, planes: list[list[float]]):
     """Integer LSH bucket: bit p = 1 iff dot(v, plane_p) >= 0. JVM-side
     (zip_with/aggregate fold); the int bucket is what becomes the Iceberg
     partition key at scale."""
-    bits = []
-    for p, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(vcol, F.array(*[F.lit(x) for x in plane]),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda a, x: a + x)
-        bits.append(F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    return sum(bits).cast("int")
+    return sum(F.when(_dot_lit(vcol, plane) >= 0, F.lit(1 << p))
+               .otherwise(F.lit(0))
+               for p, plane in enumerate(planes)).cast("int")
 
 
 def _as_double():
@@ -52,8 +59,6 @@ def _as_double():
 
 
 def _with_norm(df: DataFrame) -> DataFrame:
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
     # spread: the single-row-group embeddings file would evaluate every
     # interpreted fold (norms, plane/centroid dots) in ONE scan task, and
     # these JVM stages have no kernel_op to size them; per-row arithmetic
@@ -72,6 +77,62 @@ def _cosine(va, vb, na, nb):
         F.aggregate(F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0),
                     lambda a, x: a + x) / (na * nb)
     )
+
+
+def fold_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b.T`` accumulated dimension by dimension: the operation order
+    of the JVM folds (``_dot_lit``, ``_cosine``), so a sign, an argmax tie
+    or a rounded cosine computed from it is bit-identical to the JVM stage
+    and the DuckDB oracle. (A BLAS matmul sums in another order.)"""
+    out = np.zeros((a.shape[0], b.shape[0]))
+    for d in range(a.shape[1]):
+        out += a[:, d][:, None] * b[:, d][None, :]
+    return out
+
+
+PAIR_BLOCK = 2048  # row-block size for a group's pair-cosine matrix
+
+
+def pair_cosines(pdf: pd.DataFrame
+                 ) -> Iterator[tuple[np.ndarray, int, np.ndarray]]:
+    """All pair cosines of one group of (vec_id, v) rows, in row blocks:
+    yields ``(ids, i0, cos)`` per block of PAIR_BLOCK rows, with ``ids``
+    the group's vec_ids sorted ascending and ``cos[i, j]`` the cosine of
+    vectors ``ids[i0 + i]`` and ``ids[j]``. Norms and dots are fold-order
+    (``fold_dots``), then one divide and floor(x*1e6+0.5)/1e6, exactly as
+    ``_cosine`` rounds. Memory is O(PAIR_BLOCK * group)."""
+    order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
+    ids = pdf["vec_id"].to_numpy()[order]
+    mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+    nrm = np.zeros(len(mat))
+    for c in mat.T:
+        nrm += c * c
+    nrm = np.sqrt(nrm)
+    for i0 in range(0, len(mat), PAIR_BLOCK):
+        blk = slice(i0, i0 + PAIR_BLOCK)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = fold_dots(mat[blk], mat) / (nrm[blk][:, None] * nrm[None, :])
+            cos = np.floor(cos * 1000000.0 + 0.5) / 1000000.0
+        yield ids, i0, cos
+
+
+def map_embeddings(emb: DataFrame,
+                   fn: Callable[[np.ndarray, np.ndarray], pd.DataFrame],
+                   schema: str) -> DataFrame:
+    """The batch-matrix twin of operators/kernel.kernel_op: ``fn(ids,
+    mat)`` once per non-empty Arrow batch of ``emb``'s (vec_id,
+    embedding) rows, ``mat`` the batch's (n, dim) float64 matrix; ``fn``
+    returns the batch's output frame. The projection is spread over one
+    wave of Python tasks first (skew.spread_for_kernel)."""
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield fn(pdf["vec_id"].to_numpy(),
+                         np.array(pdf["embedding"].tolist(), dtype=np.float64))
+
+    return spread_for_kernel(
+        emb.select("vec_id", "embedding"), "vec_id"
+    ).mapInPandas(run, schema=schema)
 
 
 def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -103,6 +164,23 @@ def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _query_side(corpus: DataFrame, n_queries: int, *extra) -> DataFrame:
+    """The first `n_queries` vectors of a `_with_norm` corpus as the
+    (query_id, qv, qnorm, *extra) query side every ANN operator
+    broadcasts."""
+    return corpus.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
+        F.col("norm").alias("qnorm"), *extra)
+
+
+def _rerank(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact-cosine top-k of (query, corpus vector) candidate pairs,
+    a query never its own neighbour."""
+    scored = pairs.where(F.col("vec_id") != F.col("query_id")).withColumn(
+        "cosine", _cosine("qv", "v", F.col("qnorm"), F.col("norm")))
+    return _per_query_topk(scored, k)
+
+
 def brute_force_topk(emb: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Top-k cosine neighbors for the first `n_queries` vec_ids.
 
@@ -111,19 +189,8 @@ def brute_force_topk(emb: DataFrame, n_queries: int = 5, k: int = 10) -> DataFra
     deterministic (cosine desc, vec_id asc) tie-break.
     """
     corpus = _with_norm(emb)
-    queries = (
-        corpus.where(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", _cosine("qv", "v", F.col("qnorm"), F.col("norm")))
-    )
-    return _per_query_topk(scored, k)
+    return _rerank(
+        corpus.join(F.broadcast(_query_side(corpus, n_queries))), k)
 
 
 def lsh_recall(emb: DataFrame, n_queries: int = 5, k: int = 10,
@@ -225,24 +292,12 @@ def sketch_topk(emb: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     corpus = _with_norm(emb).select(
         "vec_id", "v", "norm",
         sig0("v").alias("s0"), sig1("v").alias("s1"))
-    queries = corpus.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"), F.col("norm").alias("qnorm"),
-        F.col("s0").alias("q0"), F.col("s1").alias("q1"),
-    )
-    pairs = (
-        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "ham",
-            F.bit_count(F.col("s0").bitwiseXOR(F.col("q0")))
-            + F.bit_count(F.col("s1").bitwiseXOR(F.col("q1"))),
-        )
-    )
-    cand = (
-        pairs.where(F.col("ham") <= SKETCH_HAM_T)
-        .withColumn("cosine", _cosine("qv", "v", F.col("qnorm"), F.col("norm")))
-    )
-    return _per_query_topk(cand, k)
+    queries = _query_side(corpus, n_queries,
+                          F.col("s0").alias("q0"), F.col("s1").alias("q1"))
+    ham = (F.bit_count(F.col("s0").bitwiseXOR(F.col("q0")))
+           + F.bit_count(F.col("s1").bitwiseXOR(F.col("q1"))))
+    return _rerank(
+        corpus.join(F.broadcast(queries)).where(ham <= SKETCH_HAM_T), k)
 
 
 def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
@@ -261,15 +316,6 @@ def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
     committed default for `ann_lsh`."""
     planes = hyperplanes(ANN_PLANES)
     corpus = _with_norm(emb).withColumn("bucket", sign_bucket(F.col("v"), planes))
-    queries = (
-        corpus.where(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            "bucket",
-        )
-    )
     # multi-probe: own bucket + all Hamming<=radius flips (all distinct, so
     # each (query, vector) pair is generated at most once — no dedup needed)
     flips = [F.col("bucket")]
@@ -280,16 +326,9 @@ def lsh_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
             F.col("bucket").bitwiseXOR(F.lit((1 << i) | (1 << j)))
             for i in range(ANN_PLANES) for j in range(i + 1, ANN_PLANES)
         ]
-    probes = queries.select(
-        "query_id", "qv", "qnorm",
-        F.explode(F.array(*flips)).alias("bucket"),
-    )
-    scored = (
-        corpus.join(F.broadcast(probes), "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", _cosine("qv", "v", F.col("qnorm"), F.col("norm")))
-    )
-    return _per_query_topk(scored, k)
+    probes = _query_side(corpus, n_queries,
+                         F.explode(F.array(*flips)).alias("bucket"))
+    return _rerank(corpus.join(F.broadcast(probes), "bucket"), k)
 
 
 IVF_CELLS = 16    # coarse cells at fixture scale; ~sqrt(N) in production
@@ -307,13 +346,6 @@ def ivf_centroids() -> list[list[float]]:
     rng = np.random.default_rng([LSH_SEED, 7, IVF_CELLS, EMB_DIM])
     return [[round(float(x), 6) for x in rng.standard_normal(EMB_DIM)]
             for _ in range(IVF_CELLS)]
-
-
-def _dot_lit(vcol, plane: list[float]):
-    return F.aggregate(
-        F.zip_with(vcol, F.array(*[F.lit(x) for x in plane]),
-                   lambda x, y: x * y),
-        F.lit(0.0), lambda a, x: a + x)
 
 
 def train_ivf_centroids(sample: "np.ndarray") -> list[list[float]]:
@@ -365,7 +397,6 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
         for ci, cv in enumerate(cents)
     ])
     assigned = corpus.withColumn("cell", (-best.getField("negc")).cast("int"))
-    qside = corpus.where(F.col("vec_id") < n_queries)
     probe_arr = F.array(*[
         F.struct(_dot_lit(F.col("v"), cv).alias("d"),
                  F.lit(ci).alias("cell"))
@@ -374,23 +405,10 @@ def ivf_topk(emb: DataFrame, n_queries: int = 5, k: int = 10,
     # top-nprobe cells per query: sort the C-entry struct array descending
     # (ties -> larger cell id; oracle mirrors with ORDER BY d DESC, cell
     # DESC) — all array-local, the query side is tiny by contract
-    probes = (
-        qside.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-            F.explode(F.slice(F.reverse(F.array_sort(probe_arr)),
-                              1, IVF_NPROBE)).alias("p"))
-        .select("query_id", "qv", "qnorm",
-                F.col("p.cell").alias("cell"))
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", _cosine("qv", "v", F.col("qnorm"),
-                                      F.col("norm")))
-    )
-    return _per_query_topk(scored, k)
+    top = F.slice(F.reverse(F.array_sort(probe_arr)), 1, IVF_NPROBE)
+    probes = _query_side(corpus, n_queries, F.explode(
+        F.transform(top, lambda p: p["cell"])).alias("cell"))
+    return _rerank(assigned.join(F.broadcast(probes), "cell"), k)
 
 
 def quantize_embeddings(emb: DataFrame) -> DataFrame:
@@ -463,51 +481,32 @@ def semantic_dedup(emb: DataFrame,
 
     Physical shape (r7, guide §4.2): cell assignment, the within-group
     pair cosines AND the per-dropped-vector aggregation all run as
-    vectorized NumPy inside Arrow batches. The r6 plan self-joined the
+    vectorized NumPy inside Arrow batches (``map_embeddings``, then
+    ``_dropped_near_dups`` per group). The r6 plan self-joined the
     assigned table on (cell, _sub) and evaluated an interpreted
     aggregate/zip_with cosine fold per candidate ROW-PAIR inside the
-    join condition (28 s at sf1.0); this version computes each group's
-    pair matrix in row blocks (same blocking as
-    dedup.embedding_near_dups) and, because every vector lives in
-    exactly one (cell, _sub) group, emits the final (vec_id, dup_of,
-    max_cosine) rows straight from the group — the old groupBy shuffle
-    disappears. Every float op replays the JVM fold's operation order
-    (dim-by-dim accumulation, one divide, floor(x*1e6+0.5)/1e6), so
-    results are bit-identical to r6 and the DuckDB oracle. The cell-size
-    pass re-evaluates the assignment kernel instead of caching the
-    corpus (~16 fused multiply-adds per row — cheaper than pinning
-    executor memory), exactly like the r6 plan re-evaluated its
-    assignment expressions in both subtrees."""
-    import pandas as pd
-    from pdf_parse_bench_spark.operators.dedup import EMB_PAIR_BLOCK
-
+    join condition (28 s at sf1.0). Because every vector lives in
+    exactly one (cell, _sub) group, the final (vec_id, dup_of,
+    max_cosine) rows come straight from the group — the old groupBy
+    shuffle disappears. Dots and cosines are fold-order
+    (``fold_dots``), so results are bit-identical to r6 and the DuckDB
+    oracle. The cell-size pass re-evaluates the assignment kernel
+    instead of caching the corpus (~16 fused multiply-adds per row —
+    cheaper than pinning executor memory), exactly like the r6 plan
+    re-evaluated its assignment expressions in both subtrees."""
     cents = np.array(ivf_centroids(), dtype=np.float64)  # (C, dim)
 
-    def assign(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            # dot(v, centroid_c) accumulated dim-by-dim — the same
-            # operation order as the JVM _dot_lit fold, so argmax ties
-            # (first occurrence == smallest cell id) match greatest()
-            # on (d, -cell) structs exactly
-            dots = np.zeros((n, cents.shape[0]))
-            for d in range(mat.shape[1]):
-                dots += mat[:, d][:, None] * cents[:, d][None, :]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": dots.argmax(axis=1).astype(np.int32),
-                "v": list(mat),
-            })
+    def assign(ids, mat):
+        # argmax keeps the first maximum, the smallest cell id, as
+        # greatest() on (d, -cell) structs does over the same dots
+        return pd.DataFrame({
+            "vec_id": ids,
+            "cell": fold_dots(mat, cents).argmax(axis=1).astype(np.int32),
+            "v": list(mat),
+        })
 
-    from pdf_parse_bench_spark.operators.skew import spread_for_kernel
-
-    # spread here: assign is a batch-matrix mapInPandas, not a kernel_op
-    assigned = spread_for_kernel(
-        emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-        assign, schema="vec_id long, cell int, v array<double>")
+    assigned = map_embeddings(emb, assign,
+                              "vec_id long, cell int, v array<double>")
     sizes = assigned.groupBy("cell").agg(F.count("*").alias("_csize"))
     assigned = (
         assigned.join(F.broadcast(sizes), "cell")
@@ -515,44 +514,30 @@ def semantic_dedup(emb: DataFrame,
             F.col("vec_id"),
             F.ceil(F.col("_csize") / F.lit(cell_cap))))
         .drop("_csize"))
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        g, dim = mat.shape
-        nrm = np.zeros(g)
-        for d in range(dim):
-            c = mat[:, d]
-            nrm += c * c
-        nrm = np.sqrt(nrm)
-        found = np.zeros(g, dtype=bool)
-        dup_of = np.zeros(g, dtype=np.int64)
-        max_cos = np.full(g, -np.inf)
-        for i0 in range(0, g, EMB_PAIR_BLOCK):
-            i1 = min(i0 + EMB_PAIR_BLOCK, g)
-            dots = np.zeros((i1 - i0, g))
-            for d in range(dim):
-                c = mat[:, d]
-                dots += c[i0:i1][:, None] * c[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (nrm[i0:i1][:, None] * nrm[None, :])
-                cos = np.floor(cos * 1000000.0 + 0.5) / 1000000.0
-            m = (cos >= SEMDEDUP_T) & (
-                np.arange(i0, i1)[:, None] < np.arange(g)[None, :])
-            anym = m.any(axis=0)
-            first = m.argmax(axis=0)
-            newly = anym & ~found
-            dup_of[newly] = ids[i0 + first[newly]]
-            found |= anym
-            if anym.any():
-                max_cos = np.maximum(
-                    max_cos, np.where(m, cos, -np.inf).max(axis=0))
-        return pd.DataFrame({
-            "vec_id": ids[found],
-            "dup_of": dup_of[found],
-            "max_cosine": max_cos[found],
-        })
-
     return assigned.groupBy("cell", "_sub").applyInPandas(
-        verify, schema="vec_id long, dup_of long, max_cosine double")
+        _dropped_near_dups,
+        schema="vec_id long, dup_of long, max_cosine double")
+
+
+def _dropped_near_dups(pdf: pd.DataFrame) -> pd.DataFrame:
+    """semantic_dedup's group function: each vector of one (cell, _sub)
+    group with a smaller-id partner at cosine >= SEMDEDUP_T, as (vec_id,
+    dup_of = its smallest such partner, max_cosine over those
+    partners)."""
+    g = len(pdf)
+    found = np.zeros(g, dtype=bool)
+    dup_of = np.zeros(g, dtype=np.int64)
+    max_cos = np.full(g, -np.inf)
+    for ids, i0, cos in pair_cosines(pdf):
+        m = (cos >= SEMDEDUP_T) & (
+            np.arange(i0, i0 + len(cos))[:, None] < np.arange(g)[None, :])
+        anym = m.any(axis=0)
+        newly = anym & ~found
+        dup_of[newly] = ids[i0 + m.argmax(axis=0)[newly]]
+        found |= anym
+        max_cos = np.maximum(max_cos, np.where(m, cos, -np.inf).max(axis=0))
+    return pd.DataFrame({
+        "vec_id": ids[found],
+        "dup_of": dup_of[found],
+        "max_cosine": max_cos[found],
+    })

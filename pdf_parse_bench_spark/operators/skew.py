@@ -15,9 +15,13 @@ non-choice at 10^12 docs).
     ``kernel_op`` to every kernel's input. It reads only the plan and
     runs no Spark job. The sf fixture tables are single parquet row
     groups that no maxPartitionBytes setting can split, so without the
-    spread their kernel stage runs as one task. Other callers are the
-    aggregation pre-spreads and the JVM stages and batch-matrix kernels
-    that would otherwise run inside that one scan task.
+    spread their kernel stage runs as one task. The other callers are
+    stages that would otherwise run inside that one scan task:
+    ``similarity.map_embeddings`` (the batch-matrix twin of kernel_op),
+    ``similarity._with_norm`` and ``textstats.tfidf_top_terms``' word
+    explode (JVM stages), the three aggregation pre-spreads in
+    ``extract.py``, ``pdf_encrypt_audit``'s spread ahead of its password
+    join, and two JVM queries in ``__spark_entry__.py``.
   - rebalance_by_size: hash spread over two waves, plus a band of
     partitions that isolates the rows above an eagerly sampled p99 size.
     Nothing in the package calls it: on markdown and PDF every band

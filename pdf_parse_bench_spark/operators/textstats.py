@@ -431,7 +431,6 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     At 100 TB the per-doc cost is O(n log n) in the doc's word count with
     no exchange at all; the alternative explode->groupBy(doc, gram) shape
     shuffles every gram of the corpus twice."""
-    ws = "filter(split(trim(text), ' +'), x -> x != '')"
     gram = ("array_sort(transform(sequence(1, size(ws) - %d), "
             "i -> concat_ws(' ', slice(ws, i, %d))))")
     top2 = (
@@ -452,7 +451,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         "         0L)), "
         "a -> a.tot)")
     base = (docs.select("doc_id", "text")
-            .withColumn("ws", F.expr(ws))
+            .withColumn("ws", word_array())
             .withColumn("nch", F.length("text"))
             .withColumn("cover2", F.expr(
                 f"IF(size(ws) >= 2, {top2}, 0L)"))

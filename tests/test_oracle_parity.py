@@ -2,17 +2,16 @@
 run queries() on Spark and oracle_sql() on DuckDB over sf0.01, compare
 row count + sorted column names + order-insensitive values.
 
-The full 57-query sweep lives in tools/check_parity.py; this test pins a
+The full 84-query sweep lives in tools/check_parity.py; this test pins a
 representative subset per operator family so `pytest -x -q` stays fast.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry
-from tools.check_parity import to_rows
+from tools.check_parity import oracle_connection, to_rows
 
 SF = "/root/testdata/sf0.01"
 
@@ -59,11 +58,7 @@ SUBSET = [
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return c
+    return oracle_connection(SF)
 
 
 @pytest.mark.parametrize("name", SUBSET)

@@ -54,6 +54,16 @@ def to_rows(df_pandas):
     return cols, rows
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table of `sf_dir`,
+    under the table names the oracle SQL reads."""
+    con = duckdb.connect()
+    for t in ("region nation customer supplier part orders lineitem events "
+              "documents embeddings").split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main():
     # default must match the sf the oracle fixture literals are pinned to
     # (ORACLE_FX in __spark_entry__.py == fixtures/sf0.01), or golden-oracle
@@ -61,12 +71,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("parity", cores=8, shuffle_partitions=16)
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
     qs, os_ = entry.queries(), entry.oracle_sql()
     failures = []
     for name, fn in qs.items():

@@ -65,6 +65,7 @@ from pdf_parse_bench_spark.operators.resume import (  # noqa: E402
     extract_with_lineage,
     lineage_of,
 )
+from pdf_parse_bench_spark.sources import read_fixture  # noqa: E402
 from pdf_parse_bench_spark.streaming import sessionize, windowed_event_counts  # noqa: E402
 
 # The driver's oracle runs at sf0.01; SQL literals must point at a fixed path.
@@ -72,12 +73,11 @@ ORACLE_FX = str(REPO / "fixtures" / "sf0.01")
 
 
 def _f(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    d = fx.ensure_fixtures(sf_dir)
-    return spark.read.parquet(str(d / f"{name}.parquet"))
+    return read_fixture(spark, fx.ensure_fixtures(sf_dir), name)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_fixture(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------

@@ -37,3 +37,26 @@ def test_read_fixture_keeps_spark_types_the_footer_cannot_give(spark,
         expected = spark.read.parquet(str(tmp_path / f"{name}.parquet"))
         assert df.schema == expected.schema, name
         assert df.collect() == expected.collect(), name
+
+
+def test_driver_queries_read_without_schema_jobs(spark, fx_correct):
+    """__spark_entry__'s readers take the footer schema: building
+    revenue_by_region runs no job, and building extract_spans runs only its
+    boilerplate pre-pass, the same jobs as on an already-read frame."""
+    import __spark_entry__ as entry
+    from conftest import SF_CORRECT as sf
+    from pdf_parse_bench_spark.operators.extract import extract_spans
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(build):
+        before = set(tracker.getJobIdsForGroup(None))
+        build()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    q = entry.queries()
+    assert jobs(lambda: q["revenue_by_region"](spark, sf)) == 0
+    assert jobs(lambda: entry._f(spark, sf, "parsed_markdown")) == 0
+    md = entry._f(spark, sf, "parsed_markdown")
+    assert jobs(lambda: q["extract_spans"](spark, sf)) == jobs(
+        lambda: extract_spans(md))

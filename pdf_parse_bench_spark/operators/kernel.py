@@ -6,8 +6,12 @@ plain Python kernel maps one document's argument values to the rows it
 emits, and this module owns the Python boundary around it — the stage's
 one-wave sizing (operators/skew.spread_for_kernel, hashed on ``keys``),
 the single ``mapInPandas`` call, the per-batch loop, the key copy and
-the columnar frame build. No caller spreads a kernel's input; failure
-isolation stays with the caller.
+the columnar frame build. An input that already comes out of an exchange
+keeps it: AQE coalesces that exchange under the same ``TASK_BYTES``
+floor (session.get_spark sets
+``spark.sql.adaptive.coalescePartitions.minPartitionSize``), so a
+post-``groupBy`` kernel stage runs on about one wave too. No caller
+spreads a kernel's input; failure isolation stays with the caller.
 
 Fan-out convention: a kernel that turns one document into many small
 numeric rows (winnowing fingerprints, shingle digests, trigram counts)

@@ -1,12 +1,17 @@
 """Sizing of kernel stages (north_rule: salted repartitioning on doc_id).
 
-Every Python task costs a fixed 0.15-0.3 s on a 4-vCPU host, even when
-its partition is empty: the worker waits for the JVM's header before it
-sees a row. An identity ``mapInPandas`` over 2,000 rows takes 0.34-0.50 s
-on 4 partitions, 0.64-0.81 s on 8, 0.93-1.10 s on 12 (also with 8 of the
-12 empty) and 1.36 s on 16; the same 12-partition job without Python
-takes 0.066 s. So a kernel stage should run as ONE wave of Python tasks
-with no job before it, not as several waves behind an eager sample.
+Every Python task pays a fixed cost, even when its partition is empty.
+Most of it was pyspark's own: ``worker_util.setup_spark_files`` ends each
+task with ``importlib.invalidate_caches()``, which on CPython 3.11 makes
+each of a worker's 16 ``zipimporter``s re-read the 1,328-entry directory
+of ``pyspark.zip`` (0.15 s of one core per task). ``worker_daemon`` now
+re-reads an archive only when it changed. Identity ``mapInPandas`` over
+2,000 rows, local[4] on 4 vCPUs, warm, medians of 7: 0.31 s on 4
+partitions, 0.32 s on 8, 0.35 s on 12 and 0.40 s on 16, against 0.36,
+0.47, 0.67 and 0.95 s with the re-reads; the same 12-partition job
+without Python takes 0.066 s. A task still costs a share of a wave, and
+an eager sample costs a job, so a kernel stage runs as ONE wave of
+Python tasks with no job before it.
 Nothing here may collect rows to one process or run a single-partition
 global sort (a ``Window.orderBy(size)`` bin-packer is a deliberate
 non-choice at 10^12 docs).
@@ -88,7 +93,10 @@ def spread_for_kernel(df: DataFrame, *keys: str,
     2. its physical plan is adaptive, i.e. it already has an exchange (a
        groupBy, a join, a ``repartition``, or a cache of one of those):
        that shuffle placed the rows already, and counting its partitions
-       through ``df.rdd`` would run it;
+       through ``df.rdd`` would run it. AQE coalesces a groupBy's or a
+       join's output to ``max(total bytes / defaultParallelism,
+       TASK_BYTES)`` per task, the same rule (session.get_spark sets that
+       floor); a ``repartition(n)`` keeps its n;
     3. otherwise ``n = min(defaultParallelism, ceil(catalyst size
        estimate / TASK_BYTES))`` and ``n <= 1`` or the input already has
        ``n`` partitions (the 100 TB layout: thousands of files and row

@@ -5,10 +5,12 @@ Local testing runs on local[N]; the same config block is what we'd ship to a
 skew-join splitting, Arrow on for all pandas-UDF exchange, shuffle partitions
 sized ~2-4x total cores — SURVEY.md §4).
 
-The Python workers find this package through ``PYTHONPATH``: when
-``get_spark`` launches the driver JVM it puts the package root first on the
-``PYTHONPATH`` the JVM hands its workers, so a script that found the package
-only through ``sys.path`` still runs every kernel.
+The Python workers find this package through ``PYTHONPATH``: ``get_spark``
+puts the package root (a directory, or the zip that ``--py-files``
+shipped) on the ``PYTHONPATH`` the JVM hands its workers
+(``spark.executorEnv.PYTHONPATH``), so a script that found the package
+only through ``sys.path`` still runs every kernel, and the worker daemon
+below starts.
 
 Cold start. When ``get_spark`` launches the driver JVM, it starts it from a
 dynamic class-data-sharing archive (JEP 350) of the classes an earlier
@@ -44,10 +46,23 @@ Measured with perfbench (``md_extract``, seed 1, 4 vCPUs, JDK 17.0.20,
 Spark 4.1.2, 2g heap), 10 alternating pairs: ``setup_s`` median 17.6 s
 without the archive, 10.5 s with it; in a traced pair the JVM start went
 9.7 -> 3.8 s and the first Python job 8.6 -> 4.9 s. Peak resident memory
-rose about 10% (1506 -> 1656 MB median); JDK 17.0.20 relocates the mapped
-archive at start (``ArchiveRelocationMode=1``), which would dirty its pages,
-but that cause is not verified. The session that records the
-archive started in 24.4 s and took 18 s longer to exit.
+rose about 10% (1506 -> 1656 MB median): the archive's pages are resident.
+JDK 17.0.20 relocates the mapped archive at start
+(``ArchiveRelocationMode=1``), which copies about 90 MB of it into anonymous
+memory. Mapping it at its requested base instead
+(``-XX:ArchiveRelocationMode=0``, which ``-Xlog:cds=info`` confirmed) keeps
+those pages file-backed but just as resident: the driver JVM's VmHWM read
+527/499 MB relocated and 538/521 MB not (two sessions each, local[2]), so
+that flag would not lower peak memory. The session that records the archive
+started in 24.4 s and took 18 s longer to exit.
+
+Python tasks. Every session forks its Python workers from
+``worker_daemon`` (``spark.python.daemon.module``), which keeps pyspark's
+per-task cache invalidation from re-reading ``pyspark.zip`` on every task;
+and AQE coalesces a shuffle to at least ``skew.TASK_BYTES`` per partition
+(Spark's default floor is 1 MB), so a kernel stage fed by an exchange gets
+the same one-wave sizing as one that ``kernel_op`` spreads itself. Both are
+set in the builder, so a session attached to a running JVM gets them too.
 """
 
 from __future__ import annotations
@@ -64,6 +79,8 @@ from pathlib import Path
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from pdf_parse_bench_spark.operators.skew import TASK_BYTES
 
 PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 # JDK 17's dynamic-archive magic, the first field of the header
@@ -88,19 +105,26 @@ def get_spark(app: str = "pdf-parse-bench-spark", cores: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # parallelismFirst coalesces a shuffle to max(total bytes /
+        # defaultParallelism, this floor): spread_for_kernel's one-wave
+        # rule for the kernel inputs it leaves to the exchange
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                str(TASK_BYTES))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # forks the workers; see worker_daemon's docstring
+        .config("spark.python.daemon.module",
+                "pdf_parse_bench_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()  # the driver JVM is already running
     archive, tmp = _archive_plan()
-    env = {"PYTHONPATH": os.pathsep.join(
-        [PACKAGE_ROOT] + [p for p in os.environ.get("PYTHONPATH", "")
-                          .split(os.pathsep) if p])}
+    env = {}
     if archive is not None:
         flag = (f"-XX:ArchiveClassesAtExit={tmp}" if tmp
                 else f"-XX:SharedArchiveFile={archive}")

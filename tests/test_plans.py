@@ -598,3 +598,39 @@ def test_kernel_op_sizes_its_input(spark, fx_smoke):
     stream = (spark.readStream.schema(md.schema)
               .parquet(str(fx_smoke / "parsed_markdown.parquet")))
     assert extract_spans(stream, boilerplate=frozenset()).isStreaming
+
+
+def test_layout_kernel_stage_coalesced_to_one_wave(spark, tmp_path):
+    """The layout kernel's input comes out of the groupBy's exchange, which
+    kernel_op leaves alone; AQE coalesces it under the TASK_BYTES floor, so
+    a block input of several x TASK_BYTES runs its kernel stage on more
+    than 2 tasks (Spark's 1 MB default floor packed it into 1) and in
+    about one wave."""
+    from pdf_parse_bench_spark.operators.extract import (
+        extract_spans_from_layout,
+    )
+    from pdf_parse_bench_spark.operators.skew import TASK_BYTES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    n, path = 2000, tmp_path / "blocks"
+    key = F.col("id").cast("string")
+    (spark.range(n).select(
+        F.format_string("d%04d", F.col("id") % (n // 8)).alias("doc_id"),
+        (F.col("id") % 3).cast("int").alias("page_no"),
+        F.array(*map(F.lit, (50.0, 100.0, 545.0, 130.0))).alias("bbox"),
+        F.lit("Text").alias("category"),
+        # hex digests: text that neither parquet nor the shuffle compresses
+        F.concat_ws(" ", F.sha2(key, 512), F.sha2(key, 256)).alias("text"))
+     .coalesce(1).write.parquet(str(path)))
+    size = sum(f.stat().st_size for f in path.glob("*.parquet"))
+    assert size > 4 * TASK_BYTES, size
+    blocks = spark.read.parquet(str(path))  # the schema read is a job
+
+    before = set(tracker.getJobIdsForGroup(None))
+    (extract_spans_from_layout(blocks)
+     .write.format("noop").mode("overwrite").save())
+    ran = set(tracker.getJobIdsForGroup(None)) - before
+    kernel = max(s for j in ran for s in tracker.getJobInfo(j).stageIds)
+    tasks = tracker.getStageInfo(kernel).numTasks
+    assert 2 < tasks <= sc.defaultParallelism + 1, tasks

@@ -1,6 +1,7 @@
-"""session.get_spark: the class-data-sharing archive of the driver JVM and
-the workers' PYTHONPATH. Each session runs in its own process, with its own
-XDG_CACHE_HOME, so the archive cache starts empty."""
+"""session.get_spark: the class-data-sharing archive of the driver JVM, the
+workers' PYTHONPATH and the worker daemon. Each session started here runs
+in its own process, with its own XDG_CACHE_HOME, so the archive cache
+starts empty."""
 
 from __future__ import annotations
 
@@ -9,12 +10,14 @@ import os
 import shutil
 import subprocess
 import sys
+import zipfile
+import zipimport
 from pathlib import Path
 
 import pytest
 from pyspark.find_spark_home import _find_spark_home
 
-from pdf_parse_bench_spark import session
+from pdf_parse_bench_spark import session, worker_daemon
 
 REPO = Path(__file__).resolve().parent.parent
 SHARED_TOP = "org.apache.spark.SparkContext source: shared objects file (top)"
@@ -175,3 +178,114 @@ def test_archive_key_follows_the_jars(tmp_path):
     os.utime(renamed, ns=(stat.st_atime_ns, stat.st_mtime_ns))
     third = session.archive_key(str(tmp_path), java)
     assert len({first, second, third}) == 3
+
+
+def test_workers_fork_from_the_daemon_in_both_branches(recorded, tmp_path):
+    """Python workers are forked by worker_daemon both when get_spark
+    launches the JVM and when it attaches to a running one (a local[1]
+    session after the first one stopped, as perfbench's one-core leg)."""
+    script = """
+import json, os, sys
+sys.path.insert(0, {repo!r})
+from pdf_parse_bench_spark.session import get_spark
+
+def daemon_argv(batches):
+    import pandas as pd
+    with open(f"/proc/{{os.getppid()}}/cmdline") as f:
+        argv = " ".join(f.read().split("\\0")).strip()
+    for _ in batches:
+        pass
+    yield pd.DataFrame({{"argv": [argv]}})
+
+def argvs(spark):
+    return sorted({{r.argv for r in spark.range(2, numPartitions=2)
+                   .mapInPandas(daemon_argv, "argv string").collect()}})
+
+spark = get_spark("test-launch", cores=2)
+launch = argvs(spark)
+spark.stop()
+spark = get_spark("test-attach", cores=1)
+print(json.dumps({{"launch": launch, "attach": argvs(spark)}}))
+"""
+    out = result(run_session(tmp_path, recorded[0], script))
+    for branch in ("launch", "attach"):
+        assert len(out[branch]) == 1, out
+        assert out[branch][0].endswith(
+            "-m pdf_parse_bench_spark.worker_daemon pyspark.worker"), out
+
+
+def test_reused_worker_keeps_its_zip_directory(spark):
+    """A reused worker does not re-read pyspark.zip's directory on every
+    task: each of its importers of that archive keeps the same directory
+    object from one job to the next."""
+    def directories(batches):
+        import pandas as pd
+        rows = [(os.getpid(), path, id(f._files))
+                for path, f in list(sys.path_importer_cache.items())
+                if isinstance(f, zipimport.zipimporter)
+                and f.archive.endswith("pyspark.zip")]
+        for _ in batches:
+            pass
+        yield pd.DataFrame(rows, columns=["pid", "path", "files"])
+
+    def run():
+        n = spark.sparkContext.defaultParallelism
+        rows = (spark.range(n, numPartitions=n)
+                .mapInPandas(directories, "pid long, path string, files long")
+                .collect())
+        return {(r.pid, r.path): r.files for r in rows}
+
+    first, second = run(), run()
+    reused = first.keys() & second.keys()
+    assert reused, "no worker ran a task of both jobs"
+    assert {k: first[k] for k in reused} == {k: second[k] for k in reused}
+
+
+def test_zip_directory_reread_only_when_changed(tmp_path):
+    """worker_daemon.invalidate_caches leaves an unchanged archive's
+    directory alone, and re-reads a rewritten or removed one."""
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("a.py", "A = 1\n")
+    importer = zipimport.zipimporter(str(archive))
+    worker_daemon.invalidate_caches(importer)
+    files = importer._files
+    worker_daemon.invalidate_caches(importer)
+    assert importer._files is files
+    assert importer.find_spec("b") is None
+
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("a.py", "A = 1\n")
+        zf.writestr("b.py", "B = 2\n")
+    worker_daemon.invalidate_caches(importer)
+    assert importer._files is not files
+    assert importer.find_spec("b") is not None
+
+    archive.unlink()
+    worker_daemon.invalidate_caches(importer)
+    assert importer._files == {}
+
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
+def test_submitted_script_ships_the_daemon_in_its_zip(tmp_path):
+    """A script that spark-submit runs with the package only in a
+    --py-files zip calls get_spark (the attach branch): its workers import
+    worker_daemon from that zip and run a Python job."""
+    package = tmp_path / "pdfpbs.zip"
+    with zipfile.ZipFile(package, "w") as zf:
+        for f in (REPO / "pdf_parse_bench_spark").rglob("*.py"):
+            zf.write(f, f.relative_to(REPO))
+    script = tmp_path / "job.py"
+    script.write_text(
+        "from pdf_parse_bench_spark.session import get_spark\n"
+        "spark = get_spark('test-submit', cores=2)\n"
+        "print(spark.range(4, numPartitions=2)"
+        ".mapInPandas(lambda b: b, 'id long').count())\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        ["spark-submit", "--driver-memory", "1g", "--py-files", str(package),
+         str(script)], env=env, cwd=tmp_path, capture_output=True,
+        text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "4"

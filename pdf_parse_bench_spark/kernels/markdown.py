@@ -23,11 +23,14 @@ from pdf_parse_bench_spark.kernels.textnorm import (
     split_grouped_formula,
 )
 
+# every branch starts with \, $ or !: the lookahead rejects any other
+# position before the scan tries the four branches there
 _BLOCK_RE = re.compile(
+    r"(?=[\\$!])(?:"
     r"(?P<table>\\begin\{tabular\}.*?\\end\{tabular\})"
     r"|(?P<display>\$\$.*?\$\$|\\\[.*?\\\])"
     r"|(?P<image>!\[[^\]\n]*\]\([^)\s]+\))"
-    r"|(?P<inline>\$[^$\n]+?\$)",
+    r"|(?P<inline>\$[^$\n]+?\$))",
     re.S,
 )
 _IMAGE_REF_RE = re.compile(r"!\[[^\]\n]*\]\(([^)\s]+)\)")

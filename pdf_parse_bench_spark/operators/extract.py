@@ -6,8 +6,9 @@ driver (north_rule), and the scaffold owns the batch loop and frame
 build. Stages:
 
   markdown corpus ──► compute_boilerplate (corpus-level repeated first/last
-                      line aggregation — the distributed analog of the
-                      reference's per-page y-cluster header/footer strip, P2)
+                      line count — the distributed analog of the
+                      reference's per-page y-cluster header/footer strip,
+                      P2; one task and one Spark job below 4 MB)
                  ──► extract_spans (kernel_op, which spreads its input
                       over one wave of Python tasks)
   layout blocks  ──► extract_spans_from_layout (collect_list per doc_id
@@ -34,45 +35,49 @@ from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_text
 from pdf_parse_bench_spark.operators.kernel import kernel_op
 from pdf_parse_bench_spark.operators.skew import (
     MIN_SPREAD_BYTES,
+    size_estimate,
     spread_for_kernel,
 )
 
 
 BOILERPLATE_MIN_DOCS = 5
+# a document's first and last non-empty line, spaces trimmed
+FIRST_LINE = ("trim(substring_index(trim(LEADING ' \\n' FROM markdown), "
+              "'\\n', 1))")
+LAST_LINE = ("trim(substring_index(trim(TRAILING ' \\n' FROM markdown), "
+             "'\\n', -1))")
 
 
 def compute_boilerplate(md_df: DataFrame) -> DataFrame:
-    """Lines that appear as the first or last non-empty line of at least
+    r"""Lines that appear as the first or last non-empty line of at least
     BOILERPLATE_MIN_DOCS documents. The result is tiny and meant to be
     broadcast into the extraction kernel.
 
-    r7 (guide §2.3 — shuffle/ship only what the decision needs): only the
-    FIRST and LAST non-empty line of each doc matter, so the edge lines
-    come from two anchored codegen regexes instead of splitting (r6) or
-    shipping (mid-r7) every line of every document. The pattern skips
-    spaces-only lines from the string's start; the LAST line reuses the
-    same pattern on reverse(markdown) and reverses the capture back. trim
-    (spaces-only, matching the kernel-side strip) canonicalizes both.
-    No Python boundary, no full-line materialization; the one exchange
-    carries two short lines per doc into the count."""
-    pat = r"\A(?:[ ]*\n)*[ ]*([^\n]*)"
-    first = F.trim(F.regexp_extract("markdown", pat, 1))
-    last = F.trim(F.reverse(
-        F.regexp_extract(F.reverse(F.col("markdown")), pat, 1)))
-    # spread on the groupBy's own input, not the kernel's: above
-    # MIN_SPREAD_BYTES the repartition replaces the count's exchange and
-    # moves the explode off the single-row-group scan task
-    edges = (
-        spread_for_kernel(md_df.select("doc_id", "markdown"),
-                          min_bytes=MIN_SPREAD_BYTES)
-        .select("doc_id",
-                F.explode(F.array_distinct(F.array(first, last))).alias("line"))
-        .where(F.col("line") != "")
-    )
+    Only the first and last non-empty line of each doc matter, so only
+    those two lines leave the scan, and each comes from byte-level string
+    functions (no regex, no reverse, no Python boundary): trimming the set
+    ``' \n'`` from one end drops the longest run of spaces and newlines
+    there (exactly what the anchored regex ``(?:[ ]*\n)*[ ]*`` skipped),
+    ``substring_index`` cuts the line at the next newline, and ``trim``
+    (spaces only, as the kernel-side strip) makes it canonical. Tabs,
+    ``\r`` and non-ASCII characters stay in the line.
+
+    Below MIN_SPREAD_BYTES (by the size estimate, no job) the count runs
+    on ``coalesce(1)``: one task and no exchange, so one Spark job. Above
+    it the input is spread over the cores first and the count keeps its
+    exchange."""
+    size = size_estimate(md_df)
+    if size is not None and size < MIN_SPREAD_BYTES:
+        src = md_df.coalesce(1)
+    else:
+        src = spread_for_kernel(md_df.select("doc_id", "markdown"),
+                                min_bytes=MIN_SPREAD_BYTES)
     return (
-        edges.groupBy("line")
-        .agg(F.count("*").alias("n_docs"))  # edge rows are per-doc distinct
-        .where(F.col("n_docs") >= BOILERPLATE_MIN_DOCS)
+        # edge rows are per-doc distinct, so a row count is a doc count
+        src.selectExpr(f"explode(array_distinct(array({FIRST_LINE}, "
+                       f"{LAST_LINE}))) AS line")
+        .groupBy("line").count()
+        .where((F.col("count") >= BOILERPLATE_MIN_DOCS) & (F.col("line") != ""))
         .select("line")
     )
 

@@ -110,10 +110,7 @@ def spread_for_kernel(df: DataFrame, *keys: str,
         return df
     qe = df._jdf.queryExecution()
     n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = int(qe.optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = None
+    size = size_estimate(df)
     if size is not None:
         if size < min_bytes:
             return df
@@ -122,6 +119,16 @@ def spread_for_kernel(df: DataFrame, *keys: str,
             or df.rdd.getNumPartitions() >= n):
         return df
     return df.repartition(n, *(keys or ("doc_id",)))
+
+
+def size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's size estimate of `df` in bytes, without a job; None when
+    the optimizer cannot size it."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes())
+    except Exception:
+        return None
 
 
 # Input bytes per Python task. Swept over 16, 64, 128, 256 and 1024 KiB

@@ -63,6 +63,12 @@ and AQE coalesces a shuffle to at least ``skew.TASK_BYTES`` per partition
 (Spark's default floor is 1 MB), so a kernel stage fed by an exchange gets
 the same one-wave sizing as one that ``kernel_op`` spreads itself. Both are
 set in the builder, so a session attached to a running JVM gets them too.
+
+Master. ``local[cores]`` whenever ``get_spark`` started the driver JVM,
+also when it re-attaches to that JVM after the session stopped (a
+``local[1]`` session after a ``local[4]`` one). A script that spark-submit
+runs keeps spark-submit's ``--master``; ``cores`` then sizes only the
+shuffle partitions.
 """
 
 from __future__ import annotations
@@ -100,8 +106,7 @@ def get_spark(app: str = "pdf-parse-bench-spark", cores: int | None = None,
     if shuffle_partitions is None:
         shuffle_partitions = max(32, 2 * cores)
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
+        SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -121,8 +126,12 @@ def get_spark(app: str = "pdf-parse-bench-spark", cores: int | None = None,
                 "pdf_parse_bench_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
-        return builder.getOrCreate()  # the driver JVM is already running
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the driver JVM; its --master holds
+        return builder.getOrCreate()
+    builder = builder.master(f"local[{cores}]")
+    if SparkContext._gateway is not None:
+        return builder.getOrCreate()  # our own driver JVM is still running
     archive, tmp = _archive_plan()
     env = {}
     if archive is not None:

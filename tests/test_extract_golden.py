@@ -4,12 +4,16 @@ reproduce the golden span tables under exact span-sequence equality
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from pdf_parse_bench_spark import score_spans
 from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
 from pdf_parse_bench_spark.operators.extract import (
+    FIRST_LINE,
+    LAST_LINE,
     align_extractions,
     assemble_markdown,
     compute_boilerplate,
@@ -69,6 +73,43 @@ def test_boilerplate_detected(spark, fx_smoke):
              compute_boilerplate(_read(spark, fx_smoke, "parsed_markdown")).collect()}
     assert any("preprint series" in l for l in lines)
     assert any("all rights reserved" in l for l in lines)
+
+
+# the edge-line pattern that compute_boilerplate's expressions replace
+_EDGE_RE = re.compile(r"\A(?:[ ]*\n)*[ ]*([^\n]*)")
+
+
+def test_boilerplate_edge_lines_match_the_regex(spark):
+    """FIRST_LINE / LAST_LINE equal the anchored regex on the string (and
+    on its reverse) with spaces trimmed, on spaces-only lines, tabs,
+    CRLF, blank edges, no trailing newline, empty, single-line and
+    non-ASCII documents."""
+    docs = ["", " ", "\n", " \n \n  ", "a", "  a  ", "\n\n  a b \n",
+            "a\nb", " \t x \n y\t \n", "\r\nfoo\r\n", "x\r\n  \r\n",
+            "\t\n\ta", " \n\t \n", "last line, no newline",
+            "  \n  \n  hé ü  \n mid \n  ñ 😀 end  \n\n  ", "line  \n   \n"]
+    rows = (spark.createDataFrame([(d,) for d in docs], "markdown string")
+            .selectExpr("markdown", f"{FIRST_LINE} AS first",
+                        f"{LAST_LINE} AS last").collect())
+    got = {r.markdown: (r.first, r.last) for r in rows}
+    want = {d: (_EDGE_RE.match(d).group(1).strip(" "),
+                _EDGE_RE.match(d[::-1]).group(1)[::-1].strip(" "))
+            for d in docs}
+    assert got == want
+
+
+def test_boilerplate_is_one_job_without_exchange(spark, fx_smoke):
+    """Below MIN_SPREAD_BYTES the boilerplate count runs in one Spark job
+    with no exchange."""
+    tracker = spark.sparkContext.statusTracker()
+    md = _read(spark, fx_smoke, "parsed_markdown")  # the schema read is a job
+    before = set(tracker.getJobIdsForGroup(None))
+    out = compute_boilerplate(md)
+    assert out.collect()
+    ran = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(ran) == 1, sorted(ran)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
 
 
 def test_assemble_then_extract_roundtrip(spark, fx_smoke):

@@ -7,6 +7,8 @@ P2, span sequencing W3, plus property tests for the Levenshtein kernel.
 
 from __future__ import annotations
 
+import re
+
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -18,6 +20,7 @@ from pdf_parse_bench_spark.kernels.alignment import (
     levenshtein,
 )
 from pdf_parse_bench_spark.kernels.layout import blocks_to_spans, reading_order
+from pdf_parse_bench_spark.kernels import markdown as markdown_kernel
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
 from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_text
 from pdf_parse_bench_spark.kernels.textnorm import (
@@ -175,6 +178,31 @@ def test_tabular_not_split_on_row_separators():
     spans = parse_markdown(tab)
     assert len(spans) == 1 and spans[0]["kind"] == "table"
     assert spans[0]["text"] == tab
+
+
+# the block pattern before its start-character lookahead
+_PLAIN_BLOCK_RE = re.compile(
+    r"(?P<table>\\begin\{tabular\}.*?\\end\{tabular\})"
+    r"|(?P<display>\$\$.*?\$\$|\\\[.*?\\\])"
+    r"|(?P<image>!\[[^\]\n]*\]\([^)\s]+\))"
+    r"|(?P<inline>\$[^$\n]+?\$)",
+    re.S,
+)
+
+
+def test_block_scan_lookahead_changes_no_span(fx_smoke, monkeypatch):
+    """The start-character lookahead on the block pattern gives the same
+    spans as the plain pattern, on every fixture document and on texts
+    that end inside a block or start one with nothing after it."""
+    docs = pq.read_table(fx_smoke / "parsed_markdown.parquet",
+                         columns=["markdown"]).column(0).to_pylist()
+    edges = ["$", "\\", "$$", "$$x", "a $$ b", "$$x$", "\\[x", "\\begin{tabular}",
+             "![", "text ![", "![a](", "![a](b", "![a](b)", "$x$ $", "$ x\n$",
+             "!$x$", "\\$x$", "\\\\[x\\]", "$$a$$b$$", ""]
+    new = [parse_markdown(d) for d in docs + edges]
+    monkeypatch.setattr(markdown_kernel, "_BLOCK_RE", _PLAIN_BLOCK_RE)
+    assert [parse_markdown(d) for d in docs + edges] == new
+    assert any(s["kind"] != "text" for spans in new for s in spans)
 
 
 # ---------------------------------------------------------------------------

@@ -289,3 +289,22 @@ def test_submitted_script_ships_the_daemon_in_its_zip(tmp_path):
         text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.strip().splitlines()[-1] == "4"
+
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
+def test_submitted_script_keeps_its_master(tmp_path):
+    """get_spark in a script that spark-submit runs keeps spark-submit's
+    --master instead of its own local[cores]."""
+    script = tmp_path / "job.py"
+    script.write_text(
+        f"import sys\nsys.path.insert(0, {str(REPO)!r})\n"
+        "from pdf_parse_bench_spark.session import get_spark\n"
+        "spark = get_spark('test-submit-master', cores=2)\n"
+        "print(spark.sparkContext.master)\n")
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[3]", "--driver-memory", "1g",
+         str(script)], cwd=tmp_path, capture_output=True, text=True,
+        timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "local[3]"

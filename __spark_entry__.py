@@ -41,7 +41,6 @@ from pdf_parse_bench_spark.operators import similarity as sim  # noqa: E402
 from pdf_parse_bench_spark.operators import textstats as ts  # noqa: E402
 from pdf_parse_bench_spark.operators.tables import table_cells  # noqa: E402
 from pdf_parse_bench_spark.operators.extract import (  # noqa: E402
-    _collect_boilerplate,
     align_extractions,
     assemble_markdown,
     compute_boilerplate,
@@ -193,9 +192,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def extract_lineage(s, d):
         # the lineage row is a projection of the one row per document the
         # kernel returns, so counting spans needs no groupBy
-        md = _f(s, d, "parsed_markdown")
-        bp = _collect_boilerplate(md)
-        return (lineage_of(extract_with_lineage(md, bp))
+        return (lineage_of(extract_with_lineage(_f(s, d, "parsed_markdown")))
                 .select("doc_id", "status", "n_spans"))
     q["extract_lineage"] = extract_lineage
 

@@ -10,17 +10,28 @@ parameterized entry point:
         --golden fixtures/sf0.001/golden_spans.parquet
     python -m pdf_parse_bench_spark summarize --scores fixtures/sf0.001/extraction_scores.parquet
 
-`extract --checkpoint` runs one resumable markdown pass (resume.run_resumable):
-it appends the spans of the documents the checkpoint does not yet record as
-ok, plus one lineage row per document. Lineage exists for the markdown
-backend only, so any other backend refuses --checkpoint. `--cores` defaults
-to the process's CPU affinity count.
+`extract` overwrites --output with the backend's spans and ends with one
+JSON line: `docs` (input rows), `output_rows` (rows --output holds),
+`sec` and `docs_per_sec` (the extraction and write, without the input
+count), and `master`. `extract --checkpoint` runs one resumable markdown
+pass (resume.run_resumable) instead: it appends the spans of the
+documents the checkpoint does not yet record as ok, plus one lineage row
+per document. Lineage exists for the markdown backend only, so any other
+backend refuses --checkpoint. `--cores` defaults to the process's CPU
+affinity count; under spark-submit the submitted --master holds.
+
+jobs/extract_job.py is `extract` as a spark-submit script:
+
+    spark-submit --py-files pdf_parse_bench_spark.zip jobs/extract_job.py \
+        --input <parquet> --output <dir> [--checkpoint <dir>]
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import sys
+import time
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -62,24 +73,30 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.cmd == "extract":
             df = spark.read.parquet(args.input)
+            n_docs = df.count()
+            t0 = time.perf_counter()
             if args.checkpoint:
-                from pdf_parse_bench_spark.operators.extract import (
-                    _collect_boilerplate,
-                )
                 from pdf_parse_bench_spark.operators.resume import (
                     run_resumable,
                 )
-                run_resumable(df, args.output, args.checkpoint,
-                              boilerplate=_collect_boilerplate(df))
-                # appended over every pass, repeats included
-                n = spark.read.parquet(args.output).count()
-                print(f"{args.output} now holds {n} span rows from all "
-                      f"passes; read them with resume.read_resumed")
+                run_resumable(df, args.output, args.checkpoint)
             else:
                 get_backend(args.backend)(df).write.mode(
                     "overwrite").parquet(args.output)
-                n = spark.read.parquet(args.output).count()
-                print(f"wrote {n} spans to {args.output}")
+            sec = time.perf_counter() - t0
+            from pyspark.errors import AnalysisException
+            try:
+                # with --checkpoint: every pass's rows, repeats included
+                n_out = spark.read.parquet(args.output).count()
+            except AnalysisException:
+                n_out = 0  # a --checkpoint pass that had nothing to write
+            print(json.dumps({
+                "docs": n_docs,
+                "output_rows": n_out,
+                "sec": round(sec, 3),
+                "docs_per_sec": round(n_docs / sec, 2),
+                "master": spark.sparkContext.master,
+            }))
         elif args.cmd == "score":
             from pdf_parse_bench_spark import score_spans, score_spans_judged
             ext = spark.read.parquet(args.extracted)

@@ -64,14 +64,14 @@ def compute_boilerplate(md_df: DataFrame) -> DataFrame:
 
     Below MIN_SPREAD_BYTES (by the size estimate, no job) the count runs
     on ``coalesce(1)``: one task and no exchange, so one Spark job. Above
-    it the input is spread over the cores first and the count keeps its
-    exchange."""
-    size = size_estimate(md_df)
+    it (or when the optimizer cannot size the input) the input is spread
+    over the cores first and the count keeps its exchange."""
+    md = md_df.select("doc_id", "markdown")
+    size = size_estimate(md)
     if size is not None and size < MIN_SPREAD_BYTES:
-        src = md_df.coalesce(1)
+        src = md.coalesce(1)
     else:
-        src = spread_for_kernel(md_df.select("doc_id", "markdown"),
-                                min_bytes=MIN_SPREAD_BYTES)
+        src = spread_for_kernel(md)
     return (
         # edge rows are per-doc distinct, so a row count is a doc count
         src.selectExpr(f"explode(array_distinct(array({FIRST_LINE}, "
@@ -93,7 +93,7 @@ def extract_spans(md_df: DataFrame, boilerplate: frozenset[str] | None = None,
     One ``kernel_op`` runs ``parse_markdown`` per document against the
     broadcast boilerplate set (collected from the corpus when not given).
     ``rebalance`` has no effect (kernel_op sizes the stage); it stays only
-    for callers that still pass it."""
+    for its one caller, perfbench/workloads.py."""
     if boilerplate is None:
         boilerplate = _collect_boilerplate(md_df)
     bp = md_df.sparkSession.sparkContext.broadcast(boilerplate)
@@ -155,7 +155,7 @@ def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     the reference's per-backend extraction contract recovered without a
     VLM (block model: parsers/dots_ocr/__main__.py:125-142).
     ``rebalance`` has no effect (kernel_op sizes the stage); it stays only
-    for callers that still pass it."""
+    for its one caller, perfbench/workloads.py."""
     from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_spans
 
     return kernel_op(pdf_df, lambda b: extract_pdf_spans(bytes(b)),

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
+from pdf_parse_bench_spark.operators.extract import _collect_boilerplate
 from pdf_parse_bench_spark.operators.kernel import kernel_op
 
 STAGE = "extract"
@@ -50,14 +51,17 @@ def _lineage_rows(doc_id: str, md: str, boilerplate: frozenset[str],
 
 def extract_with_lineage(
     md_df: DataFrame,
-    boilerplate: frozenset[str] = frozenset(),
+    boilerplate: frozenset[str] | None = None,
     fail_docs: frozenset[str] = frozenset(),
 ) -> DataFrame:
     """Extraction that never aborts: one row per document with its
-    status, error and spans array (empty for a failed doc).
-    `fail_docs` injects deterministic failures for resume tests.
-    partition_id is read right after the map stage — no exchange in
-    between, so it is the task that ran the kernel."""
+    status, error and spans array (empty for a failed doc). The
+    boilerplate is collected from `md_df` when not given, as in
+    extract_spans. `fail_docs` injects deterministic failures for resume
+    tests. partition_id is read right after the map stage — no exchange
+    in between, so it is the task that ran the kernel."""
+    if boilerplate is None:
+        boilerplate = _collect_boilerplate(md_df)
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
     docs = kernel_op(
         md_df, lambda doc_id, md: _lineage_rows(doc_id, md, *bp.value),
@@ -104,13 +108,18 @@ def run_resumable(
     md_df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    boilerplate: frozenset[str] = frozenset(),
+    boilerplate: frozenset[str] | None = None,
     fail_docs: frozenset[str] = frozenset(),
 ) -> None:
-    """One resumable pass: process pending docs, append spans + lineage."""
+    """One resumable pass: process pending docs, append spans + lineage.
+    The boilerplate, when not given, is collected over all of `md_df`,
+    not only the pending docs, so a resumed output equals one pass of
+    extract_spans; a pass with nothing pending collects none."""
     todo = pending(md_df, checkpoint_dir)
     if not todo.take(1):
         return
+    if boilerplate is None:
+        boilerplate = _collect_boilerplate(md_df)
     result = extract_with_lineage(todo, boilerplate, fail_docs).cache()
     try:
         ok_spans(result).write.mode("append").parquet(out_dir)

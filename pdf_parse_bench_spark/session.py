@@ -67,8 +67,10 @@ set in the builder, so a session attached to a running JVM gets them too.
 Master. ``local[cores]`` whenever ``get_spark`` started the driver JVM,
 also when it re-attaches to that JVM after the session stopped (a
 ``local[1]`` session after a ``local[4]`` one). A script that spark-submit
-runs keeps spark-submit's ``--master``; ``cores`` then sizes only the
-shuffle partitions.
+runs keeps spark-submit's ``--master`` and every ``--conf`` it was given:
+``get_spark`` fills in only the settings spark-submit left unset (``cores``
+then sizes the shuffle partitions unless ``--conf`` set them), and puts the
+package root in front of a submitted ``spark.executorEnv.PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -82,7 +84,7 @@ import sys
 import warnings
 from pathlib import Path
 
-from pyspark import SparkContext
+from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -105,31 +107,40 @@ def get_spark(app: str = "pdf-parse-bench-spark", cores: int | None = None,
                                    len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(32, 2 * cores)
-    builder = (
-        SparkSession.builder.appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    conf = {
+        "spark.app.name": app,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # parallelismFirst coalesces a shuffle to max(total bytes /
         # defaultParallelism, this floor): spread_for_kernel's one-wave
         # rule for the kernel inputs it leaves to the exchange
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                str(TASK_BYTES))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize":
+            str(TASK_BYTES),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
         # forks the workers; see worker_daemon's docstring
-        .config("spark.python.daemon.module",
-                "pdf_parse_bench_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
-    )
+        "spark.python.daemon.module": "pdf_parse_bench_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
+    }
     if "PYSPARK_GATEWAY_PORT" in os.environ:
-        # spark-submit started the driver JVM; its --master holds
-        return builder.getOrCreate()
-    builder = builder.master(f"local[{cores}]")
+        # spark-submit started the driver JVM: its --master and --conf
+        # settings hold (the builder would write over them), so only the
+        # missing ones are filled in
+        SparkContext._ensure_initialized()
+        submitted = dict(SparkConf().getAll())
+        path = submitted.pop("spark.executorEnv.PYTHONPATH", None)
+        if path:
+            conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+                [PACKAGE_ROOT, path])
+        return SparkSession.builder.config(map={
+            k: v for k, v in conf.items() if k not in submitted
+        }).getOrCreate()
+    builder = SparkSession.builder.config(map=conf).master(f"local[{cores}]")
     if SparkContext._gateway is not None:
         return builder.getOrCreate()  # our own driver JVM is still running
     archive, tmp = _archive_plan()

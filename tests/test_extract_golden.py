@@ -184,7 +184,8 @@ def test_binaryfile_pdf_source(spark, fx_smoke, tmp_path):
 
 def test_cli_extract_and_score(fx_smoke, tmp_path):
     """Reference CLI analog: extract via a named backend, then score."""
-    import subprocess, sys
+    import json, subprocess, sys
+    import pyarrow.parquet as pq
     out = tmp_path / "spans"
     r = subprocess.run(
         [sys.executable, "-m", "pdf_parse_bench_spark", "extract",
@@ -194,7 +195,10 @@ def test_cli_extract_and_score(fx_smoke, tmp_path):
         capture_output=True, text=True, timeout=300, cwd="/root/repo",
     )
     assert r.returncode == 0, r.stderr[-1500:]
-    assert "wrote" in r.stdout
+    stats = json.loads(r.stdout.strip().splitlines()[-1])
+    assert stats["docs"] == pq.read_metadata(
+        fx_smoke / "html_documents.parquet").num_rows
+    assert stats["output_rows"] == pq.read_table(out).num_rows > 0
     r2 = subprocess.run(
         [sys.executable, "-m", "pdf_parse_bench_spark", "score",
          "--extracted", str(out),

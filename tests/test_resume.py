@@ -5,7 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pdf_parse_bench_spark.operators.extract import _collect_boilerplate
+from pdf_parse_bench_spark.operators.extract import (
+    _collect_boilerplate,
+    extract_spans,
+)
 from pdf_parse_bench_spark.operators.resume import (
     extract_with_lineage,
     lineage_of,
@@ -53,8 +56,30 @@ def test_resume_after_partial_failure(spark, fx_smoke, tmp_path):
 
     resumed = read_resumed(spark, out1, ckpt)
     # equals a clean single-pass run
-    from pdf_parse_bench_spark.operators.extract import extract_spans
     clean = extract_spans(md, boilerplate=bp)
+    assert resumed.count() == clean.count()
+    assert resumed.exceptAll(clean).isEmpty()
+    assert clean.exceptAll(resumed).isEmpty()
+
+
+def test_resume_default_boilerplate_matches_extract_spans(spark, fx_smoke,
+                                                         tmp_path):
+    """With the boilerplate left to its default, run_resumable strips what
+    extract_spans strips: the boilerplate of the whole input, also in a
+    pass that re-runs only a few failed docs."""
+    md = _md(spark, fx_smoke)
+    bp = _collect_boilerplate(md)
+    assert bp  # the corpus has boilerplate to strip
+    fail = frozenset(r.doc_id for r in md.where(
+        F.col("markdown").contains(min(bp))).limit(7).collect())
+    assert fail
+    out, ckpt = str(tmp_path / "spans"), str(tmp_path / "ckpt")
+    run_resumable(md, out, ckpt, fail_docs=fail)
+    assert pending(md, ckpt).count() == len(fail)
+    run_resumable(md, out, ckpt)
+
+    resumed = read_resumed(spark, out, ckpt)
+    clean = extract_spans(md)
     assert resumed.count() == clean.count()
     assert resumed.exceptAll(clean).isEmpty()
     assert clean.exceptAll(resumed).isEmpty()

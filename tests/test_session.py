@@ -295,16 +295,18 @@ def test_submitted_script_ships_the_daemon_in_its_zip(tmp_path):
                     reason="spark-submit not on PATH")
 def test_submitted_script_keeps_its_master(tmp_path):
     """get_spark in a script that spark-submit runs keeps spark-submit's
-    --master instead of its own local[cores]."""
+    --master and --conf settings instead of its own local[cores] and
+    max(32, 2 * cores) shuffle partitions."""
     script = tmp_path / "job.py"
     script.write_text(
         f"import sys\nsys.path.insert(0, {str(REPO)!r})\n"
         "from pdf_parse_bench_spark.session import get_spark\n"
         "spark = get_spark('test-submit-master', cores=2)\n"
-        "print(spark.sparkContext.master)\n")
+        "print(spark.sparkContext.master)\n"
+        "print(spark.conf.get('spark.sql.shuffle.partitions'))\n")
     proc = subprocess.run(
         ["spark-submit", "--master", "local[3]", "--driver-memory", "1g",
-         str(script)], cwd=tmp_path, capture_output=True, text=True,
-        timeout=600)
+         "--conf", "spark.sql.shuffle.partitions=7", str(script)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.strip().splitlines()[-1] == "local[3]"
+    assert proc.stdout.strip().splitlines()[-2:] == ["local[3]", "7"]

@@ -122,15 +122,31 @@ def test_cli_extract_checkpoint_writes_lineage(spark, fx_smoke, tmp_path):
 
 
 def test_extract_job_rejects_checkpoint_without_output(fx_smoke, tmp_path):
-    """--checkpoint alone would count spans and write no lineage: the job
-    refuses it before Spark starts."""
+    """--checkpoint without --output has nowhere to write the spans: the
+    job refuses it before Spark starts."""
     ckpt_dir = tmp_path / "ckpt"
     r = _run_python(str(REPO / "jobs" / "extract_job.py"),
                     "--input", str(fx_smoke / "parsed_markdown.parquet"),
                     "--checkpoint", str(ckpt_dir))
     assert r.returncode != 0
-    assert "--checkpoint needs --output" in r.stderr
+    assert "the following arguments are required: --output" in r.stderr
     assert not ckpt_dir.exists()
+
+
+def test_extract_job_empty_input_with_checkpoint(tmp_path):
+    """A resumable pass over an empty input writes no span file; the job
+    still ends with its JSON line instead of failing to read --output."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    in_path = tmp_path / "empty.parquet"
+    pq.write_table(pa.table({"doc_id": pa.array([], pa.string()),
+                             "markdown": pa.array([], pa.string())}), in_path)
+    r = _run_python(str(REPO / "jobs" / "extract_job.py"),
+                    "--input", str(in_path), "--output", str(tmp_path / "spans"),
+                    "--checkpoint", str(tmp_path / "ckpt"), "--cores", "1")
+    assert r.returncode == 0, r.stderr[-2000:]
+    stats = json.loads(r.stdout.strip().splitlines()[-1])
+    assert (stats["docs"], stats["output_rows"]) == (0, 0)
 
 
 def test_extract_job_resubmit_resumes(fx_smoke, tmp_path):

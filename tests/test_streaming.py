@@ -25,7 +25,7 @@ def test_stream_extract_matches_batch(spark, fx_smoke, tmp_path):
     )
     q.awaitTermination(120)
     streamed = spark.table("t_stream_spans")
-    batch = extract_spans(md, boilerplate=bp, rebalance=False)
+    batch = extract_spans(md, boilerplate=bp)
     assert streamed.count() == batch.count()
     assert streamed.exceptAll(batch).isEmpty()
 

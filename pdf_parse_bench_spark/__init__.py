@@ -11,6 +11,7 @@ composable DataFrame transforms):
 """
 
 from pdf_parse_bench_spark.operators.extract import (  # noqa: F401
+    BACKENDS,
     align_extractions,
     assemble_markdown,
     compute_boilerplate,
@@ -78,10 +79,9 @@ class Benchmark:
         )
 
     def extract(self, df, backend: str = "markdown"):
-        from pdf_parse_bench_spark.operators.backends import get_backend
         if isinstance(df, str):
             df = self.spark.read.parquet(df)
-        return get_backend(backend)(df)
+        return BACKENDS[backend](df)
 
     def align(self, md_df):
         """GT-guided alignment (the reference's extract stage)."""

@@ -17,8 +17,10 @@ count), and `master`. `extract --checkpoint` runs one resumable markdown
 pass (resume.run_resumable) instead: it appends the spans of the
 documents the checkpoint does not yet record as ok, plus one lineage row
 per document. Lineage exists for the markdown backend only, so any other
-backend refuses --checkpoint. `--cores` defaults to the process's CPU
-affinity count; under spark-submit the submitted --master holds.
+backend refuses --checkpoint. `--backend` names a key of
+`extract.BACKENDS`; argparse rejects any other name before Spark starts.
+`--cores` defaults to the process's CPU affinity count; under
+spark-submit the submitted --master holds.
 
 jobs/extract_job.py is `extract` as a spark-submit script:
 
@@ -33,15 +35,18 @@ import json
 import sys
 import time
 
+from pdf_parse_bench_spark.operators.extract import BACKENDS
+
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="pdf_parse_bench_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    sub.add_parser("backends", help="list registered extraction backends")
+    sub.add_parser("backends", help="list the extraction backends")
 
     p_ex = sub.add_parser("extract", help="run an extraction backend")
-    p_ex.add_argument("--backend", default="markdown")
+    p_ex.add_argument("--backend", default="markdown",
+                      choices=sorted(BACKENDS))
     p_ex.add_argument("--input", required=True)
     p_ex.add_argument("--output", required=True)
     p_ex.add_argument("--checkpoint", default=None)
@@ -61,10 +66,8 @@ def main(argv: list[str] | None = None) -> int:
         ap.error(f"--checkpoint: lineage is markdown-only, not available "
                  f"for --backend {args.backend}")
 
-    from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
-
     if args.cmd == "backends":
-        print("\n".join(list_backends()))
+        print("\n".join(sorted(BACKENDS)))
         return 0
 
     from pdf_parse_bench_spark.session import get_spark
@@ -81,7 +84,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 run_resumable(df, args.output, args.checkpoint)
             else:
-                get_backend(args.backend)(df).write.mode(
+                BACKENDS[args.backend](df).write.mode(
                     "overwrite").parquet(args.output)
             sec = time.perf_counter() - t0
             from pyspark.errors import AnalysisException

@@ -10,8 +10,8 @@ block model and markdown conversion, parsers/dots_ocr/__main__.py:72-99,
     (SURVEY.md §7 hard part (a)).
   - P2 boilerplate strip: drop Page-header/Page-footer categories
     (dots_ocr/__main__.py:84-86).
-  - P3 media policy: keep Picture blocks as kind='image' spans (config flag;
-    the reference drops them, dots_ocr/__main__.py:87-89).
+  - P3 media policy: keep Picture blocks as kind='image' spans (the
+    reference drops them, dots_ocr/__main__.py:87-89).
 """
 
 from __future__ import annotations
@@ -375,12 +375,10 @@ def reading_order(bboxes: np.ndarray,
     return out
 
 
-def blocks_to_spans(blocks: list[dict], keep_media: bool = True) -> list[dict]:
+def blocks_to_spans(blocks: list[dict]) -> list[dict]:
     """Per-document: strip boilerplate, order pages then XY-cut within each
     page, map categories to span kinds, emit ordered spans."""
     kept = [b for b in blocks if b["category"] not in BOILERPLATE_CATEGORIES]
-    if not keep_media:
-        kept = [b for b in kept if b["category"] != "Picture"]
     spans: list[dict] = []
     for page in sorted({b["page_no"] for b in kept}):
         page_blocks = [b for b in kept if b["page_no"] == page]

@@ -1,6 +1,6 @@
 """Deduplication operators over the `documents` table. Relational steps
 (joins, groupBys, banding) are built-in functions; per-document hashing
-runs as kernels through operators/text.py's ``text_kernel``.
+runs as ``kernel_op`` kernels over each doc's text.
 
 All hashing is md5-hex (identical in Spark and the DuckDB oracle), and every
 "min over hashes" uses lexicographic order on fixed-width hex, so results are
@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from pdf_parse_bench_spark.functions import round_half_up
+from pdf_parse_bench_spark.operators.kernel import kernel_op
 from pdf_parse_bench_spark.operators.similarity import (
     fold_dots,
     hyperplanes,
@@ -36,7 +37,6 @@ from pdf_parse_bench_spark.operators.similarity import (
 from pdf_parse_bench_spark.operators.text import (
     doc_words,
     ngram_digests,
-    text_kernel,
     word_array,
     word_grams,
 )
@@ -95,10 +95,10 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     shingle plus a K-column groupBy shuffle; the kernel keeps the md5
     count identical and drops both the interpreted gram construction
     and the exchange."""
-    return text_kernel(
+    return kernel_op(
         docs,
         lambda text: [{"signature": _minhash_signature(text).tolist()}],
-        "signature array<long>")
+        "signature array<long>", args=["text"])
 
 
 def _minhash_band_rows(docs: DataFrame) -> DataFrame:
@@ -115,7 +115,8 @@ def _minhash_band_rows(docs: DataFrame) -> DataFrame:
             ).encode()).hexdigest()
             for band in range(LSH_BANDS)]}]
 
-    return text_kernel(docs, band_keys, "band_key array<string>").select(
+    return kernel_op(docs, band_keys, "band_key array<string>",
+                     args=["text"]).select(
         "doc_id", F.posexplode("band_key").alias("band", "band_key"))
 
 
@@ -143,11 +144,11 @@ def _shingle_sets_df(docs: DataFrame) -> DataFrame:
     """(doc_id, sh: array<string>) — the doc's DISTINCT word-3-gram
     shingles from one kernel pass (sorted for determinism; only set
     SIZES feed the Jaccard, so order is free)."""
-    return text_kernel(
+    return kernel_op(
         docs,
         lambda text: [{"sh": sorted(set(word_grams(doc_words(text),
                                                SHINGLE_N)))}],
-        "sh array<string>")
+        "sh array<string>", args=["text"])
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
@@ -332,7 +333,8 @@ def simhash64_blocks(docs: DataFrame) -> DataFrame:
         blk = (votes.reshape(4, 16) * weights).sum(axis=1)
         return [dict(zip(("b0", "b1", "b2", "b3"), blk.tolist()))]
 
-    return text_kernel(docs, blocks, "b0 int, b1 int, b2 int, b3 int")
+    return kernel_op(docs, blocks, "b0 int, b1 int, b2 int, b3 int",
+                     args=["text"])
 
 
 def simhash_near_dups(docs: DataFrame) -> DataFrame:

@@ -18,6 +18,9 @@ build. Stages:
   golden+markdown──► align_extractions (packed-golden join → batched
                       kernel_op, the GT-guided "extract" stage J1/J2/J5/J6)
 
+``BACKENDS`` at the end names the span-producing operators; the CLI's
+``--backend`` and ``Benchmark.extract`` look them up there.
+
 Reference lifecycle being replaced: pipeline/pipeline.py:62-139 (per-doc
 thread pools → Spark task parallelism, SURVEY.md §3).
 """
@@ -159,8 +162,8 @@ def pdf_spans(pdf_df: DataFrame, rebalance: bool = True) -> DataFrame:
     from pdf_parse_bench_spark.kernels.pdftext import extract_pdf_spans
 
     return kernel_op(pdf_df, lambda b: extract_pdf_spans(bytes(b)),
-                     "doc_id string, offset int, kind string, text string, "
-                     "media_ref string", args=["pdf_bytes"])
+                     "offset int, kind string, text string, media_ref string",
+                     args=["pdf_bytes"])
 
 
 def pdf_encrypt_audit(pdf_df: DataFrame,
@@ -209,9 +212,8 @@ def pdf_encrypt_audit(pdf_df: DataFrame,
         return [{"scheme": scheme, "decrypt_ok_empty": ok_empty,
                  "decrypt_ok_pw": ok_pw}]
 
-    schema = ("doc_id string, scheme string, decrypt_ok_empty boolean, "
-              "decrypt_ok_pw boolean" if both else
-              "doc_id string, scheme string, decrypt_ok boolean")
+    schema = ("scheme string, decrypt_ok_empty boolean, decrypt_ok_pw boolean"
+              if both else "scheme string, decrypt_ok boolean")
     return kernel_op(pdf_df, audit, schema, args=args)
 
 
@@ -229,8 +231,7 @@ def rasterize_pages(pdf_df: DataFrame, include_png: bool = True) -> DataFrame:
         pdf_df,
         lambda b: [dict(zip(cols, page)) for page in
                    rasterize_pdf(bytes(b), include_png=include_png)],
-        "doc_id string, page_no int, png binary, width int, height int, "
-        "ink_ratio double",
+        "page_no int, png binary, width int, height int, ink_ratio double",
         args=["pdf_bytes"])
 
 
@@ -246,8 +247,8 @@ def pdf_image_stats_op(pdf_df: DataFrame) -> DataFrame:
 
     return kernel_op(
         pdf_df, lambda b: pdf_image_stats(bytes(b)),
-        "doc_id string, page_no int, seq int, media_ref string, "
-        "px_w int, px_h int, mean_intensity double, decoded boolean",
+        "page_no int, seq int, media_ref string, px_w int, px_h int, "
+        "mean_intensity double, decoded boolean",
         args=["pdf_bytes"])
 
 
@@ -339,3 +340,16 @@ def assemble_markdown(spans_df: DataFrame) -> DataFrame:
             ).alias("markdown")
         )
     )
+
+
+# The backends, by name: the reference's parsers share one interface
+# (utilities/base_parser.py:8-43) and take their id from their directory
+# name (:21-29); here a backend is a DataFrame transform to spans.
+BACKENDS = {
+    "markdown": extract_spans,
+    "html": extract_spans_from_html,
+    "tei": extract_spans_from_tei,  # the GROBID flavor of M4
+    "layout": extract_spans_from_layout,
+    "pdf-text": parse_pdfs,
+    "pdf-spans": pdf_spans,  # font-aware kind classification
+}

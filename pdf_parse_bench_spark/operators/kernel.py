@@ -6,7 +6,10 @@ plain Python kernel maps one document's argument values to the rows it
 emits, and this module owns the Python boundary around it — the stage's
 one-wave sizing (operators/skew.spread_for_kernel, hashed on ``keys``),
 the single ``mapInPandas`` call, the per-batch loop, the key copy and
-the columnar frame build. An input that already comes out of an exchange
+the columnar frame build. A kernel's schema names only what the kernel
+computes: each key column it leaves out is the input's field (name,
+type and nullability), so ``doc_id`` keeps whatever type the input
+table gives it. An input that already comes out of an exchange
 keeps it: AQE coalesces that exchange under the same ``TASK_BYTES``
 floor (session.get_spark sets
 ``spark.sql.adaptive.coalescePartitions.minPartitionSize``), so a
@@ -48,7 +51,7 @@ from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 
@@ -63,13 +66,20 @@ def kernel_op(df: DataFrame,
     The kernel returns a list of rows, each a mapping keyed by output
     column; the helper copies the input row's ``keys`` columns onto every
     one of them, so the kernel supplies only the remaining columns of
-    ``schema`` (extra entries are ignored). An empty list drops the input
-    row. One pandas frame is built per Arrow batch, column by column.
-    The (keys, args) projection is spread over one wave of Python tasks
+    ``schema`` (extra entries are ignored). Each key that ``schema``
+    leaves out goes in front of its fields as the input's field; a key
+    it names keeps the schema's field. An empty list drops the input row.
+    One pandas frame is built per Arrow batch, column by column. The
+    (keys, args) projection is spread over one wave of Python tasks
     first (skew.spread_for_kernel)."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     keys, args = list(keys), list(args)
+    named = set(schema.fieldNames())
+    schema = StructType(
+        [StructField(f.name, f.dataType, f.nullable)
+         for f in (df.schema[k] for k in keys if k not in named)]
+        + schema.fields)
     values = [f.name for f in schema.fields if f.name not in keys]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

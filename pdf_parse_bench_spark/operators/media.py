@@ -2,11 +2,11 @@
 metadata (the `media_ref` side of the span model; olmOCR figure-ref
 convention parsers/olmocr/__main__.py:59-61).
 
-`decode_media` is a REAL pixel decode: a dependency-free PNG codec
-(kernels/png.py, stdlib zlib + filters) runs inside Arrow batches — the
+`decode_media` is a REAL pixel decode: dependency-free PNG and JPEG
+decoders (kernels/png.py, kernels/jpeg.py) run inside Arrow batches — the
 analog of the reference's formula-PNG rendering surface
-(utilities/formula_renderer.py:119-164). Non-PNG formats (jpeg/audio/video)
-would slot into the same batch shape behind the format sniff.
+(utilities/formula_renderer.py:119-164). Audio (WAV) and video (Y4M)
+payloads have their own kernel_op operators below.
 """
 
 from __future__ import annotations
@@ -73,12 +73,12 @@ def decode_media(media_df: DataFrame) -> DataFrame:
 
       - PNG → real pixel decode (kernels/png.py) → width/height/channels +
         mean intensity in [0,1] (6 dp half-up, engine-portable); status 'ok'
-      - JPEG, baseline grayscale (SOF0, 1 component, single scan) → real
-        pixel decode (kernels/jpeg.py:jpeg_decode_gray) → true
-        mean_intensity; status 'ok'
-      - other JPEG profiles (color, progressive, headers-only) → SOFn
-        header parse → width/height/channels, no pixel decode
-        (mean_intensity null); status 'metadata_only'
+      - JPEG, Huffman-coded baseline or progressive (gray, YCbCr,
+        CMYK/YCCK) → real pixel decode (kernels/jpeg.py:jpeg_decode) →
+        true mean_intensity; status 'ok'
+      - other JPEG profiles (arithmetic coding, 12-bit, exotic sampling,
+        headers-only) → SOFn header parse → width/height/channels, no
+        pixel decode (mean_intensity null); status 'metadata_only'
       - anything else / corrupt → the DETERMINISTIC error-placeholder
         artifact's stats with status 'decode_error' — the reference's
         error-image fallback contract (formula_renderer.py:119-164), never
@@ -120,9 +120,8 @@ def decode_media(media_df: DataFrame) -> DataFrame:
 
     return kernel_op(
         media_df, decode,
-        "doc_id string, offset int, media_ref string, width int, "
-        "height int, channels int, n_bytes long, mean_intensity double, "
-        "status string",
+        "width int, height int, channels int, n_bytes long, "
+        "mean_intensity double, status string",
         keys=_MEDIA_KEYS, args=["media_bytes"])
 
 
@@ -163,8 +162,8 @@ def render_formula_artifacts(formulas: DataFrame,
 
     return kernel_op(
         formulas, render,
-        "doc_id string, offset int, media_ref string, width int, "
-        "height int, mean_intensity double, status string, png_bytes binary",
+        "media_ref string, width int, height int, mean_intensity double, "
+        "status string, png_bytes binary",
         keys=["doc_id", "offset"], args=["doc_id", "offset", "formula"])
 
 
@@ -234,8 +233,8 @@ def thumbnail_media(media_df: DataFrame) -> DataFrame:
 
     return kernel_op(
         media_df, thumbnail,
-        "doc_id string, offset int, media_ref string, thumb_w int, "
-        "thumb_h int, thumb_mean double, thumb_png_bytes long, status string",
+        "thumb_w int, thumb_h int, thumb_mean double, thumb_png_bytes long, "
+        "status string",
         keys=_MEDIA_KEYS, args=["media_bytes"])
 
 
@@ -276,9 +275,8 @@ def audio_features(audio_df: DataFrame) -> DataFrame:
 
     return kernel_op(
         audio_df, features,
-        "doc_id string, media_ref string, channels int, sample_rate int, "
-        "bits int, n_samples long, duration_ms long, mean_abs double, "
-        "peak int, status string",
+        "channels int, sample_rate int, bits int, n_samples long, "
+        "duration_ms long, mean_abs double, peak int, status string",
         keys=["doc_id", "media_ref"], args=["media_bytes"])
 
 
@@ -316,7 +314,6 @@ def video_frames(video_df: DataFrame) -> DataFrame:
 
     return kernel_op(
         video_df, frames,
-        "doc_id string, media_ref string, frame_no int, width int, "
-        "height int, n_frames int, fps_num int, fps_den int, "
-        "y_mean double, status string",
+        "frame_no int, width int, height int, n_frames int, fps_num int, "
+        "fps_den int, y_mean double, status string",
         keys=["doc_id", "media_ref"], args=["media_bytes"])

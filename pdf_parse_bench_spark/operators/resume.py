@@ -23,8 +23,7 @@ storage-partitioned and shuffle-free.
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pdf_parse_bench_spark.kernels.markdown import parse_markdown
@@ -65,8 +64,8 @@ def extract_with_lineage(
     bp = md_df.sparkSession.sparkContext.broadcast((boilerplate, fail_docs))
     docs = kernel_op(
         md_df, lambda doc_id, md: _lineage_rows(doc_id, md, *bp.value),
-        "doc_id string, status string, error string, spans array<struct<"
-        "offset:int, kind:string, text:string, media_ref:string>>",
+        "status string, error string, spans array<struct<offset:int, "
+        "kind:string, text:string, media_ref:string>>",
         args=["doc_id", "markdown"])
     return docs.select("doc_id",
                        F.spark_partition_id().alias("partition_id"),
@@ -88,6 +87,11 @@ def lineage_of(result: DataFrame) -> DataFrame:
         "error", F.size("spans").cast("long").alias("n_spans"))
 
 
+# what reading a checkpoint that no pass has written yet raises: the path
+# does not exist, or it holds no data file to take a schema from
+_NO_CHECKPOINT = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
 def _ok_doc_ids(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
     """The documents the checkpoint records as ok, one row each."""
     return (spark.read.parquet(checkpoint_dir)
@@ -97,10 +101,16 @@ def _ok_doc_ids(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
 
 
 def pending(inputs: DataFrame, checkpoint_dir: str) -> DataFrame:
-    """Inputs not yet successfully checkpointed (P5: the anti-join)."""
-    if not _has_data(checkpoint_dir):
+    """Inputs not yet successfully checkpointed (P5: the anti-join).
+    The checkpoint is read through Spark, so a path or any URI its file
+    systems take (file://, hdfs://, s3a://) works; a checkpoint with no
+    data yet leaves every input pending."""
+    try:
+        done = _ok_doc_ids(inputs.sparkSession, checkpoint_dir)
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NO_CHECKPOINT:
+            raise
         return inputs
-    done = _ok_doc_ids(inputs.sparkSession, checkpoint_dir)
     return inputs.join(done, "doc_id", "left_anti")
 
 
@@ -142,10 +152,4 @@ def read_resumed(spark: SparkSession, out_dir: str,
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def _has_data(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
     )

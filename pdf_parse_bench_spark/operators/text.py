@@ -1,10 +1,8 @@
-"""Word tokenization and the per-document text kernel call shared by the
-dedup and textstats operators.
+"""Word tokenization shared by the dedup and textstats operators.
 
 ``word_array`` (JVM column) and ``doc_words`` (Python, inside kernels)
-are the one tokenization every text operator uses; ``text_kernel`` runs
-a per-doc kernel over the (doc_id, text) input, which is how every
-dedup/textstats hashing stage reaches the Python boundary.
+are the one tokenization every text operator uses; ``word_grams`` and
+``ngram_digests`` (a ``kernel_op`` stage) build word n-grams on it.
 """
 
 from __future__ import annotations
@@ -35,13 +33,6 @@ def word_grams(words: list[str], n: int) -> list[str]:
     return [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
 
 
-def text_kernel(docs: DataFrame, kernel, schema: str) -> DataFrame:
-    """``kernel(text)`` per doc on the (doc_id, text) input; the schema
-    names only the value columns, doc_id keeps its input type."""
-    id_t = docs.schema["doc_id"].dataType.simpleString()
-    return kernel_op(docs, kernel, f"doc_id {id_t}, {schema}", args=["text"])
-
-
 def ngram_digests(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, sh binary): the doc's DISTINCT word-n-gram md5 digests,
     one row each; docs shorter than n words emit none. hashlib md5 bytes
@@ -57,5 +48,6 @@ def ngram_digests(docs: DataFrame, n: int) -> DataFrame:
         return [{"sh": list({hashlib.md5(g.encode()).digest()
                              for g in grams})}]
 
-    return text_kernel(docs, digests, "sh array<binary>").select(
+    return kernel_op(docs, digests, "sh array<binary>",
+                     args=["text"]).select(
         "doc_id", F.explode("sh").alias("sh"))

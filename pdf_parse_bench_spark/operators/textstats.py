@@ -15,7 +15,6 @@ from pdf_parse_bench_spark.operators.skew import spread_for_kernel
 from pdf_parse_bench_spark.operators.text import (
     doc_words,
     ngram_digests,
-    text_kernel,
     word_array,
     word_grams,
 )
@@ -277,7 +276,8 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
             mins = hs.min(keepdims=True)
         return [{"fp": np.unique(mins).tolist()}]
 
-    return text_kernel(docs, fingerprints, "fp array<long>").select(
+    return kernel_op(docs, fingerprints, "fp array<long>",
+                     args=["text"]).select(
         "doc_id", F.explode("fp").alias("fp"))
 
 
@@ -382,8 +382,7 @@ def doc_stats_rollup(docs: DataFrame) -> DataFrame:
     # keys=("source",), which keeps each source's rows in one task in the
     # order of the one scan task; only the grand total then sums partials
     # from several tasks.
-    feats = kernel_op(docs, feats_kernel,
-                      "source string, pred_lang string, quality double",
+    feats = kernel_op(docs, feats_kernel, "pred_lang string, quality double",
                       keys=("source",), args=["text"])
     return (
         feats.rollup("source", "pred_lang")
@@ -635,8 +634,8 @@ def lm_score(docs: DataFrame) -> DataFrame:
         u, c = np.unique(packed, return_counts=True)
         return [{"key": u.tolist(), "k": c.tolist()}]
 
-    g = text_kernel(docs.where(F.length("text") >= 3), tri_counts,
-                     "key array<long>, k array<long>").select(
+    g = kernel_op(docs.where(F.length("text") >= 3), tri_counts,
+                  "key array<long>, k array<long>", args=["text"]).select(
         "doc_id", F.inline(F.arrays_zip("key", "k")))
     model = g.groupBy("key").agg(F.sum("k").alias("c"))
     total = model.agg(F.sum("c").alias("total"))

@@ -10,8 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_parse_bench_spark import score_spans
-from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
 from pdf_parse_bench_spark.operators.extract import (
+    BACKENDS,
     FIRST_LINE,
     LAST_LINE,
     align_extractions,
@@ -128,13 +128,10 @@ def test_html_spans_exact(spark, fx_smoke):
 
 
 def test_backend_registry(spark, fx_smoke):
-    from pdf_parse_bench_spark.operators.backends import get_backend, list_backends
-    assert set(list_backends()) >= {"markdown", "html", "layout", "pdf-text"}
-    got = get_backend("html")(_read(spark, fx_smoke, "html_documents"))
+    assert sorted(BACKENDS) == ["html", "layout", "markdown", "pdf-spans",
+                                "pdf-text", "tei"]
+    got = BACKENDS["html"](_read(spark, fx_smoke, "html_documents"))
     _assert_equal(got, _read(spark, fx_smoke, "golden_spans"))
-    import pytest
-    with pytest.raises(KeyError):
-        get_backend("nope")
 
 
 def test_align_noisy_fuzzy_path_exact(spark, fx_smoke):
@@ -223,7 +220,7 @@ def test_benchmark_facade(spark, fx_smoke):
     assert all(v == 10.0 for v in rows.values())
 
 
-# smoke input table and options per registered backend; kernel_op leaves
+# smoke input table and options per backend; kernel_op leaves
 # a repartitioned input alone, so every backend's kernel sees the 2 vs 17
 # layouts
 _BACKEND_INPUTS = {
@@ -236,14 +233,14 @@ _BACKEND_INPUTS = {
 }
 
 
-@pytest.mark.parametrize("backend", list_backends())
+@pytest.mark.parametrize("backend", sorted(BACKENDS))
 def test_extraction_partition_invariant(spark, fx_smoke, backend):
     """Span output must be EXACTLY the same set at any partitioning —
     no kernel may depend on batch boundaries or partition order (the
     property that makes local results transfer to a 1000-executor run)."""
     table, opts = _BACKEND_INPUTS[backend]
     df = _read(spark, fx_smoke, table)
-    a = get_backend(backend)(df.repartition(2), **opts)
-    b = get_backend(backend)(df.repartition(17), **opts)
+    a = BACKENDS[backend](df.repartition(2), **opts)
+    b = BACKENDS[backend](df.repartition(17), **opts)
     assert a.count() == b.count()
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -342,8 +342,6 @@ def test_blocks_to_spans_strips_boilerplate_keeps_media(fx_smoke):
     assert [(s["kind"], s["text"], s["media_ref"]) for s in spans] == [
         ("text", "T", ""), ("image", "", "p.png"),
     ]
-    spans_nomedia = blocks_to_spans(blocks, keep_media=False)
-    assert [s["kind"] for s in spans_nomedia] == ["text"]
 
 
 def test_layout_roundtrip_exact(fx_smoke):

@@ -600,6 +600,39 @@ def test_kernel_op_sizes_its_input(spark, fx_smoke):
     assert extract_spans(stream, boilerplate=frozenset()).isStreaming
 
 
+def test_kernel_op_key_columns(spark):
+    """A key column that kernel_op's schema leaves out is the input's
+    field (name, type and nullability); a key the schema names keeps the
+    schema's field."""
+    from pyspark.sql import types as T
+
+    from pdf_parse_bench_spark import schemas
+    from pdf_parse_bench_spark.operators.extract import extract_spans
+    from pdf_parse_bench_spark.operators.kernel import kernel_op
+
+    docs = _docs(spark)  # doc_id bigint
+    digests = dd.minhash_signatures(docs)
+    assert docs.schema["doc_id"].dataType == T.LongType()
+    assert digests.schema.fields[0] == docs.schema["doc_id"]
+
+    src = spark.createDataFrame(
+        [(7, "s", "a b"), (8, "t", "c")],
+        T.StructType([T.StructField("doc_id", T.LongType(), False),
+                      T.StructField("source", T.StringType(), False),
+                      T.StructField("text", T.StringType(), True)]))
+    out = kernel_op(src, lambda t: [{"n": len(t)}], "n int",
+                    keys=("doc_id", "source"), args=["text"])
+    assert out.schema == T.StructType(
+        src.schema.fields[:2] + [T.StructField("n", T.IntegerType())])
+    assert sorted(map(tuple, out.collect())) == [(7, "s", 3), (8, "t", 1)]
+
+    md = spark.createDataFrame([("d1", "Text.")],
+                               "doc_id string, markdown string")
+    assert md.schema["doc_id"].nullable
+    spans = extract_spans(md, boilerplate=frozenset())
+    assert spans.schema == schemas.EXTRACTED_SPANS_SCHEMA
+
+
 def test_layout_kernel_stage_coalesced_to_one_wave(spark, tmp_path):
     """The layout kernel's input comes out of the groupBy's exchange, which
     kernel_op leaves alone; AQE coalesces it under the TASK_BYTES floor, so

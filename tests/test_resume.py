@@ -3,6 +3,8 @@ never-fail UDFs, anti-join resume, idempotency after a partial failure."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from pdf_parse_bench_spark.operators.extract import (
@@ -167,3 +169,24 @@ def test_one_lineage_row_per_doc(spark, fx_smoke, tmp_path):
     assert spark.read.parquet(out).schema.simpleString() == (
         "struct<doc_id:string,offset:int,kind:string,text:string,"
         "media_ref:string>")
+
+
+def test_resume_checkpoint_uri(spark, fx_smoke, tmp_path):
+    """A checkpoint given as a file:// URI resumes like a plain path: a
+    missing or empty checkpoint leaves every doc pending, an all-ok pass
+    leaves none, and the next pass writes nothing. A checkpoint that
+    cannot be read for another reason raises."""
+    md = _md(spark, fx_smoke).limit(20).cache()
+    bp = _collect_boilerplate(_md(spark, fx_smoke))
+    out, ckpt = (tmp_path / "spans").as_uri(), (tmp_path / "ckpt").as_uri()
+    (tmp_path / "empty").mkdir()
+    assert pending(md, ckpt).count() == 20
+    assert pending(md, (tmp_path / "empty").as_uri()).count() == 20
+
+    run_resumable(md, out, ckpt, boilerplate=bp)
+    assert pending(md, ckpt).count() == 0
+    run_resumable(md, out, ckpt, boilerplate=bp)
+    assert spark.read.parquet(ckpt).count() == 20
+
+    with pytest.raises(AnalysisException):
+        pending(md, out)  # span rows: no status column

@@ -121,6 +121,25 @@ def test_cli_extract_checkpoint_writes_lineage(spark, fx_smoke, tmp_path):
     assert "markdown-only" in r.stderr
 
 
+def test_cli_rejects_unknown_backend(monkeypatch, capsys, tmp_path):
+    """An unknown --backend is argparse's invalid choice (exit 2), with or
+    without --checkpoint, before get_spark starts a JVM."""
+    from pdf_parse_bench_spark import __main__ as cli, session
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    for extra in ([], ["--checkpoint", str(tmp_path / "ckpt")]):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(["extract", "--backend", "nope",
+                      "--input", str(tmp_path / "in.parquet"),
+                      "--output", str(tmp_path / "out"), *extra])
+        assert exc.value.code == 2
+        err = capsys.readouterr().err
+        assert "invalid choice" in err and "'nope'" in err, err
+
+
 def test_extract_job_rejects_checkpoint_without_output(fx_smoke, tmp_path):
     """--checkpoint without --output has nowhere to write the spans: the
     job refuses it before Spark starts."""
